@@ -21,9 +21,10 @@ deterministic fake decoder produces stable per-payload features so the
 distributed plumbing can be exercised end-to-end.
 
 Scale notes: binary payloads dominate row size, so the operators here
-aggressively column-prune before the Python stage, bound Arrow batch bytes
-(maxRecordsPerBatch in session.py), and emit fixed-size feature vectors so
-downstream joins/aggs never carry the blobs.
+aggressively column-prune before the Python stage, rely on the session-wide
+Arrow batch byte cap (ARROW_MAX_BYTES in session.py, next to the row cap) so
+a batch of large payloads stays ~32 MB, and emit fixed-size feature vectors
+so downstream joins/aggs never carry the blobs.
 """
 
 from __future__ import annotations

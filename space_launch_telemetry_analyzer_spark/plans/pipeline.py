@@ -23,6 +23,10 @@ Scale design notes (the part that must hold at 10^12 rows / 1000 executors):
   per-bucket; the anti-join side is ≤ n_buckets rows and broadcast.
 - resume cost is one scan-side filter (bucket pruning pushes to the reader
   when the input itself is bucket-partitioned, e.g. Iceberg bucket(N, url)).
+- the kernel's Arrow batches are bounded in bytes by the session-wide cap
+  set once in session.get_spark (session.ARROW_MAX_BYTES), whatever the page
+  size; the job writes no session conf, so concurrent runs on one session
+  share nothing mutable.
 """
 
 from __future__ import annotations
@@ -93,7 +97,9 @@ def run_extraction(
     Metrics/lineage design: global totals ride the WRITE action itself via
     df.observe() (zero extra scans) and a collect_set('bucket') observation
     supplies the checkpoint marks, so with audit=False the job is exactly one
-    pass over the input and zero passes over the output. audit=True (default)
+    pass over the input and zero passes over the output. When the store
+    already holds checkpoints, counting this run_id's completed buckets adds
+    one small job over them. audit=True (default)
     adds ONE column-pruned read-back of the rows this run actually wrote —
     write-audit, not plan-audit — to produce per-(partition, bucket) lineage
     rows; results carry a run_id column so a shared store root never leaks
@@ -107,156 +113,129 @@ def run_extraction(
         # exchange tasks short; JVM-side only, so width here is cheap.
         num_partitions = spark.sparkContext.defaultParallelism * 5
 
-    # Arrow batch sizing by BYTES, not rows: synthetic pages are ~3 KB but
-    # real Common-Crawl html is ~100 KB — a fixed 8192-row batch would be
-    # ~800 MB per in-flight batch per task. Sample the input and target
-    # ~32 MB of html per batch (bounded 256..8192 rows).
-    sample = pages.select(F.octet_length("html").alias("b")).limit(2048).agg(
-        F.avg("b")
-    ).first()[0]
-    # None default: Spark 4 type-checks a provided default against the conf's
-    # registered type, so "" would throw on an unset int conf
-    prev_batch = spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch", None)
-    if sample and sample > 0:
-        rows = int(max(256, min(8192, (32 << 20) / float(sample))))
-        spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", str(rows))
-    try:
+    bucketed = with_bucket(pages, n_buckets)
 
-        bucketed = with_bucket(pages, n_buckets)
+    # -- resume: drop buckets already completed for this run_id ---------------
+    done = store.completed_buckets(spark, run_id)
+    n_skipped_buckets = 0
+    if done is not None:
+        n_skipped_buckets = done.count()
+        if n_skipped_buckets:
+            bucketed = bucketed.join(F.broadcast(done), "bucket", "left_anti")
 
-        # -- resume: drop buckets already completed for this run_id ---------------
-        done = store.completed_buckets(spark, run_id)
-        n_skipped_buckets = 0
-        if done is not None:
-            n_skipped_buckets = done.count()
-            if n_skipped_buckets:
-                bucketed = bucketed.join(F.broadcast(done), "bucket", "left_anti")
+    # -- the one Python stage runs directly on the SCAN splits; the explicit
+    # (bucket, salt) layout shuffle moves AFTER it (below). Measured r3,
+    # local[32], 100k pages, warm-vs-warm: pre-kernel html shuffle 6.81 s vs
+    # post-kernel result shuffle 4.67 s (kernel-only floor 4.59 s) — the raw
+    # html bytes are the widest thing in the job, and shuffling them before
+    # the kernel serializes a full-corpus disk+memory pass against the
+    # Python stage; shuffled AFTER, the exchange write pipelines inside the
+    # Python-bound stage (JVM threads overlap the busy workers) and carries
+    # the smaller extracted columns instead. The kernel is per-row, so its
+    # input layout is irrelevant; at 10^12 rows scan splits >> cores keeps
+    # the stage wide (below that, lower spark.sql.files.maxPartitionBytes).
+    # Results keep (partition_id, input_bytes, proc_seconds) as lineage
+    # columns and are stamped with run_id so every downstream audit/metric/
+    # checkpoint is scoped to THIS run.
+    from pyspark.sql import Observation
 
-        # -- the one Python stage runs directly on the SCAN splits; the explicit
-        # (bucket, salt) layout shuffle moves AFTER it (below). Measured r3,
-        # local[32], 100k pages, warm-vs-warm: pre-kernel html shuffle 6.81 s vs
-        # post-kernel result shuffle 4.67 s (kernel-only floor 4.59 s) — the raw
-        # html bytes are the widest thing in the job, and shuffling them before
-        # the kernel serializes a full-corpus disk+memory pass against the
-        # Python stage; shuffled AFTER, the exchange write pipelines inside the
-        # Python-bound stage (JVM threads overlap the busy workers) and carries
-        # the smaller extracted columns instead. The kernel is per-row, so its
-        # input layout is irrelevant; at 10^12 rows scan splits >> cores keeps
-        # the stage wide (below that, lower spark.sql.files.maxPartitionBytes).
-        # Results keep (partition_id, input_bytes, proc_seconds) as lineage
-        # columns and are stamped with run_id so every downstream audit/metric/
-        # checkpoint is scoped to THIS run.
-        from pyspark.sql import Observation
-
-        obs = Observation("extract-metrics")
-        t0 = time.time()
-        # width fallback: a compact input (one big file, a single-row-group
-        # ingest) can scan in fewer splits than cores, which would serialize
-        # the job's bottleneck stage — there, the OLD arrangement (pre-kernel
-        # salted repartition, no post exchange) is strictly better than a
-        # 1-core kernel. At corpus scale splits >> cores and this never fires.
-        kernel_input = bucketed
-        pre_shuffled = False
-        if not input_is_bucketed:
-            width = spark.sparkContext.defaultParallelism
-            if bucketed.rdd.getNumPartitions() < width:
-                kernel_input = salted_repartition(
-                    bucketed, num_partitions, ["bucket"], salt_mod
-                )
-                pre_shuffled = True
-        extracted = extract_pages(
-            kernel_input, cfg, row_idx_col=row_idx_col, n_buckets=n_buckets
-        )
-        # -- explicit partition layout: url-hash bucket + salt ---------------------
-        # Feeds the bucket-partitioned write. When the input table is ALREADY
-        # bucket-clustered (Iceberg bucket(N,url) transform, or a bucket=NN
-        # parquet layout), even this shuffle is pure cost: scan splits are
-        # bucket-aligned and the kernel preserves them, so skip it — at 10^12
-        # rows this deletes a full-corpus network+disk pass. The checkpoint
-        # anti-join keeps working either way (bucket pruning pushes to the
-        # reader).
-        if input_is_bucketed or pre_shuffled:
-            arranged = extracted
-        else:
-            arranged = salted_repartition(extracted, num_partitions, ["bucket"], salt_mod)
-        results = (
-            arranged
-            .withColumn("run_id", F.lit(run_id))
-            .observe(
-                obs,
-                F.count(F.lit(1)).alias("n_rows"),
-                F.sum(F.when(F.col("error").isNotNull(), 1).otherwise(0)).alias("n_errors"),
-                F.sum(F.when(F.length("extracted_text") == 0, 1).otherwise(0)).alias("n_empty"),
-                F.sum("input_bytes").alias("input_bytes"),
-                F.sum(F.coalesce(F.length("extracted_text"), F.lit(0))).alias("output_chars"),
-                F.sum("proc_seconds").alias("wall_seconds"),
-                F.collect_set("bucket").alias("buckets"),
+    obs = Observation("extract-metrics")
+    t0 = time.time()
+    # width fallback: a compact input (one big file, a single-row-group
+    # ingest) can scan in fewer splits than cores, which would serialize
+    # the job's bottleneck stage — there, the OLD arrangement (pre-kernel
+    # salted repartition, no post exchange) is strictly better than a
+    # 1-core kernel. At corpus scale splits >> cores and this never fires.
+    kernel_input = bucketed
+    pre_shuffled = False
+    if not input_is_bucketed:
+        width = spark.sparkContext.defaultParallelism
+        if bucketed.rdd.getNumPartitions() < width:
+            kernel_input = salted_repartition(
+                bucketed, num_partitions, ["bucket"], salt_mod
             )
+            pre_shuffled = True
+    extracted = extract_pages(
+        kernel_input, cfg, row_idx_col=row_idx_col, n_buckets=n_buckets
+    )
+    # -- explicit partition layout: url-hash bucket + salt ---------------------
+    # Feeds the bucket-partitioned write. When the input table is ALREADY
+    # bucket-clustered (Iceberg bucket(N,url) transform, or a bucket=NN
+    # parquet layout), even this shuffle is pure cost: scan splits are
+    # bucket-aligned and the kernel preserves them, so skip it — at 10^12
+    # rows this deletes a full-corpus network+disk pass. The checkpoint
+    # anti-join keeps working either way (bucket pruning pushes to the
+    # reader).
+    if input_is_bucketed or pre_shuffled:
+        arranged = extracted
+    else:
+        arranged = salted_repartition(extracted, num_partitions, ["bucket"], salt_mod)
+    results = (
+        arranged
+        .withColumn("run_id", F.lit(run_id))
+        .observe(
+            obs,
+            F.count(F.lit(1)).alias("n_rows"),
+            F.sum(F.when(F.col("error").isNotNull(), 1).otherwise(0)).alias("n_errors"),
+            F.sum(F.when(F.length("extracted_text") == 0, 1).otherwise(0)).alias("n_empty"),
+            F.sum("input_bytes").alias("input_bytes"),
+            F.sum(F.coalesce(F.length("extracted_text"), F.lit(0))).alias("output_chars"),
+            F.sum("proc_seconds").alias("wall_seconds"),
+            F.collect_set("bucket").alias("buckets"),
         )
-        store.write_results(results)
-        wall = time.time() - t0
-        # observation resolved by the write action — no extra scan (values are
-        # None when the resume filter left zero rows to write)
-        g = {k: v for k, v in obs.get.items()}
-        n_rows, n_errors = int(g.get("n_rows") or 0), int(g.get("n_errors") or 0)
+    )
+    store.write_results(results)
+    wall = time.time() - t0
+    # observation resolved by the write action — no extra scan (values are
+    # None when the resume filter left zero rows to write)
+    g = {k: v for k, v in obs.get.items()}
+    n_rows, n_errors = int(g.get("n_rows") or 0), int(g.get("n_errors") or 0)
 
-        if audit:
-            # ONE column-pruned read-back of this run's rows (write-audit): per-
-            # (extraction partition, bucket) lineage; metrics is tiny — persist it
-            # and derive the checkpoint marks from it instead of re-scanning
-            fresh = store.read_results(spark).where(F.col("run_id") == run_id)
-            if n_skipped_buckets:
-                fresh = fresh.join(F.broadcast(done), "bucket", "left_anti")
-            metrics = fresh.groupBy("partition_id", "bucket").agg(
-                F.count(F.lit(1)).alias("n_rows"),
-                F.sum(F.when(F.col("error").isNotNull(), 1).otherwise(0)).alias("n_errors"),
-                F.sum(F.when(F.length("extracted_text") == 0, 1).otherwise(0)).alias("n_empty"),
-                F.sum("input_bytes").alias("input_bytes"),
-                F.sum(F.coalesce(F.length("extracted_text"), F.lit(0))).alias("output_chars"),
-                F.sum("proc_seconds").alias("wall_seconds"),
-            ).select(
-                F.lit(run_id).alias("run_id"), "partition_id", "bucket", "n_rows",
-                "n_errors", "n_empty", "input_bytes", "output_chars", "wall_seconds",
-            ).persist()
-            store.write_metrics(metrics)
-            store.write_checkpoint(
-                metrics.groupBy("bucket").agg(F.sum("n_rows").alias("n_rows"))
-                .select(F.lit(run_id).alias("run_id"), "bucket", "n_rows")
-            )
-            metrics.unpersist()
-        else:
-            # zero read-back: one global metrics row from the observation
-            # (partition_id = -1 sentinel: whole run), checkpoint marks from the
-            # observed bucket set (n_rows = -1 sentinel: not tracked per bucket)
-            metrics_row = [(run_id, -1, None, n_rows, n_errors,
-                            int(g.get("n_empty") or 0), int(g.get("input_bytes") or 0),
-                            int(g.get("output_chars") or 0),
-                            float(g.get("wall_seconds") or 0.0))]
-            from ..schema import METRICS_SCHEMA
+    if audit:
+        # ONE column-pruned read-back of this run's rows (write-audit): per-
+        # (extraction partition, bucket) lineage; metrics is tiny — persist it
+        # and derive the checkpoint marks from it instead of re-scanning
+        fresh = store.read_results(spark).where(F.col("run_id") == run_id)
+        if n_skipped_buckets:
+            fresh = fresh.join(F.broadcast(done), "bucket", "left_anti")
+        metrics = fresh.groupBy("partition_id", "bucket").agg(
+            F.count(F.lit(1)).alias("n_rows"),
+            F.sum(F.when(F.col("error").isNotNull(), 1).otherwise(0)).alias("n_errors"),
+            F.sum(F.when(F.length("extracted_text") == 0, 1).otherwise(0)).alias("n_empty"),
+            F.sum("input_bytes").alias("input_bytes"),
+            F.sum(F.coalesce(F.length("extracted_text"), F.lit(0))).alias("output_chars"),
+            F.sum("proc_seconds").alias("wall_seconds"),
+        ).select(
+            F.lit(run_id).alias("run_id"), "partition_id", "bucket", "n_rows",
+            "n_errors", "n_empty", "input_bytes", "output_chars", "wall_seconds",
+        ).persist()
+        store.write_metrics(metrics)
+        store.write_checkpoint(
+            metrics.groupBy("bucket").agg(F.sum("n_rows").alias("n_rows"))
+            .select(F.lit(run_id).alias("run_id"), "bucket", "n_rows")
+        )
+        metrics.unpersist()
+    else:
+        # zero read-back: one global metrics row from the observation
+        # (partition_id = -1 sentinel: whole run), checkpoint marks from the
+        # observed bucket set (n_rows = -1 sentinel: not tracked per bucket)
+        metrics_row = [(run_id, -1, None, n_rows, n_errors,
+                        int(g.get("n_empty") or 0), int(g.get("input_bytes") or 0),
+                        int(g.get("output_chars") or 0),
+                        float(g.get("wall_seconds") or 0.0))]
+        from ..schema import METRICS_SCHEMA
 
-            store.write_metrics(spark.createDataFrame(metrics_row, METRICS_SCHEMA))
-            marks = [(run_id, int(b), -1) for b in (g.get("buckets") or [])]
-            if marks:
-                from ..schema import CHECKPOINT_SCHEMA
+        store.write_metrics(spark.createDataFrame(metrics_row, METRICS_SCHEMA))
+        marks = [(run_id, int(b), -1) for b in (g.get("buckets") or [])]
+        if marks:
+            from ..schema import CHECKPOINT_SCHEMA
 
-                store.write_checkpoint(spark.createDataFrame(marks, CHECKPOINT_SCHEMA))
+            store.write_checkpoint(spark.createDataFrame(marks, CHECKPOINT_SCHEMA))
 
-        return {
-            "run_id": run_id,
-            "n_results": n_rows,
-            "n_errors": n_errors,
-            "n_skipped_buckets": n_skipped_buckets,
-            "wall_seconds": wall,
-        }
-    finally:
-        # restore: this sizing is derived from THIS input — leaking it
-        # into the session would hand later Arrow stages on other
-        # (possibly 100x larger) rows a wrong batch size, and concurrent
-        # runs on one session would race on the conf (io.py does the
-        # same for partitionOverwriteMode). Restore UNCONDITIONALLY:
-        # when the conf was unset before the run, set it back to unset —
-        # `if prev_batch:` alone would leak this input's value.
-        if prev_batch is not None:
-            spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", prev_batch)
-        else:
-            spark.conf.unset("spark.sql.execution.arrow.maxRecordsPerBatch")
+    return {
+        "run_id": run_id,
+        "n_results": n_rows,
+        "n_errors": n_errors,
+        "n_skipped_buckets": n_skipped_buckets,
+        "wall_seconds": wall,
+    }

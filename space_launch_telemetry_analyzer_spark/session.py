@@ -16,12 +16,17 @@ from pathlib import Path
 
 from pyspark.sql import SparkSession
 
-# Arrow batch size bounds memory per extraction batch, the analog of the
-# reference's batch_size=10 frames (main_processing.py:17) scaled for text
-# rows instead of decoded video frames. A/B measured (BENCH.md): 8192 beats
-# 2048 by ~35% at 32 cores (per-batch overhead amortizes; ~25 MB/batch at
-# 3 KB/doc stays well inside executor memory); 16384 regressed.
+# Arrow batches are capped twice, session-wide, and whichever binds first
+# closes the batch: the analog of the reference's batch_size=10 frames
+# (main_processing.py:17) scaled for text rows instead of decoded video
+# frames. The row cap is the A/B-measured size for small rows (BENCH.md:
+# 8192 beats 2048 by ~35% at 32 cores; 16384 regressed; ~25 MB per batch at
+# 3 KB/doc). The byte cap bounds memory per in-flight batch whatever the row
+# width: real Common-Crawl html is ~100 KB/page, where 8192 rows would be
+# ~800 MB. Spark closes a batch once it reaches the byte cap, so a batch
+# overshoots the cap by at most one row.
 ARROW_MAX_RECORDS = 8192
+ARROW_MAX_BYTES = 32 << 20
 
 
 def get_spark(
@@ -56,6 +61,7 @@ def get_spark(
         # Arrow on for every pandas-UDF boundary (input_hint: no per-row Python)
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", str(ARROW_MAX_RECORDS))
+        .config("spark.sql.execution.arrow.maxBytesPerBatch", str(ARROW_MAX_BYTES))
         # AQE: runtime coalescing + skew handling for the relational layer
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")

@@ -43,6 +43,14 @@ def iceberg_available(spark: SparkSession) -> bool:
         return False
 
 
+def _path_exists(spark: SparkSession, path: str) -> bool:
+    """Existence check through the session's Hadoop FileSystem, so local,
+    HDFS and object-store roots answer alike."""
+    jpath = spark.sparkContext._jvm.org.apache.hadoop.fs.Path(path)
+    conf = spark._jsparkSession.sessionState().newHadoopConf()
+    return bool(jpath.getFileSystem(conf).exists(jpath))
+
+
 @dataclass
 class ResultStore:
     """One root, three tables: results/, metrics/, checkpoints/."""
@@ -123,13 +131,10 @@ class ResultStore:
             df.writeTo(self._tbl("results")).overwritePartitions()
             return
         parts = (["run_id"] if "run_id" in df.columns else []) + ["bucket"]
-        spark = df.sparkSession
-        prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        try:
-            df.write.mode("overwrite").partitionBy(*parts).parquet(self.results_path)
-        finally:
-            spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+        # the writer option scopes dynamic overwrite to this one write; the
+        # session-wide conf would race with concurrent writes on the session
+        (df.write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
+         .partitionBy(*parts).parquet(self.results_path))
 
     def read_results(self, spark: SparkSession) -> DataFrame:
         if self.use_iceberg:
@@ -157,15 +162,19 @@ class ResultStore:
 
     def completed_buckets(self, spark: SparkSession, run_id: str) -> DataFrame | None:
         """Buckets already finished for this run_id, or None if no checkpoint
-        exists yet. Small by construction (≤ n_buckets rows) — broadcast it."""
-        try:
-            cp = (
-                spark.read.format("iceberg").load(self._tbl("checkpoints"))
-                if self.use_iceberg
-                else spark.read.parquet(self.checkpoints_path)
-            )
-        except Exception:
-            return None
+        exists yet. Small by construction (≤ n_buckets rows) — broadcast it.
+
+        Only a missing checkpoint table means "nothing done yet": a checkpoint
+        that exists but cannot be read raises, instead of silently re-running
+        every bucket."""
+        if self.use_iceberg:
+            if not spark.catalog.tableExists(self._tbl("checkpoints")):
+                return None
+            cp = spark.read.format("iceberg").load(self._tbl("checkpoints"))
+        else:
+            if not _path_exists(spark, self.checkpoints_path):
+                return None
+            cp = spark.read.parquet(self.checkpoints_path)
         return cp.where(F.col("run_id") == run_id).select("bucket").distinct()
 
     def _tbl(self, name: str) -> str:

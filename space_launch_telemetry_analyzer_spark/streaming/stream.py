@@ -15,6 +15,11 @@ Three operators:
 - `stream_host_metrics` — watermarked per-host per-minute counts (ST4
   progress/metrics analog, with late-data tolerance).
 
+Sizing: every file stream enters through `read_file_stream`, whose
+micro-batches are sized in bytes (one task wave of input per trigger) rather
+than the reference's fixed frame count; the memory bound is the session's
+Arrow batch byte cap, not the trigger.
+
 Scale notes: the stateless path scales like the batch job (state-free tasks);
 the stateful path shuffles on the series key — state size is O(#series) x a
 few bytes (one boolean + anchor id), safe for millions of series.
@@ -36,13 +41,35 @@ from ..rules import RuleConfig
 from ..schema import PAGES_SCHEMA
 
 
-def read_pages_stream(spark: SparkSession, input_path: str,
-                      max_files_per_trigger: int = 8) -> DataFrame:
-    return (
-        spark.readStream.schema(PAGES_SCHEMA)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(input_path)
-    )
+def read_file_stream(spark: SparkSession, input_path: str,
+                     schema: T.StructType | None = None,
+                     max_files_per_trigger: int | None = None) -> DataFrame:
+    """readStream over a parquet directory: the one file-stream front door
+    of every operator here.
+
+    `schema=None` takes the schema from the files themselves (streaming
+    parquet requires an explicit schema; the static footer read costs one
+    metadata operation).
+
+    Trigger size: by default each micro-batch admits one task wave of input,
+    defaultParallelism x spark.sql.files.maxPartitionBytes bytes, so every
+    core has a split and the fixed per-batch costs (planning, offset WAL,
+    commit) are paid once per wave rather than once per few small files. A
+    trigger does not bound memory: the kernels stream Arrow batches, which
+    the session caps in bytes (session.ARROW_MAX_BYTES).
+    `max_files_per_trigger` replaces the byte size with a file count
+    (1 = one micro-batch per file, which the batch/stream equality tests
+    use to cross batch boundaries)."""
+    if schema is None:
+        schema = spark.read.parquet(input_path).schema
+    reader = spark.readStream.schema(schema)
+    if max_files_per_trigger is None:
+        wave = (spark.sparkContext.defaultParallelism
+                * spark._jsparkSession.sessionState().conf().filesMaxPartitionBytes())
+        reader = reader.option("maxBytesPerTrigger", wave)
+    else:
+        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
+    return reader.parquet(input_path)
 
 
 def _start_parquet_sink(results: DataFrame, output_path: str,
@@ -69,9 +96,11 @@ def stream_extract(
     checkpoint_path: str,
     cfg: RuleConfig | None = None,
     available_now: bool = True,
+    max_files_per_trigger: int | None = None,
 ):
-    """Run the extraction kernel as a stream; returns the StreamingQuery."""
-    pages = read_pages_stream(spark, input_path)
+    """Run the extraction kernel as a stream; returns the StreamingQuery.
+    Triggers admit one task wave of input bytes each (read_file_stream)."""
+    pages = read_file_stream(spark, input_path, PAGES_SCHEMA, max_files_per_trigger)
     results = extract_pages(pages, cfg, row_idx_col=None)
     return _start_parquet_sink(results, output_path, checkpoint_path,
                                available_now)
@@ -86,32 +115,23 @@ def stream_extract(
 # results (pinned by batch/stream equality tests at maxFilesPerTrigger=1,
 # mirroring stream_frontier_new's test).
 
+# fetched sitemap/feed documents: the shape a crawl loop lands
+# robots-discovered artifacts in
 XML_DOCS_SCHEMA = T.StructType([
     T.StructField("url", T.StringType()),
     T.StructField("xml", T.BinaryType()),
 ])
 
 
-def read_xml_stream(spark: SparkSession, input_path: str,
-                    max_files_per_trigger: int = 8) -> DataFrame:
-    """Streaming source for fetched sitemap/feed documents
-    (url, xml binary) — the shape a crawl loop lands robots-discovered
-    artifacts in."""
-    return (
-        spark.readStream.schema(XML_DOCS_SCHEMA)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(input_path)
-    )
-
-
 def stream_sitemap_entries(spark: SparkSession, input_path: str,
                            output_path: str, checkpoint_path: str,
                            available_now: bool = True,
-                           max_files_per_trigger: int = 8):
+                           max_files_per_trigger: int | None = None):
     """Streaming twin of operators.sitemap.sitemap_entries."""
     from ..operators.sitemap import sitemap_entries
 
-    docs = read_xml_stream(spark, input_path, max_files_per_trigger)
+    docs = read_file_stream(spark, input_path, XML_DOCS_SCHEMA,
+                            max_files_per_trigger)
     return _start_parquet_sink(sitemap_entries(docs), output_path,
                                checkpoint_path, available_now)
 
@@ -119,11 +139,12 @@ def stream_sitemap_entries(spark: SparkSession, input_path: str,
 def stream_feed_entries(spark: SparkSession, input_path: str,
                         output_path: str, checkpoint_path: str,
                         available_now: bool = True,
-                        max_files_per_trigger: int = 8):
+                        max_files_per_trigger: int | None = None):
     """Streaming twin of operators.sitemap.feed_entries."""
     from ..operators.sitemap import feed_entries
 
-    docs = read_xml_stream(spark, input_path, max_files_per_trigger)
+    docs = read_file_stream(spark, input_path, XML_DOCS_SCHEMA,
+                            max_files_per_trigger)
     return _start_parquet_sink(feed_entries(docs), output_path,
                                checkpoint_path, available_now)
 
@@ -131,12 +152,13 @@ def stream_feed_entries(spark: SparkSession, input_path: str,
 def stream_page_metadata(spark: SparkSession, input_path: str,
                          output_path: str, checkpoint_path: str,
                          available_now: bool = True,
-                         max_files_per_trigger: int = 8):
+                         max_files_per_trigger: int | None = None):
     """Streaming twin of operators.metadata.page_metadata over the pages
     schema."""
     from ..operators.metadata import page_metadata
 
-    pages = read_pages_stream(spark, input_path, max_files_per_trigger)
+    pages = read_file_stream(spark, input_path, PAGES_SCHEMA,
+                             max_files_per_trigger)
     return _start_parquet_sink(page_metadata(pages), output_path,
                                checkpoint_path, available_now)
 
@@ -144,39 +166,28 @@ def stream_page_metadata(spark: SparkSession, input_path: str,
 def stream_anchor_texts(spark: SparkSession, input_path: str,
                         output_path: str, checkpoint_path: str,
                         available_now: bool = True,
-                        max_files_per_trigger: int = 8):
+                        max_files_per_trigger: int | None = None):
     """Streaming twin of operators.metadata.anchor_texts over the pages
     schema."""
     from ..operators.metadata import anchor_texts
 
-    pages = read_pages_stream(spark, input_path, max_files_per_trigger)
+    pages = read_file_stream(spark, input_path, PAGES_SCHEMA,
+                             max_files_per_trigger)
     return _start_parquet_sink(anchor_texts(pages), output_path,
                                checkpoint_path, available_now)
-
-
-def _read_typed_stream(spark: SparkSession, input_path: str,
-                       max_files_per_trigger: int) -> DataFrame:
-    """readStream over a parquet directory, schema taken from the files
-    themselves (streaming parquet requires an explicit schema; the static
-    footer read costs one metadata operation)."""
-    schema = spark.read.parquet(input_path).schema
-    return (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(input_path)
-    )
 
 
 def stream_markdown_pages(spark: SparkSession, input_path: str,
                           output_path: str, checkpoint_path: str,
                           available_now: bool = True,
-                          max_files_per_trigger: int = 8):
+                          max_files_per_trigger: int | None = None):
     """Streaming twin of operators.markdown.to_markdown_pages: the
     converter kernel is a pure function of the Arrow batch (stateless
     mapInPandas), so it runs unchanged under readStream."""
     from ..operators.markdown import to_markdown_pages
 
-    pages = _read_typed_stream(spark, input_path, max_files_per_trigger)
+    pages = read_file_stream(spark, input_path,
+                             max_files_per_trigger=max_files_per_trigger)
     return _start_parquet_sink(to_markdown_pages(pages), output_path,
                                checkpoint_path, available_now)
 
@@ -185,13 +196,14 @@ def stream_quality_signals(spark: SparkSession, input_path: str,
                            output_path: str, checkpoint_path: str,
                            id_col: str = "doc_id", text_col: str = "text",
                            available_now: bool = True,
-                           max_files_per_trigger: int = 8):
+                           max_files_per_trigger: int | None = None):
     """Streaming twin of text_analysis.quality_signals: a stateless
     scan-stage Project, so the one-pass tagger also runs incrementally —
     signals land beside the corpus as documents arrive."""
     from ..operators.text_analysis import quality_signals
 
-    docs = _read_typed_stream(spark, input_path, max_files_per_trigger)
+    docs = read_file_stream(spark, input_path,
+                            max_files_per_trigger=max_files_per_trigger)
     return _start_parquet_sink(quality_signals(docs, id_col, text_col),
                                output_path, checkpoint_path, available_now)
 

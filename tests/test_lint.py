@@ -4,6 +4,7 @@ The engine's contract is no per-row Python in any distributed path
 (BASELINE.json input_hint): pandas `iterrows` is the canonical violation
 (it crept into the streaming kernel once — VERDICT r01 'What's wrong' #3),
 and driver-side `collect()` loops are the canonical non-distributed operator.
+Session-wide conf writes belong to session.py alone.
 """
 
 from __future__ import annotations
@@ -25,3 +26,13 @@ def test_no_iterrows_anywhere():
 def test_no_topandas_in_package():
     bad = [p.name for p in _sources() if ".toPandas(" in p.read_text(encoding="utf-8")]
     assert bad == [], f"driver-side toPandas in package: {bad}"
+
+
+def test_session_conf_set_only_in_session_module():
+    """Session conf is decided once, in session.get_spark: a library call
+    that sets or unsets a session-wide key races with every other job on
+    that session (use a per-write option instead)."""
+    bad = [p.name for p in _sources()
+           if p.name != "session.py"
+           and any(s in p.read_text(encoding="utf-8") for s in ("conf.set(", "conf.unset("))]
+    assert bad == [], f"session-wide conf writes outside session.py: {bad}"

@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -141,8 +143,8 @@ def test_poison_pages_become_error_rows(spark, tmp_path_factory):
 
 
 def test_large_pages(spark, tmp_path_factory):
-    """Real-CC-sized pages (~120 KB html): the adaptive byte-budget batch
-    sizing must keep the job memory-safe and correct."""
+    """Real-CC-sized pages (~120 KB html): the session's Arrow byte cap
+    must keep the job memory-safe and correct."""
     from space_launch_telemetry_analyzer_spark.sources.pages import (
         expected_text, paragraphs_of, render_page,
     )
@@ -164,7 +166,7 @@ def test_large_pages(spark, tmp_path_factory):
     res = store.read_results(spark)
     joined = res.join(df.select("url", "text"), "url")
     assert joined.where(F.col("extracted_text") != F.col("text")).count() == 0
-    # the input-derived batch sizing is scoped to the run, not the session
+    # the session's row cap is untouched by the run
     assert int(spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch")) == 8192
 
 
@@ -359,39 +361,66 @@ def test_shared_store_runs_do_not_destroy_each_other(spark, tmp_path):
     assert counts == {"runA": 120, "runB": 40}
 
 
-def test_run_extraction_restores_arrow_batch_conf(spark, tmp_path):
-    """The input-derived Arrow batch sizing must not leak into the session:
-    a later mapInArrow stage over much larger rows would inherit a wrong
-    batch size, and concurrent runs would race on the conf."""
-    from space_launch_telemetry_analyzer_spark.plans.pipeline import run_extraction
-    from space_launch_telemetry_analyzer_spark.sources.io import ResultStore
-
-    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
-    before = spark.conf.get(key)
-    store = ResultStore(str(tmp_path / "store"))
-    run_extraction(spark, synth_pages_df(spark, 60, partitions=2), store, audit=False)
-    assert spark.conf.get(key) == before
-
-
-def test_run_restores_session_conf_exactly(spark, pages, tmp_path_factory):
-    """run_extraction sizes arrow.maxRecordsPerBatch from THIS input and must
-    restore the session conf byte-identically afterwards — including back to
-    UNSET when it was unset before (the r3 leak: `if prev:` skipped that)."""
-    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+def test_run_extraction_leaves_session_conf_unchanged(spark, pages, tmp_path_factory):
+    """run_extraction sets nothing on the session: every conf key is
+    byte-identical after a run with audit=True and with audit=False, and no
+    key appears or disappears. A key flipped for the run would race with
+    concurrent runs on the session, and an input-derived value leaked into
+    it would mis-size later stages over other rows."""
     store = ResultStore(str(tmp_path_factory.mktemp("confstore")))
+    before = dict(spark.conf.getAll)
+    for audit in (True, False):
+        run_extraction(spark, pages.limit(50), store, run_id=f"conf-{audit}",
+                       n_buckets=4, audit=audit)
+        assert dict(spark.conf.getAll) == before, audit
 
-    # case 1: conf unset before -> must be unset after
-    spark.conf.unset(key)
-    run_extraction(spark, pages.limit(50), store, run_id="c1", n_buckets=4)
-    assert spark.conf.get(key, None) is None
 
-    # case 2: conf set before -> must come back byte-identical
-    spark.conf.set(key, "1234")
+def test_arrow_byte_cap_bounds_large_row_batches(spark):
+    """Rows over 100 KB reach mapInArrow in batches bounded in BYTES by the
+    session-wide cap that get_spark sets (the 8192-row cap alone would let a
+    batch of 100 KB pages grow to ~800 MB). Spark closes a batch once it
+    holds at least the cap, so a batch less its last row is under the cap.
+    The cap is lowered here so that 40 rows of ~150 KB span several batches."""
+    from space_launch_telemetry_analyzer_spark.session import ARROW_MAX_BYTES
+
+    def batch_shape(batches):
+        import pyarrow as pa
+
+        for b in batches:
+            widest = max(len(v) for v in b.column("html").to_pylist())
+            yield pa.RecordBatch.from_pydict(
+                {"rows": [b.num_rows], "bytes": [b.nbytes], "widest": [widest]})
+
+    key = "spark.sql.execution.arrow.maxBytesPerBatch"
+    prev = spark.conf.get(key)
+    assert prev == str(ARROW_MAX_BYTES)
+    cap = 512 << 10
+    rows = spark.range(40, numPartitions=1).select(
+        F.concat(F.repeat(F.lit("x"), 150_000), F.col("id").cast("string")).alias("html"))
+    spark.conf.set(key, str(cap))
     try:
-        run_extraction(spark, pages.limit(50), store, run_id="c2", n_buckets=4)
-        assert spark.conf.get(key, None) == "1234"
+        shapes = rows.mapInArrow(batch_shape,
+                                 "rows long, bytes long, widest long").collect()
     finally:
-        spark.conf.unset(key)
+        spark.conf.set(key, prev)
+    assert sum(s.rows for s in shapes) == 40
+    assert len(shapes) > 1
+    for s in shapes:
+        assert s.widest > 100_000
+        assert s.bytes - s.bytes // s.rows < cap, shapes
+
+
+def test_corrupt_checkpoint_fails_loudly(spark, tmp_path):
+    """A checkpoints directory that exists but cannot be read as parquet must
+    raise, not be taken for "no checkpoint yet" (which would silently re-run
+    every bucket of the run)."""
+    store = ResultStore(str(tmp_path / "store"))
+    os.makedirs(store.checkpoints_path)
+    with open(os.path.join(store.checkpoints_path, "part-00000.parquet"), "w") as f:
+        f.write("not a parquet file")
+    with pytest.raises(Exception, match="(?i)parquet"):
+        run_extraction(spark, synth_pages_df(spark, 20, partitions=1), store,
+                       run_id="corrupt", n_buckets=4, audit=False)
 
 
 def test_iceberg_create_tables_ddl_shapes(spark):

@@ -6,12 +6,13 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from space_launch_telemetry_analyzer_spark.schema import PAGES_SCHEMA
 from space_launch_telemetry_analyzer_spark.sources.pages import synth_pages_df
 from space_launch_telemetry_analyzer_spark.streaming.stream import (
+    read_file_stream,
     stream_anchor_flags,
     stream_extract,
     stream_host_metrics,
-    read_pages_stream,
 )
 
 N = 400
@@ -40,6 +41,27 @@ def test_stream_extract_matches_batch(spark, tmp_path):
     q2 = stream_extract(spark, in_path, out_path, cp, available_now=True)
     q2.awaitTermination(timeout=120)
     assert spark.read.parquet(out_path).count() == N
+
+
+def test_stream_extract_trigger_is_one_task_wave(spark, tmp_path):
+    """By default a trigger admits one task wave of input bytes, so a
+    directory of many small files drains in ONE micro-batch instead of one
+    per few files; max_files_per_trigger=1 still gives one micro-batch per
+    file (the mode the batch/stream equality tests rely on)."""
+    import glob
+
+    in_path = str(tmp_path / "pages")
+    synth_pages_df(spark, 240, partitions=12).select(
+        "url", "warc_ts", "html", "text", "lang").write.parquet(in_path)
+    n_files = len(glob.glob(f"{in_path}/*.parquet"))
+    assert n_files > 1
+    for per_trigger, want in ((None, 1), (1, n_files)):
+        q = stream_extract(spark, in_path, str(tmp_path / f"out-{per_trigger}"),
+                           str(tmp_path / f"cp-{per_trigger}"),
+                           max_files_per_trigger=per_trigger)
+        q.awaitTermination(timeout=180)
+        batches = [p["numInputRows"] for p in q.recentProgress if p["numInputRows"]]
+        assert len(batches) == want and sum(batches) == 240, batches
 
 
 def test_stream_anchor_state_across_batches(spark, tmp_path):
@@ -106,7 +128,7 @@ def test_stream_host_metrics(spark, tmp_path):
     synth_pages_df(spark, 200, partitions=2).select(
         "url", "warc_ts", "html", "text", "lang"
     ).write.parquet(in_path)
-    stream = read_pages_stream(spark, in_path)
+    stream = read_file_stream(spark, in_path, PAGES_SCHEMA)
     q = (
         stream_host_metrics(stream)
         .writeStream.format("memory")
