@@ -375,6 +375,39 @@ def test_run_extraction_leaves_session_conf_unchanged(spark, pages, tmp_path_fac
         assert dict(spark.conf.getAll) == before, audit
 
 
+def test_run_extraction_restores_arrow_batch_conf(spark, tmp_path):
+    """No input-derived Arrow batch size leaks into the session: a later
+    mapInArrow stage over much larger rows would inherit a wrong batch size,
+    and concurrent runs would race on the conf."""
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    before = spark.conf.get(key)
+    store = ResultStore(str(tmp_path / "store"))
+    run_extraction(spark, synth_pages_df(spark, 60, partitions=2), store, audit=False)
+    assert spark.conf.get(key) == before
+
+
+def test_run_restores_session_conf_exactly(spark, pages, tmp_path_factory):
+    """The Arrow row cap comes back byte-identical after a run, whatever it
+    was before: still UNSET when it was unset, the caller's value when it was
+    set to something other than the session default."""
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    store = ResultStore(str(tmp_path_factory.mktemp("confstore")))
+    prev = spark.conf.get(key)
+
+    try:
+        # case 1: conf unset before -> must be unset after
+        spark.conf.unset(key)
+        run_extraction(spark, pages.limit(50), store, run_id="c1", n_buckets=4)
+        assert spark.conf.get(key, None) is None
+
+        # case 2: conf set before -> must come back byte-identical
+        spark.conf.set(key, "1234")
+        run_extraction(spark, pages.limit(50), store, run_id="c2", n_buckets=4)
+        assert spark.conf.get(key, None) == "1234"
+    finally:
+        spark.conf.set(key, prev)
+
+
 def test_arrow_byte_cap_bounds_large_row_batches(spark):
     """Rows over 100 KB reach mapInArrow in batches bounded in BYTES by the
     session-wide cap that get_spark sets (the 8192-row cap alone would let a
