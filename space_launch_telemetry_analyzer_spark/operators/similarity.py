@@ -206,9 +206,9 @@ def ivf_assign(corpus: DataFrame, id_col: str, vec_col: str,
     SMALLEST centroid id via the negated id in the ordering struct
     (which is why centroid ids must be numeric AND must not include
     Long.MIN_VALUE: in non-ANSI mode `-(-2^63)` wraps back to -2^63,
-    which would invert that one id's ordering — callers must use
-    nonnegative centroid ids, as every in-repo caller does with dense
-    bigint ids assigned from 0). `min(vec)` recovers the vector deterministically
+    which would invert that one id's ordering — so a negative or NULL
+    centroid id raises; every in-repo caller uses dense bigint ids
+    assigned from 0). `min(vec)` recovers the vector deterministically
     (every copy in the group is the same value; min of all-NULL stays
     NULL, preserving the old pass-through for null vectors)."""
     from pyspark.sql import types as _T
@@ -231,8 +231,11 @@ def ivf_assign(corpus: DataFrame, id_col: str, vec_col: str,
         F.col(vec_col).alias("vec"),
         l2norm(F.col(vec_col)).alias("__vnorm"),
     )
+    cid = F.col(centroid_id_col)
     kside = centroids.select(
-        F.col(centroid_id_col).alias("centroid_id"),
+        F.when(cid >= 0, cid).otherwise(F.raise_error(F.lit(
+            f"ivf_assign: {centroid_id_col!r} must be a nonnegative id")
+        )).alias("centroid_id"),
         F.col(centroid_vec_col).alias("__kvec"),
         l2norm(F.col(centroid_vec_col)).alias("__knorm"),
     )

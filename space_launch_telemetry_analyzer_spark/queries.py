@@ -1,6 +1,13 @@
 r"""Driver-verified query registry: one entry per implemented operator
 (SURVEY.md §2), each with an exact DuckDB oracle twin.
 
+`_REGISTRY_ORDER` is the only list of query names. Query `name` is the
+function `q_<name>` and its twin is `ORACLE_<NAME>`; the import fails if
+the `q_*` functions and the list differ. An `ORACLE_<NAME>` is a SQL
+string, or a zero-arg builder where the SQL is generated (trained tables,
+unrolled loops); `ORACLES` calls a builder on first lookup and caches the
+result, so importing this module builds nothing.
+
 Determinism rules that keep the Spark/DuckDB value-hash comparison exact:
 - monetary/fixed-point sums go through DECIMAL(18,x) so partial-aggregation
   order can't wiggle low bits; the final value is cast back to double;
@@ -25,7 +32,9 @@ construction:
 
 from __future__ import annotations
 
+import functools
 import os
+from collections.abc import Iterator, Mapping
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -39,6 +48,8 @@ from .operators import sampling as SA
 from .operators import similarity as S
 from .operators import text_analysis as TA
 from .functions import bpe as BPE
+from .functions import dsir as DS
+from .functions import langid_clf as LC
 from .functions import lm as LM
 from .functions import quality_clf as QC
 from .operators import windows as W
@@ -51,36 +62,25 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 
 
 def spread(df: DataFrame, factor: int = 1) -> DataFrame:
-    """Scale-adaptive round-robin repartition to cluster width before a
-    compute-heavy projection. The small-SF parquet files arrive as ONE
-    input split (single row group — a row group is the parquet split
-    atom), so without this the expensive per-row work (shingling, regex
-    stats, cosine folds, the Python extraction kernel) runs on one core
-    while 31 idle — measured 7.8 s -> 0.9 s on ngram_jaccard at sf0.1,
-    and at sf1.0 the single-split scan made quality_score 13.6 s /
-    simhash_pairs 16.9 s (BENCH_r06).
+    """Round-robin repartition to one task wave (defaultParallelism *
+    factor) before a compute-heavy projection, unless `df` already has
+    that many partitions.
 
-    r7: ADAPTIVE (guide §2.2/§2.5 — partitioning must be derived from the
-    input, not a constant): when the incoming plan already has >= target
-    partitions (production scans have thousands of splits) the repartition
-    is skipped outright, so this never inserts a pointless full shuffle at
-    scale; the exchange only fires for narrow inputs, where it moves a few
-    MB to unlock 32 cores. Values are unaffected either way (round-robin
-    placement feeds only per-row projections / exact aggregations here).
-    Only worth it for a heavy compute tail: A/B showed it REGRESSES cheap
-    iterative/join pipelines at small scale, so call sites are chosen per
-    measured query, not blanket. factor=1 (one task wave at cluster
-    width) measured equal-or-better than 2 everywhere it was A/B'd — the
-    Python extraction kernel pays ~per-task startup, so one full-width
-    wave beats two half-waves (the r3 file-count sweep, re-confirmed r7:
-    extract_field_spans sf1.0 0.8 s at 32 vs 1.1 s at 64 partitions)."""
+    The small-SF parquet files are one row group, so one input split:
+    without this the per-row work (shingling, regex stats, cosine folds,
+    the Python extraction kernel) runs on one core — ngram_jaccard at
+    sf0.1 went 7.8 s -> 0.9 s (BENCH_r06). Production scans already have
+    the width, so there it is a no-op. Values are unaffected: round-robin
+    placement feeds only per-row projections and exact aggregations. It
+    regresses cheap join pipelines at small scale, so call sites are
+    chosen per measured query; factor=1 measured equal or better than 2
+    wherever it was A/B'd (extract_field_spans sf1.0: 0.8 s at 32 vs
+    1.1 s at 64 partitions). Counting partitions plans `df`; a streaming
+    frame cannot be planned that way and raises."""
     sc = df.sparkSession.sparkContext
     target = sc.defaultParallelism * factor
-    try:
-        if df.rdd.getNumPartitions() >= target:
-            return df
-    except Exception:
-        pass  # un-plannable frames (e.g. streaming): keep the old behavior
+    if df.rdd.getNumPartitions() >= target:
+        return df
     return df.repartition(target)
 
 
@@ -1162,7 +1162,7 @@ def q_lm_bigram_score(spark: SparkSession, sf_dir: str) -> DataFrame:
         docs.where(F.col("text").rlike("^[ -~]*\\z")), "doc_id", "text")
 
 
-ORACLE_LM_BIGRAM_SCORE = LM.bigram_lm_oracle_sql()
+ORACLE_LM_BIGRAM_SCORE = LM.bigram_lm_oracle_sql
 
 
 def q_perplexity_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1177,7 +1177,7 @@ def q_perplexity_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
         docs.where(F.col("text").rlike("^[ -~]*\\z")), "doc_id", "text")
 
 
-ORACLE_PERPLEXITY_BUCKETS = LM.perplexity_buckets_oracle_sql()
+ORACLE_PERPLEXITY_BUCKETS = LM.perplexity_buckets_oracle_sql
 
 
 def q_ccnet_paragraphs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1192,7 +1192,7 @@ def q_ccnet_paragraphs(spark: SparkSession, sf_dir: str) -> DataFrame:
         docs.where(F.col("text").rlike("^[ -~]*\\z")), "doc_id", "text")
 
 
-ORACLE_CCNET_PARAGRAPHS = LM.ccnet_paragraph_oracle_sql()
+ORACLE_CCNET_PARAGRAPHS = LM.ccnet_paragraph_oracle_sql
 
 
 def q_langid_clf(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1201,24 +1201,12 @@ def q_langid_clf(spark: SparkSession, sf_dir: str) -> DataFrame:
     char-2/3-gram softmax over de/en/fr, decided by a PURE INTEGER
     argmax (bias_micro * n_feats + micro-logit sums — no float exists
     in the scoring path of either engine)."""
-    from space_launch_telemetry_analyzer_spark.functions import (
-        langid_clf as LC,
-    )
-
     docs = spread(load(spark, sf_dir, "documents"))
     return LC.langid_clf_score(
         docs.where(F.col("text").rlike("^[ -~]*\\z")), "doc_id", "text")
 
 
-def _oracle_langid_clf() -> str:
-    from space_launch_telemetry_analyzer_spark.functions import (
-        langid_clf as LC,
-    )
-
-    return LC.langid_clf_oracle_sql()
-
-
-ORACLE_LANGID_CLF = _oracle_langid_clf()
+ORACLE_LANGID_CLF = LC.langid_clf_oracle_sql
 
 
 def q_dsir_select(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1230,21 +1218,13 @@ def q_dsir_select(spark: SparkSession, sf_dir: str) -> DataFrame:
     tie-break. Selection is TakeOrderedAndProject — per-partition heaps,
     never a global sort shuffle. Same ASCII scope as the other
     text-twin queries."""
-    from .functions import dsir as DS
-
     docs = spread(load(spark, sf_dir, "documents"))
     w = DS.dsir_weights(
         docs.where(F.col("text").rlike("^[ -~]*\\z")), "doc_id", "text")
     return DS.dsir_topk(w, 250).withColumnRenamed("id", "doc_id")
 
 
-def _oracle_dsir_select() -> str:
-    from .functions import dsir as DS
-
-    return DS.dsir_oracle_sql(250)
-
-
-ORACLE_DSIR_SELECT = _oracle_dsir_select()
+ORACLE_DSIR_SELECT = functools.partial(DS.dsir_oracle_sql, 250)
 
 
 def q_quality_clf_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1264,7 +1244,8 @@ def q_quality_clf_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
         keep_threshold=-0.7)
 
 
-ORACLE_QUALITY_CLF_FILTER = QC.quality_clf_oracle_sql(keep_threshold=-0.7)
+ORACLE_QUALITY_CLF_FILTER = functools.partial(
+    QC.quality_clf_oracle_sql, keep_threshold=-0.7)
 
 
 # --- structural SQL twins for the hyperplane LSH (the weights are a closed-
@@ -2110,7 +2091,7 @@ def q_bpe_token_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_BPE_TOKEN_COUNT = BPE.bpe_token_count_oracle_sql()
+ORACLE_BPE_TOKEN_COUNT = BPE.bpe_token_count_oracle_sql
 
 
 def q_bpe_chunk_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2126,7 +2107,8 @@ def q_bpe_chunk_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
         max_tokens=32)
 
 
-ORACLE_BPE_CHUNK_DOCUMENTS = BPE.bpe_chunk_oracle_sql(max_tokens=32)
+ORACLE_BPE_CHUNK_DOCUMENTS = functools.partial(
+    BPE.bpe_chunk_oracle_sql, max_tokens=32)
 
 
 def q_pack_sequences_bpe(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2140,9 +2122,10 @@ def q_pack_sequences_bpe(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", "text", seq_len=128, counter="bpe")
 
 
-ORACLE_PACK_SEQUENCES_BPE = rf"""
+def ORACLE_PACK_SEQUENCES_BPE() -> str:
+    return rf"""
 WITH toks AS (
-  SELECT doc_id AS id, n_tokens AS n FROM ({ORACLE_BPE_TOKEN_COUNT})),
+  SELECT doc_id AS id, n_tokens AS n FROM ({ORACLES["bpe_token_count"]})),
 pre AS (
   SELECT id, CAST(n AS BIGINT) AS n,
          CAST(coalesce(sum(n) OVER (ORDER BY id
@@ -2697,6 +2680,7 @@ FROM (
   FROM base CROSS JOIN g
   ORDER BY score DESC, id LIMIT 15)
 """
+ORACLE_BM25_FROM_INDEX = ORACLE_BM25_TOPK
 
 
 def q_url_blocklist(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3289,19 +3273,16 @@ SELECT node, round(rank, 9) + 0 AS rank FROM r2
 """
 
 
-_ROUNDTRIP_SCRATCH: list[str] = []
-
-
+@functools.cache
 def _roundtrip_scratch_dir() -> str:
-    if not _ROUNDTRIP_SCRATCH:
-        import atexit
-        import shutil
-        import tempfile
+    """One scratch dir per process, removed at exit."""
+    import atexit
+    import shutil
+    import tempfile
 
-        path = tempfile.mkdtemp(prefix="sla_roundtrip_")
-        atexit.register(shutil.rmtree, path, ignore_errors=True)
-        _ROUNDTRIP_SCRATCH.append(path)
-    return _ROUNDTRIP_SCRATCH[0]
+    path = tempfile.mkdtemp(prefix="sla_roundtrip_")
+    atexit.register(shutil.rmtree, path, ignore_errors=True)
+    return path
 
 
 def q_results_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4940,265 +4921,6 @@ FROM documents
 # registry
 # ===========================================================================
 
-QUERIES = {
-    "png_decode": q_png_decode,
-    "jpeg_decode": q_jpeg_decode,
-    "webp_decode": q_webp_decode,
-    "vp8_decode": q_vp8_decode,
-    "gif_anim_frames": q_gif_anim_frames,
-    "webp_anim_frames": q_webp_anim_frames,
-    "mp4_probe": q_mp4_probe,
-    "subtitle_cues": q_subtitle_cues,
-    "bmp_decode": q_bmp_decode,
-    "tiff_decode": q_tiff_decode,
-    "wav_decode": q_wav_decode,
-    "gif_decode": q_gif_decode,
-    "plot_sink": q_plot_sink,
-    "pdf_layout": q_pdf_layout,
-    "pdf_winansi": q_pdf_winansi,
-    "page_metadata": q_page_metadata,
-    "hreflang_clusters": q_hreflang_clusters,
-    "sitemap_parse": q_sitemap_parse,
-    "feed_parse": q_feed_parse,
-    "robots_sitemaps": q_robots_sitemaps,
-    "anchor_texts": q_anchor_texts,
-    "fetch_waves": q_fetch_waves,
-    "frontier_new": q_frontier_new,
-    "robots_crawl_delay": q_robots_crawl_delay,
-    "extract_main_text": q_extract_main_text,
-    "extract_field_spans": q_extract_field_spans,
-    "extract_engine_counts": q_extract_engine_counts,
-    "single_row_lookup": q_single_row_lookup,
-    "flatten_results": q_flatten_results,
-    "validate_report": q_validate_report,
-    "pricing_summary": q_pricing_summary,
-    "nation_revenue": q_nation_revenue,
-    "first_number": q_first_number,
-    "time_parse": q_time_parse,
-    "unit_convert": q_unit_convert,
-    "hhmmss_format": q_hhmmss_format,
-    "event_label_parse": q_event_label_parse,
-    "event_forms_parse": q_event_forms_parse,
-    "event_range_filter": q_event_range_filter,
-    "decontaminate": q_decontaminate,
-    "decontaminate_bloom": q_decontaminate_bloom,
-    "lm_bigram_score": q_lm_bigram_score,
-    "quality_clf_filter": q_quality_clf_filter,
-    "outlier_nulling": q_outlier_nulling,
-    "lead_acceleration": q_lead_acceleration,
-    "g_force": q_g_force,
-    "rolling_trend": q_rolling_trend,
-    "zero_anchor_realtime": q_zero_anchor_realtime,
-    "after_anchor_flag": q_after_anchor_flag,
-    "bucket_summarize": q_bucket_summarize,
-    "sample_every_nth": q_sample_every_nth,
-    "time_window_filter": q_time_window_filter,
-    "sort_series": q_sort_series,
-    "union_compare": q_union_compare,
-    "detect_series": q_detect_series,
-    "fuel_pair_rule": q_fuel_pair_rule,
-    "fuel_coalesce": q_fuel_coalesce,
-    "engine_count_agg": q_engine_count_agg,
-    "dedup_exact": q_dedup_exact,
-    "ngram_jaccard": q_ngram_jaccard,
-    "minhash_pairs": q_minhash_pairs,
-    "dedup_survivors": q_dedup_survivors,
-    "paragraph_dedup": q_paragraph_dedup,
-    "dup_ngram_mask": q_dup_ngram_mask,
-    "simhash_pairs": q_simhash_pairs,
-    "embedding_topk": q_embedding_topk,
-    "embedding_near_dup": q_embedding_near_dup,
-    "ann_lsh_topk": q_ann_lsh_topk,
-    "ivf_ann_topk": q_ivf_ann_topk,
-    "kmeans_centroids": q_kmeans_centroids,
-    "semdedup": q_semdedup,
-    "subtitle_lang_route": q_subtitle_lang_route,
-    "lang_id": q_lang_id,
-    "quality_score": q_quality_score,
-    "gopher_filter": q_gopher_filter,
-    "c4_line_filter": q_c4_line_filter,
-    "pack_sequences": q_pack_sequences,
-    "pack_sequences_bpe": q_pack_sequences_bpe,
-    "bpe_token_count": q_bpe_token_count,
-    "bpe_chunk_documents": q_bpe_chunk_documents,
-    "bm25_topk": q_bm25_topk,
-    "url_blocklist": q_url_blocklist,
-    "token_counts": q_token_counts,
-    "fingerprint": q_fingerprint,
-    "binary_meta": q_binary_meta,
-    "path_identity": q_path_identity,
-    "span_explode": q_span_explode,
-    "chunk_documents": q_chunk_documents,
-    "top_bigrams": q_top_bigrams,
-    "layout_reading_order": q_layout_reading_order,
-    "url_canonicalize": q_url_canonicalize,
-    "noindex_filter": q_noindex_filter,
-    "pii_redact": q_pii_redact,
-    "repetition_filter": q_repetition_filter,
-    "hash_sample": q_hash_sample,
-    "mix_sample": q_mix_sample,
-    "quota_sample": q_quota_sample,
-    "doc_frequency": q_doc_frequency,
-    "tfidf_topk": q_tfidf_topk,
-    "corpus_stats": q_corpus_stats,
-    "sessionize": q_sessionize,
-    "link_graph": q_link_graph,
-    "latest_capture": q_latest_capture,
-    "pagerank": q_pagerank,
-    "pagerank_dangling": q_pagerank_dangling,
-    "metric_sweep": q_metric_sweep,
-    "normalize_text_nfc": q_normalize_text_nfc,
-    "robots_filter": q_robots_filter,
-    "warc_roundtrip": q_warc_roundtrip,
-    "cdx_index": q_cdx_index,
-    "wet_roundtrip": q_wet_roundtrip,
-    "wat_roundtrip": q_wat_roundtrip,
-    "results_roundtrip": q_results_roundtrip,
-    "normalize_text": q_normalize_text,
-    "markdown_pages": q_markdown_pages,
-    "dsir_select": q_dsir_select,
-    "quality_signals": q_quality_signals,
-    "gopher_repetition": q_gopher_repetition,
-    "html_tables": q_html_tables,
-    "split_sentences": q_split_sentences,
-    "mix_plan": q_mix_plan,
-    "perplexity_buckets": q_perplexity_buckets,
-    "inverted_index": q_inverted_index,
-    "bm25_from_index": q_bm25_from_index,
-    "ccnet_paragraphs": q_ccnet_paragraphs,
-    "langid_clf": q_langid_clf,
-}
-
-ORACLES = {
-    "markdown_pages": ORACLE_MARKDOWN_PAGES,
-    "dsir_select": ORACLE_DSIR_SELECT,
-    "quality_signals": ORACLE_QUALITY_SIGNALS,
-    "gopher_repetition": ORACLE_GOPHER_REPETITION,
-    "html_tables": ORACLE_HTML_TABLES,
-    "split_sentences": ORACLE_SPLIT_SENTENCES,
-    "mix_plan": ORACLE_MIX_PLAN,
-    "perplexity_buckets": ORACLE_PERPLEXITY_BUCKETS,
-    "inverted_index": ORACLE_INVERTED_INDEX,
-    "bm25_from_index": ORACLE_BM25_TOPK,
-    "ccnet_paragraphs": ORACLE_CCNET_PARAGRAPHS,
-    "langid_clf": ORACLE_LANGID_CLF,
-    "extract_main_text": ORACLE_EXTRACT_MAIN_TEXT,
-    "extract_field_spans": ORACLE_EXTRACT_FIELD_SPANS,
-    "extract_engine_counts": ORACLE_EXTRACT_ENGINE_COUNTS,
-    "single_row_lookup": ORACLE_SINGLE_ROW_LOOKUP,
-    "flatten_results": ORACLE_FLATTEN_RESULTS,
-    "validate_report": ORACLE_VALIDATE_REPORT,
-    "pricing_summary": ORACLE_PRICING_SUMMARY,
-    "nation_revenue": ORACLE_NATION_REVENUE,
-    "first_number": ORACLE_FIRST_NUMBER,
-    "time_parse": ORACLE_TIME_PARSE,
-    "unit_convert": ORACLE_UNIT_CONVERT,
-    "hhmmss_format": ORACLE_HHMMSS_FORMAT,
-    "event_label_parse": ORACLE_EVENT_LABEL_PARSE,
-    "event_forms_parse": ORACLE_EVENT_FORMS_PARSE,
-    "event_range_filter": ORACLE_EVENT_RANGE_FILTER,
-    "decontaminate": ORACLE_DECONTAMINATE,
-    "decontaminate_bloom": ORACLE_DECONTAMINATE_BLOOM,
-    "lm_bigram_score": ORACLE_LM_BIGRAM_SCORE,
-    "quality_clf_filter": ORACLE_QUALITY_CLF_FILTER,
-    "outlier_nulling": ORACLE_OUTLIER_NULLING,
-    "lead_acceleration": ORACLE_LEAD_ACCELERATION,
-    "g_force": ORACLE_G_FORCE,
-    "rolling_trend": ORACLE_ROLLING_TREND,
-    "zero_anchor_realtime": ORACLE_ZERO_ANCHOR_REALTIME,
-    "after_anchor_flag": ORACLE_AFTER_ANCHOR_FLAG,
-    "bucket_summarize": ORACLE_BUCKET_SUMMARIZE,
-    "sample_every_nth": ORACLE_SAMPLE_EVERY_NTH,
-    "time_window_filter": ORACLE_TIME_WINDOW_FILTER,
-    "sort_series": ORACLE_SORT_SERIES,
-    "union_compare": ORACLE_UNION_COMPARE,
-    "detect_series": ORACLE_DETECT_SERIES,
-    "fuel_pair_rule": ORACLE_FUEL_PAIR_RULE,
-    "fuel_coalesce": ORACLE_FUEL_COALESCE,
-    "engine_count_agg": ORACLE_ENGINE_COUNT_AGG,
-    "dedup_exact": ORACLE_DEDUP_EXACT,
-    "ngram_jaccard": ORACLE_NGRAM_JACCARD,
-    "minhash_pairs": ORACLE_MINHASH_PAIRS,
-    "dedup_survivors": ORACLE_DEDUP_SURVIVORS,
-    "paragraph_dedup": ORACLE_PARAGRAPH_DEDUP,
-    "dup_ngram_mask": ORACLE_DUP_NGRAM_MASK,
-    "simhash_pairs": ORACLE_SIMHASH_PAIRS,
-    "embedding_topk": ORACLE_EMBEDDING_TOPK,
-    "embedding_near_dup": ORACLE_EMBEDDING_NEAR_DUP,
-    "ann_lsh_topk": ORACLE_ANN_LSH_TOPK,
-    "ivf_ann_topk": ORACLE_IVF_ANN_TOPK,
-    "kmeans_centroids": ORACLE_KMEANS_CENTROIDS,
-    "semdedup": ORACLE_SEMDEDUP,
-    "subtitle_lang_route": ORACLE_SUBTITLE_LANG_ROUTE,
-    "lang_id": ORACLE_LANG_ID,
-    "quality_score": ORACLE_QUALITY_SCORE,
-    "gopher_filter": ORACLE_GOPHER_FILTER,
-    "c4_line_filter": ORACLE_C4_LINE_FILTER,
-    "pack_sequences": ORACLE_PACK_SEQUENCES,
-    "pack_sequences_bpe": ORACLE_PACK_SEQUENCES_BPE,
-    "bpe_token_count": ORACLE_BPE_TOKEN_COUNT,
-    "bpe_chunk_documents": ORACLE_BPE_CHUNK_DOCUMENTS,
-    "bm25_topk": ORACLE_BM25_TOPK,
-    "url_blocklist": ORACLE_URL_BLOCKLIST,
-    "token_counts": ORACLE_TOKEN_COUNTS,
-    "fingerprint": ORACLE_FINGERPRINT,
-    "binary_meta": ORACLE_BINARY_META,
-    "path_identity": ORACLE_PATH_IDENTITY,
-    "span_explode": ORACLE_SPAN_EXPLODE,
-    "chunk_documents": ORACLE_CHUNK_DOCUMENTS,
-    "top_bigrams": ORACLE_TOP_BIGRAMS,
-    "layout_reading_order": ORACLE_LAYOUT_READING_ORDER,
-    "url_canonicalize": ORACLE_URL_CANONICALIZE,
-    "noindex_filter": ORACLE_NOINDEX_FILTER,
-    "pii_redact": ORACLE_PII_REDACT,
-    "repetition_filter": ORACLE_REPETITION_FILTER,
-    "hash_sample": ORACLE_HASH_SAMPLE,
-    "mix_sample": ORACLE_MIX_SAMPLE,
-    "quota_sample": ORACLE_QUOTA_SAMPLE,
-    "doc_frequency": ORACLE_DOC_FREQUENCY,
-    "tfidf_topk": ORACLE_TFIDF_TOPK,
-    "corpus_stats": ORACLE_CORPUS_STATS,
-    "sessionize": ORACLE_SESSIONIZE,
-    "link_graph": ORACLE_LINK_GRAPH,
-    "latest_capture": ORACLE_LATEST_CAPTURE,
-    "pagerank": ORACLE_PAGERANK,
-    "pagerank_dangling": ORACLE_PAGERANK_DANGLING,
-    "metric_sweep": ORACLE_METRIC_SWEEP,
-    "normalize_text_nfc": ORACLE_NORMALIZE_TEXT_NFC,
-    "robots_filter": ORACLE_ROBOTS_FILTER,
-    "warc_roundtrip": ORACLE_WARC_ROUNDTRIP,
-    "cdx_index": ORACLE_CDX_INDEX,
-    "wet_roundtrip": ORACLE_WET_ROUNDTRIP,
-    "wat_roundtrip": ORACLE_WAT_ROUNDTRIP,
-    "results_roundtrip": ORACLE_RESULTS_ROUNDTRIP,
-    "normalize_text": ORACLE_NORMALIZE_TEXT,
-    "png_decode": ORACLE_PNG_DECODE,
-    "jpeg_decode": ORACLE_JPEG_DECODE,
-    "webp_decode": ORACLE_WEBP_DECODE,
-    "vp8_decode": ORACLE_VP8_DECODE,
-    "gif_anim_frames": ORACLE_GIF_ANIM_FRAMES,
-    "webp_anim_frames": ORACLE_WEBP_ANIM_FRAMES,
-    "mp4_probe": ORACLE_MP4_PROBE,
-    "subtitle_cues": ORACLE_SUBTITLE_CUES,
-    "bmp_decode": ORACLE_BMP_DECODE,
-    "tiff_decode": ORACLE_TIFF_DECODE,
-    "wav_decode": ORACLE_WAV_DECODE,
-    "gif_decode": ORACLE_GIF_DECODE,
-    "plot_sink": ORACLE_PLOT_SINK,
-    "pdf_layout": ORACLE_PDF_LAYOUT,
-    "pdf_winansi": ORACLE_PDF_WINANSI,
-    "page_metadata": ORACLE_PAGE_METADATA,
-    "hreflang_clusters": ORACLE_HREFLANG_CLUSTERS,
-    "sitemap_parse": ORACLE_SITEMAP_PARSE,
-    "feed_parse": ORACLE_FEED_PARSE,
-    "robots_sitemaps": ORACLE_ROBOTS_SITEMAPS,
-    "anchor_texts": ORACLE_ANCHOR_TEXTS,
-    "fetch_waves": ORACLE_FETCH_WAVES,
-    "frontier_new": ORACLE_FRONTIER_NEW,
-    "robots_crawl_delay": ORACLE_ROBOTS_CRAWL_DELAY,
-}
-
-
 # ---------------------------------------------------------------------------
 # Registry order = coverage policy, now a TESTED invariant. The external
 # correctness driver samples the FIRST ~50 entries of QUERIES in insertion
@@ -5548,8 +5270,35 @@ _REGISTRY_ORDER = [
     "path_identity",
 ]
 
-assert sorted(_REGISTRY_ORDER) == sorted(QUERIES), (
-    set(_REGISTRY_ORDER) ^ set(QUERIES)
-)
-QUERIES = {k: QUERIES[k] for k in _REGISTRY_ORDER}
-ORACLES = {k: ORACLES[k] for k in _REGISTRY_ORDER if k in ORACLES}
+_DEFINED = {k[2:] for k in globals() if k.startswith("q_")}
+if sorted(_DEFINED) != sorted(_REGISTRY_ORDER):
+    raise ImportError(
+        "_REGISTRY_ORDER must list every q_<name> function exactly once; "
+        f"differs on {sorted(_DEFINED.symmetric_difference(_REGISTRY_ORDER))}")
+
+QUERIES = {name: globals()["q_" + name] for name in _REGISTRY_ORDER}
+
+
+@functools.cache
+def _oracle(name: str) -> str:
+    sql = globals()["ORACLE_" + name.upper()]
+    return sql() if callable(sql) else sql
+
+
+class _Oracles(Mapping[str, str]):
+    """Read-only name -> oracle SQL in registry order. A builder entry is
+    called on first lookup, so importing the registry builds none."""
+
+    def __getitem__(self, name: str) -> str:
+        if name not in QUERIES:
+            raise KeyError(name)
+        return _oracle(name)
+
+    def __iter__(self) -> Iterator[str]:
+        return iter(QUERIES)
+
+    def __len__(self) -> int:
+        return len(QUERIES)
+
+
+ORACLES = _Oracles()

@@ -7,6 +7,12 @@ into the window and the suite goes red.
 
 from __future__ import annotations
 
+import hashlib
+import subprocess
+import sys
+from pathlib import Path
+
+import __spark_entry__ as entrymod
 from space_launch_telemetry_analyzer_spark.queries import (
     ORACLES,
     QUERIES,
@@ -59,10 +65,37 @@ def test_last_check_rounds_are_sane():
 
 
 def test_every_query_has_an_oracle():
-    """The 71->72 registry keeps the every-query-has-a-DuckDB-twin property
-    (genuinely non-SQL-expressible ops would be exempt, but there are none
-    registered — the driver hash-checks all of them)."""
-    assert sorted(ORACLES) == sorted(QUERIES)
+    """Every query has a DuckDB twin: each ORACLES entry resolves (strings
+    and builders alike) to non-empty SQL. Genuinely non-SQL-expressible ops
+    would be exempt, but there are none registered — the driver
+    hash-checks all of them."""
+    assert list(ORACLES) == list(QUERIES)
+    for name in QUERIES:
+        sql = ORACLES[name]
+        assert isinstance(sql, str) and sql.strip(), name
+
+
+def test_driver_sees_the_pinned_name_order():
+    """The external driver samples the first 50 names of queries() and
+    oracle_sql(), so their order is pinned: sha256 of the space-joined
+    names. Reordering _REGISTRY_ORDER must update this hash on purpose."""
+    pinned = "373958a9c9b3652e8e1fca955f71946c36ece562edf51858f39865f1f8b8b376"
+    for names in (list(entrymod.queries()), list(entrymod.oracle_sql())):
+        assert hashlib.sha256(" ".join(names).encode()).hexdigest() == pinned
+
+
+def test_import_builds_no_generated_oracle():
+    """A fresh import of the registry trains no classifier and calls no
+    oracle builder; the SQL is built on first lookup."""
+    code = (
+        "import space_launch_telemetry_analyzer_spark.queries as Q\n"
+        "from space_launch_telemetry_analyzer_spark.functions.langid_clf "
+        "import langid_clf_tables\n"
+        "assert langid_clf_tables.cache_info().misses == 0\n"
+        "assert Q._oracle.cache_info().currsize == 0\n"
+    )
+    subprocess.run([sys.executable, "-c", code], check=True,
+                   cwd=Path(__file__).resolve().parent.parent)
 
 
 def test_horizon_marker_arithmetic_matches():

@@ -149,6 +149,15 @@ def test_ivf_assign_partitions_corpus(spark, vectors):
     assert lists.select("centroid_id").distinct().count() > 1
 
 
+def test_ivf_assign_rejects_negative_centroid_id(spark):
+    """The smallest-id tie-break negates ids, so a negative id must raise."""
+    df = spark.createDataFrame([(0, [1.0, 0.0])], "vec_id long, vec array<double>")
+    cents = spark.createDataFrame([(-1, [1.0, 0.0]), (1, [0.0, 1.0])],
+                                  "centroid_id long, cvec array<double>")
+    with pytest.raises(Exception, match="nonnegative"):
+        S.ivf_assign(df, "vec_id", "vec", cents, "centroid_id", "cvec").collect()
+
+
 def test_ivf_assign_argmax_matches_window_form(spark):
     """The map-side max_by argmax (r6 scale fix: the exchange carries one
     row per vector, not k) must match the original row_number-window form

@@ -6,6 +6,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from space_launch_telemetry_analyzer_spark.queries import spread
 from space_launch_telemetry_analyzer_spark.schema import PAGES_SCHEMA
 from space_launch_telemetry_analyzer_spark.sources.pages import synth_pages_df
 from space_launch_telemetry_analyzer_spark.streaming.stream import (
@@ -41,6 +42,13 @@ def test_stream_extract_matches_batch(spark, tmp_path):
     q2 = stream_extract(spark, in_path, out_path, cp, available_now=True)
     q2.awaitTermination(timeout=120)
     assert spark.read.parquet(out_path).count() == N
+
+
+def test_spread_rejects_streaming_frame(spark):
+    """spread() plans its input to count partitions; a streaming frame
+    cannot be planned that way, so it raises instead of repartitioning."""
+    with pytest.raises(Exception, match="writeStream"):
+        spread(spark.readStream.format("rate").load())
 
 
 def test_stream_extract_trigger_is_one_task_wave(spark, tmp_path):
