@@ -17,13 +17,14 @@ the 16-bit path — abs_sum (sum |sample|) and peak — and float rms.
 from __future__ import annotations
 
 import struct
-from typing import Iterator
 
 import numpy as np
-import pandas as pd
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from .multimodal import _payload
+from .rows import map_rows
 
 AUDIO_FEATURES_DDL = (
     "media_id long, n_samples long, sample_rate int, channels int, "
@@ -131,27 +132,5 @@ def audio_features(df: DataFrame, id_col: str, payload_col: str) -> DataFrame:
     Arrow batches; payloads never outlive the batch)."""
     narrow = df.select(F.col(id_col).alias("media_id"),
                        F.col(payload_col).alias("payload"))
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = {k: [] for k in ("media_id", "n_samples", "sample_rate",
-                                    "channels", "duration_s", "peak",
-                                    "abs_sum", "rms", "error")}
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                rows["media_id"].append(mid)
-                try:
-                    if payload is None:
-                        raise ValueError("null payload")
-                    d = decode_wav(bytes(payload))
-                    for k in ("n_samples", "sample_rate", "channels",
-                              "duration_s", "peak", "abs_sum", "rms"):
-                        rows[k].append(d[k])
-                    rows["error"].append(None)
-                except Exception as e:  # noqa: BLE001 — row-level channel
-                    for k in ("n_samples", "sample_rate", "channels",
-                              "duration_s", "peak", "abs_sum", "rms"):
-                        rows[k].append(None)
-                    rows["error"].append(f"{type(e).__name__}: {e}")
-            yield pd.DataFrame(rows)
-
-    return narrow.mapInPandas(kernel, schema=AUDIO_FEATURES_DDL)
+    return map_rows(narrow, lambda p: [decode_wav(_payload(p))],
+                    AUDIO_FEATURES_DDL)

@@ -27,7 +27,8 @@ roundtrips assert byte-exact pixels.
 
 Decode is numpy-vectorized per image (row de-padding via reshape, palette
 gather, mask shifts); only RLE runs loop in Python, bounded by payload
-size. The distributed path batches via mapInPandas like PNG/GIF.
+size. The distributed path (multimodal.image_features) batches via
+mapInArrow like PNG/GIF.
 """
 
 from __future__ import annotations

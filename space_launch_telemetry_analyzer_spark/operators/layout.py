@@ -23,7 +23,7 @@ is unchanged:
   (ties broken by x then text for full determinism);
 - output: `layout_text` — the reassembled text, '\n'-joined.
 
-Executed as one Arrow-vectorized `mapInPandas` over the box arrays (numpy
+Executed as one Arrow-vectorized `mapInArrow` over the box arrays (numpy
 per row; blobs/boxes never leave the batch), same scale shape as the DOM
 extraction kernel.
 """
@@ -32,13 +32,13 @@ from __future__ import annotations
 
 import hashlib
 import re
-from typing import Iterator
 
 import numpy as np
-import pandas as pd
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from .rows import map_rows
 
 BOXES_DDL = "array<struct<x:double,y:double,w:double,h:double,text:string>>"
 LAYOUT_OUTPUT_DDL = "doc_id long, n_columns int, layout_text string, error string"
@@ -74,23 +74,12 @@ def reading_order(boxes: list[dict]) -> tuple[int, str]:
 def layout_text(df: DataFrame, id_col: str, boxes_col: str) -> DataFrame:
     """boxes -> (n_columns, layout_text) via one Arrow batch kernel."""
     narrow = df.select(F.col(id_col).alias("doc_id"), F.col(boxes_col).alias("boxes"))
+    return map_rows(narrow, _layout_row, LAYOUT_OUTPUT_DDL)
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ncols, texts, errs = [], [], []
-            for boxes in pdf["boxes"]:
-                try:
-                    bx = list(boxes) if boxes is not None else []
-                    bx = [b if isinstance(b, dict) else b.asDict() for b in bx]
-                    n, t = reading_order(bx)
-                    ncols.append(n); texts.append(t); errs.append(None)
-                except Exception as e:  # row-level error channel
-                    ncols.append(None); texts.append(None)
-                    errs.append(f"{type(e).__name__}: {e}")
-            yield pd.DataFrame({"doc_id": pdf["doc_id"].values, "n_columns": ncols,
-                                "layout_text": texts, "error": errs})
 
-    return narrow.mapInPandas(kernel, schema=LAYOUT_OUTPUT_DDL)
+def _layout_row(boxes: list | None) -> list:
+    n, text = reading_order(boxes or [])
+    return [{"n_columns": n, "layout_text": text}]
 
 
 # ---------------------------------------------------------------------------

@@ -47,7 +47,7 @@ Text policy
 
 Dropped: <script>/<style>/<head>/<title> contents, comments, doctypes.
 
-Spark surface: `to_markdown_pages` — ONE Arrow mapInPandas pass
+Spark surface: `to_markdown_pages` — ONE Arrow mapInArrow pass
 (url, html) -> (url, markdown, error); per-row failures land in the error
 column (row-level error channel, frame_processing.py:41-50), never a task
 failure.
@@ -57,14 +57,12 @@ from __future__ import annotations
 
 import html as _html
 import re
-from typing import Iterator
-
-import pandas as pd
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .extract import _TAG_RE
+from .rows import html_text, map_rows
 
 __all__ = ["html_to_markdown", "to_markdown_pages", "MARKDOWN_OUTPUT_DDL"]
 
@@ -375,37 +373,15 @@ MARKDOWN_OUTPUT_DDL = "url string, markdown string, error string"
 def to_markdown_pages(pages: DataFrame, html_col: str = "html") -> DataFrame:
     """pages(url, html) -> (url, markdown, error).
 
-    ONE Arrow mapInPandas pass (the conversion is pure Python string work —
+    ONE Arrow mapInArrow pass (the conversion is pure Python string work —
     the same hot-path budget as the extract kernel); everything upstream
     stays a column-pruned JVM scan. Per-row failures are data, not task
     failures."""
-
     narrow = pages.select("url", F.col(html_col).alias("html"))
+    return map_rows(narrow, _markdown_row, MARKDOWN_OUTPUT_DDL)
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            mds: list = []
-            errs: list = []
-            for h in pdf["html"]:
-                try:
-                    if h is None:
-                        mds.append(None)
-                        errs.append("null html")
-                        continue
-                    text = (
-                        h.decode("utf-8", errors="replace")
-                        if isinstance(h, (bytes, bytearray, memoryview))
-                        else str(h)
-                    )
-                    mds.append(html_to_markdown(text))
-                    errs.append(None)
-                except Exception as e:  # pragma: no cover - defensive
-                    mds.append(None)
-                    errs.append(f"{type(e).__name__}: {e}")
-            yield pd.DataFrame(
-                {"url": pdf["url"], "markdown": mds, "error": errs}
-            )
 
-    return narrow.mapInPandas(kernel, schema=MARKDOWN_OUTPUT_DDL)
+def _markdown_row(h) -> list:
+    if h is None:
+        return [{"error": "null html"}]
+    return [{"markdown": html_to_markdown(html_text(h))}]

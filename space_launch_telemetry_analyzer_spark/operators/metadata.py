@@ -40,12 +40,12 @@ from __future__ import annotations
 
 import json
 import re
-from typing import Iterator
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .extract import _TAG_RE, _WS_RE
+from .rows import html_text, map_rows
 import html as _html
 
 # attribute lexer: name [= "v" | 'v' | bare]  (HTML5 unquoted values stop
@@ -84,7 +84,7 @@ def _jsonld_types(blob: str, types: list) -> bool:
     Returns False when the block is not valid JSON (caller counts it)."""
     try:
         node = json.loads(blob)
-    except Exception:
+    except (ValueError, RecursionError):  # bad JSON / nesting past the limit
         return False
     stack = [node]
     while stack:
@@ -227,60 +227,22 @@ def page_metadata(pages: DataFrame, html_col: str = "html") -> DataFrame:
     """pages(url, html) -> one metadata row per page.
 
     Plan shape: column-pruned scan -> ONE mapInArrow -> results; no
-    shuffle, raw html never leaves the scan stage's partitioning. The
-    kernel never raises — malformed markup degrades to partial fields
-    and genuine failures land in the row-level `error` column, matching
-    the extract_pages contract.
+    shuffle, raw html never leaves the scan stage's partitioning.
+    Malformed markup degrades to partial fields. A null page is a row
+    with the empty-list/zero defaults and error "ValueError: null html".
+    parse_page_metadata is not known to raise; if it did, map_rows'
+    error row (NULL in every field) would carry it.
     """
-    import pyarrow as pa
-
     narrow = pages.select(F.col("url"), F.col(html_col).alias("html"))
-    # one schema object, hoisted out of the per-batch loop (and the single
-    # source for the output column list alongside METADATA_OUTPUT_DDL)
-    hreflang_t = pa.list_(pa.struct([("lang", pa.string()),
-                                     ("href", pa.string())]))
-    out_t = pa.schema([
-        ("url", pa.string()), ("title", pa.string()),
-        ("description", pa.string()), ("canonical", pa.string()),
-        ("lang", pa.string()), ("og_title", pa.string()),
-        ("og_description", pa.string()), ("og_image", pa.string()),
-        ("og_type", pa.string()), ("og_url", pa.string()),
-        ("feeds", pa.list_(pa.string())), ("hreflangs", hreflang_t),
-        ("jsonld_types", pa.list_(pa.string())),
-        ("n_meta", pa.int32()), ("n_jsonld_bad", pa.int32()),
-        ("error", pa.string())])
-    field_names = [f.name for f in out_t][1:]  # all but url
+    return map_rows(narrow, _metadata_row, METADATA_OUTPUT_DDL)
 
-    def kernel(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for rb in batches:
-            if rb.num_rows == 0:
-                continue
-            urls = rb.column(0)
-            cols: dict = {k: [] for k in field_names}
-            for h in rb.column(1).to_pylist():
-                try:
-                    if h is None:
-                        raise ValueError("null html")
-                    text = (h.decode("utf-8", errors="replace")
-                            if isinstance(h, (bytes, bytearray, memoryview))
-                            else str(h))
-                    d = parse_page_metadata(text)
-                    d["error"] = None
-                except Exception as e:  # row-level error channel
-                    d = {k: None for k in cols}
-                    d.update(feeds=[], hreflangs=[], jsonld_types=[],
-                             n_meta=0, n_jsonld_bad=0,
-                             error=f"{type(e).__name__}: {e}")
-                for k in cols:
-                    cols[k].append(d[k])
-            cols["hreflangs"] = [[{"lang": l, "href": h} for l, h in v]
-                                 for v in cols["hreflangs"]]
-            yield pa.RecordBatch.from_arrays(
-                [urls.cast(pa.string())]
-                + [pa.array(cols[f.name], f.type) for f in list(out_t)[1:]],
-                schema=out_t)
 
-    return narrow.mapInArrow(kernel, METADATA_OUTPUT_DDL)
+def _metadata_row(h) -> list:
+    if h is None:
+        return [{"feeds": [], "hreflangs": [], "jsonld_types": [],
+                 "n_meta": 0, "n_jsonld_bad": 0,
+                 "error": "ValueError: null html"}]
+    return [parse_page_metadata(html_text(h))]
 
 
 def parse_anchors(html_text: str) -> list:
@@ -345,44 +307,15 @@ def anchor_texts(pages: DataFrame, html_col: str = "html") -> DataFrame:
     """pages(url, html) -> one row per anchor, exploded kernel-side.
     Same plan shape as page_metadata: pruned scan -> ONE mapInArrow, no
     shuffle; null/undecodable rows survive as a single error row."""
-    import pyarrow as pa
-
     narrow = pages.select(F.col("url"), F.col(html_col).alias("html"))
-    out_t = pa.schema([
-        ("url", pa.string()), ("ordinal", pa.int32()),
-        ("href", pa.string()), ("anchor_text", pa.string()),
-        ("nofollow", pa.bool_()), ("error", pa.string())])
+    return map_rows(narrow, _anchor_rows, ANCHORS_OUTPUT_DDL)
 
-    def kernel(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for rb in batches:
-            if rb.num_rows == 0:
-                continue
-            cols = {k: [] for k in ("url", "ordinal", "href", "anchor_text",
-                                    "nofollow", "error")}
-            for url, h in zip(rb.column(0).to_pylist(),
-                              rb.column(1).to_pylist()):
-                try:
-                    if h is None:
-                        raise ValueError("null html")
-                    text = (h.decode("utf-8", errors="replace")
-                            if isinstance(h, (bytes, bytearray, memoryview))
-                            else str(h))
-                    for j, (href, atext, nf) in enumerate(parse_anchors(text)):
-                        cols["url"].append(url)
-                        cols["ordinal"].append(j)
-                        cols["href"].append(href)
-                        cols["anchor_text"].append(atext)
-                        cols["nofollow"].append(nf)
-                        cols["error"].append(None)
-                except Exception as e:
-                    cols["url"].append(url)
-                    for k in ("ordinal", "href", "anchor_text", "nofollow"):
-                        cols[k].append(None)
-                    cols["error"].append(f"{type(e).__name__}: {e}")
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(cols[f.name], f.type) for f in out_t], schema=out_t)
 
-    return narrow.mapInArrow(kernel, ANCHORS_OUTPUT_DDL)
+def _anchor_rows(h) -> list:
+    if h is None:
+        raise ValueError("null html")
+    return [{"ordinal": j, "href": href, "anchor_text": text, "nofollow": nf}
+            for j, (href, text, nf) in enumerate(parse_anchors(html_text(h)))]
 
 
 def canonical_clusters(meta: DataFrame) -> DataFrame:

@@ -40,6 +40,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .rows import map_rows
+
 MEDIA_META_DDL = (
     "media_id long, kind string, n_bytes long, sha256 string, magic string"
 )
@@ -776,6 +778,13 @@ def gif_frames(
     return out
 
 
+def _payload(payload: bytes | None) -> bytes:
+    """A blob cell, or ValueError into the row-level error channel."""
+    if payload is None:
+        raise ValueError("null payload")
+    return payload
+
+
 def animation_frames(
     df: DataFrame,
     id_col: str,
@@ -796,34 +805,10 @@ def animation_frames(
     narrow = df.select(
         F.col(id_col).alias("media_id"), F.col(payload_col).alias("payload")
     )
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = ("frame_index", "n_frames", "delay_cs", "disposal", "width",
-                "height", "mean_luma", "luma_sum")
-        for pdf in batches:
-            out = {c: [] for c in ("media_id",) + cols + ("error",)}
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                try:
-                    if payload is None:
-                        raise ValueError("null payload")
-                    frames = gif_frames(
-                        bytes(payload), sample_rate=sample_rate,
-                        start_frame=start_frame, end_frame=end_frame,
-                        max_frames=max_frames,
-                    )
-                    for fr in frames:
-                        out["media_id"].append(mid)
-                        for c in cols:
-                            out[c].append(fr[c])
-                        out["error"].append(None)
-                except Exception as e:  # noqa: BLE001 - row-level channel
-                    out["media_id"].append(mid)
-                    for c in cols:
-                        out[c].append(None)
-                    out["error"].append(f"{type(e).__name__}: {e}")
-            yield pd.DataFrame(out)
-
-    return narrow.mapInPandas(kernel, schema=ANIMATION_FRAMES_DDL)
+    return map_rows(narrow, lambda p: gif_frames(
+        _payload(p), sample_rate=sample_rate, start_frame=start_frame,
+        end_frame=end_frame, max_frames=max_frames,
+    ), ANIMATION_FRAMES_DDL)
 
 
 def decode_image(payload: bytes, fake: bool = False) -> dict:
@@ -909,30 +894,12 @@ def media_metadata(df: DataFrame, id_col: str, payload_col: str) -> DataFrame:
 
 
 def image_features(df: DataFrame, id_col: str, payload_col: str, fake: bool = True) -> DataFrame:
-    """decode/feature-extract via mapInPandas: blobs in, fixed-size features
+    """decode/feature-extract in one Arrow pass: blobs in, fixed-size features
     out. Column-prunes to (id, payload) before the Python boundary; per-row
     failures land in `error` (the engine's row-level error channel)."""
     narrow = df.select(F.col(id_col).alias("media_id"), F.col(payload_col).alias("payload"))
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {"media_id": pdf["media_id"].values, "width": [], "height": [],
-                   "channels": [], "mean_luma": [], "feature": [], "error": []}
-            for payload in pdf["payload"]:
-                try:
-                    if payload is None:
-                        raise ValueError("null payload")
-                    d = decode_image(bytes(payload), fake=fake)
-                    out["width"].append(d["width"]); out["height"].append(d["height"])
-                    out["channels"].append(d["channels"]); out["mean_luma"].append(d["mean_luma"])
-                    out["feature"].append(d["feature"]); out["error"].append(None)
-                except Exception as e:
-                    out["width"].append(None); out["height"].append(None)
-                    out["channels"].append(None); out["mean_luma"].append(None)
-                    out["feature"].append(None); out["error"].append(f"{type(e).__name__}: {e}")
-            yield pd.DataFrame(out)
-
-    return narrow.mapInPandas(kernel, schema=IMAGE_FEATURES_DDL)
+    return map_rows(narrow, lambda p: [decode_image(_payload(p), fake=fake)],
+                    IMAGE_FEATURES_DDL)
 
 
 def sample_frames(df: DataFrame, id_col: str, payload_col: str, every_n_bytes: int = 4096,
@@ -985,34 +952,10 @@ def webp_animation_frames(
     narrow = df.select(
         F.col(id_col).alias("media_id"), F.col(payload_col).alias("payload")
     )
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = ("frame_index", "n_frames", "duration_ms", "blend",
-                "dispose", "width", "height", "mean_luma", "luma_sum")
-        for pdf in batches:
-            out = {c: [] for c in ("media_id",) + cols + ("error",)}
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                try:
-                    if payload is None:
-                        raise ValueError("null payload")
-                    frames = webp_frames(
-                        bytes(payload), sample_rate=sample_rate,
-                        start_frame=start_frame, end_frame=end_frame,
-                        max_frames=max_frames,
-                    )
-                    for fr in frames:
-                        out["media_id"].append(mid)
-                        for c in cols:
-                            out[c].append(fr[c])
-                        out["error"].append(None)
-                except Exception as e:  # noqa: BLE001 - row-level channel
-                    out["media_id"].append(mid)
-                    for c in cols:
-                        out[c].append(None)
-                    out["error"].append(f"{type(e).__name__}: {e}")
-            yield pd.DataFrame(out)
-
-    return narrow.mapInPandas(kernel, schema=WEBP_ANIMATION_FRAMES_DDL)
+    return map_rows(narrow, lambda p: webp_frames(
+        _payload(p), sample_rate=sample_rate, start_frame=start_frame,
+        end_frame=end_frame, max_frames=max_frames,
+    ), WEBP_ANIMATION_FRAMES_DDL)
 
 
 MEDIA_PROBE_DDL = (
@@ -1034,27 +977,5 @@ def media_probe(df: DataFrame, id_col: str, payload_col: str) -> DataFrame:
     narrow = df.select(
         F.col(id_col).alias("media_id"), F.col(payload_col).alias("payload")
     )
-    cols = ("major_brand", "timescale", "duration_ms", "n_tracks",
-            "video_codec", "audio_codec", "width", "height",
-            "n_frames", "fps")
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {c: [] for c in ("media_id",) + cols + ("error",)}
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                try:
-                    if payload is None:
-                        raise ValueError("null payload")
-                    d = parse_mp4(bytes(payload))
-                    out["media_id"].append(mid)
-                    for c in cols:
-                        out[c].append(d[c])
-                    out["error"].append(None)
-                except Exception as e:  # noqa: BLE001 - row-level channel
-                    out["media_id"].append(mid)
-                    for c in cols:
-                        out[c].append(None)
-                    out["error"].append(f"{type(e).__name__}: {e}")
-            yield pd.DataFrame(out)
-
-    return narrow.mapInPandas(kernel, schema=MEDIA_PROBE_DDL)
+    return map_rows(narrow, lambda p: [parse_mp4(_payload(p))],
+                    MEDIA_PROBE_DDL)

@@ -34,14 +34,6 @@ def match_count(text: Column, pattern: str) -> Column:
     return F.size(F.regexp_extract_all(text, F.lit(pattern), F.lit(0)))
 
 
-def redact_text(text: Column) -> Column:
-    """All PII rules applied in the frozen `_RULES` order."""
-    out = text
-    for _, pattern, token in _RULES:
-        out = F.regexp_replace(out, pattern, token)
-    return out
-
-
 def redact_pii(df: DataFrame, text_col: str = "text") -> DataFrame:
     """Adds `redacted_text` plus per-category counts (`n_email`, `n_ip`,
     `n_phone`) and the total `n_redacted`. Each category is counted on the

@@ -320,13 +320,6 @@ def render_bucket_array(
     return img
 
 
-def render_scatter_png(*args, **kwargs) -> bytes:
-    """render_scatter_array -> real PNG bytes via the engine's encoder."""
-    from .multimodal import encode_png
-
-    return encode_png(render_scatter_array(*args, **kwargs))
-
-
 # ---------------------------------------------------------------------------
 # distributed sink
 # ---------------------------------------------------------------------------

@@ -38,7 +38,6 @@ from __future__ import annotations
 import html as _html
 import re
 import zlib
-from typing import Iterator
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -53,6 +52,7 @@ _XML_RE = re.compile(
 )
 # the ONE attribute-lexer definition lives in operators/metadata.py
 from .metadata import _ATTR_RE  # noqa: E402
+from .rows import map_rows  # noqa: E402
 
 _MAX_XML_BYTES = 64 << 20  # 64 MiB post-inflate cap (sitemaps.org caps at 50)
 
@@ -285,60 +285,24 @@ def sitemap_entries(df: DataFrame, xml_col: str = "xml") -> DataFrame:
     """df(url, xml binary) -> one row per sitemap entry (plus exactly one
     row with null loc and a populated `error` for undecodable docs, so no
     input row ever vanishes silently — the WARC error-channel contract)."""
-    import pyarrow as pa
-
     narrow = df.select(F.col("url"), F.col(xml_col).alias("xml"))
-    out_t = pa.schema([
-        ("url", pa.string()), ("kind", pa.string()), ("ordinal", pa.int32()),
-        ("loc", pa.string()), ("lastmod", pa.string()),
-        ("changefreq", pa.string()), ("priority", pa.float64()),
-        ("error", pa.string())])
+    return map_rows(narrow, _sitemap_rows, SITEMAP_OUTPUT_DDL)
 
-    def kernel(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for rb in batches:
-            if rb.num_rows == 0:
-                continue
-            cols = {k: [] for k in ("url", "kind", "ordinal", "loc",
-                                    "lastmod", "changefreq", "priority",
-                                    "error")}
-            for url, xml in zip(rb.column(0).to_pylist(),
-                                rb.column(1).to_pylist()):
-                try:
-                    if xml is None:
-                        raise ValueError("null xml")
-                    d = parse_sitemap(bytes(xml))
-                    for j, e in enumerate(d["entries"]):
-                        cols["url"].append(url)
-                        cols["kind"].append(d["kind"])
-                        cols["ordinal"].append(j)
-                        cols["loc"].append(e.get("loc"))
-                        cols["lastmod"].append(e.get("lastmod"))
-                        cols["changefreq"].append(e.get("changefreq"))
-                        p = e.get("priority")
-                        try:
-                            cols["priority"].append(
-                                float(p) if p not in (None, "") else None)
-                        except ValueError:
-                            cols["priority"].append(None)
-                        cols["error"].append(None)
-                except Exception as ex:
-                    cols["url"].append(url)
-                    for k in ("kind", "loc", "lastmod", "changefreq",
-                              "priority"):
-                        cols[k].append(None)
-                    cols["ordinal"].append(None)
-                    cols["error"].append(f"{type(ex).__name__}: {ex}")
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(cols["url"], pa.string()),
-                 pa.array(cols["kind"], pa.string()),
-                 pa.array(cols["ordinal"], pa.int32()),
-                 pa.array(cols["loc"], pa.string()),
-                 pa.array(cols["lastmod"], pa.string()),
-                 pa.array(cols["changefreq"], pa.string()),
-                 pa.array(cols["priority"], pa.float64()),
-                 pa.array(cols["error"], pa.string())], schema=out_t)
 
-    return narrow.mapInArrow(kernel, SITEMAP_OUTPUT_DDL)
+def _priority(p: str | None) -> float | None:
+    try:
+        return float(p) if p not in (None, "") else None
+    except ValueError:
+        return None
+
+
+def _sitemap_rows(xml: bytes | None) -> list:
+    if xml is None:
+        raise ValueError("null xml")
+    d = parse_sitemap(xml)
+    return [dict(e, kind=d["kind"], ordinal=j,
+                 priority=_priority(e.get("priority")))
+            for j, e in enumerate(d["entries"])]
 
 
 FEED_OUTPUT_DDL = (
@@ -350,51 +314,16 @@ FEED_OUTPUT_DDL = (
 def feed_entries(df: DataFrame, xml_col: str = "xml") -> DataFrame:
     """df(url, xml binary) -> one row per feed entry (error-channel row
     for undecodable docs, like sitemap_entries)."""
-    import pyarrow as pa
-
     narrow = df.select(F.col("url"), F.col(xml_col).alias("xml"))
-    out_t = pa.schema([
-        ("url", pa.string()), ("kind", pa.string()),
-        ("feed_title", pa.string()), ("ordinal", pa.int32()),
-        ("title", pa.string()), ("link", pa.string()),
-        ("published", pa.string()), ("entry_id", pa.string()),
-        ("error", pa.string())])
+    return map_rows(narrow, _feed_rows, FEED_OUTPUT_DDL)
 
-    def kernel(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for rb in batches:
-            if rb.num_rows == 0:
-                continue
-            cols = {k: [] for k in ("url", "kind", "feed_title", "ordinal",
-                                    "title", "link", "published",
-                                    "entry_id", "error")}
-            for url, xml in zip(rb.column(0).to_pylist(),
-                                rb.column(1).to_pylist()):
-                try:
-                    if xml is None:
-                        raise ValueError("null xml")
-                    d = parse_feed(bytes(xml))
-                    for j, e in enumerate(d["entries"]):
-                        cols["url"].append(url)
-                        cols["kind"].append(d["kind"])
-                        cols["feed_title"].append(d["feed_title"])
-                        cols["ordinal"].append(j)
-                        cols["title"].append(e["title"])
-                        cols["link"].append(e["link"])
-                        cols["published"].append(e["published"])
-                        cols["entry_id"].append(e["entry_id"])
-                        cols["error"].append(None)
-                except Exception as ex:
-                    cols["url"].append(url)
-                    for k in ("kind", "feed_title", "title", "link",
-                              "published", "entry_id"):
-                        cols[k].append(None)
-                    cols["ordinal"].append(None)
-                    cols["error"].append(f"{type(ex).__name__}: {ex}")
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(cols[f.name], f.type) for f in out_t],
-                schema=out_t)
 
-    return narrow.mapInArrow(kernel, FEED_OUTPUT_DDL)
+def _feed_rows(xml: bytes | None) -> list:
+    if xml is None:
+        raise ValueError("null xml")
+    d = parse_feed(xml)
+    return [dict(e, kind=d["kind"], feed_title=d["feed_title"], ordinal=j)
+            for j, e in enumerate(d["entries"])]
 
 
 def fetch_waves(urls: DataFrame, url_col: str = "url",

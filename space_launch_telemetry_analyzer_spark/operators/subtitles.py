@@ -30,6 +30,8 @@ import re
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from .rows import map_rows
+
 _TS = re.compile(
     r"(?:(\d{1,4}):)?(\d{1,2}):(\d{2})[.,](\d{3})"
 )
@@ -131,46 +133,21 @@ def subtitle_cues(df: DataFrame, id_col: str, text_col: str,
         raise ValueError("fmt must be auto|vtt|srt")
     narrow = df.select(
         F.col(id_col).alias("media_id"), F.col(text_col).alias("doc"))
+    return map_rows(narrow, lambda doc: _cue_rows(doc, fmt), SUBTITLE_CUES_DDL)
 
-    def kernel(batches):
-        import pandas as pd
 
-        for pdf in batches:
-            out = {c: [] for c in ("media_id", "cue_index", "start_ms",
-                                   "end_ms", "text", "n_cues", "n_bad",
-                                   "error")}
-
-            def emit(mid, ci, s, e, t, nc, nb, err):
-                out["media_id"].append(mid)
-                out["cue_index"].append(ci)
-                out["start_ms"].append(s)
-                out["end_ms"].append(e)
-                out["text"].append(t)
-                out["n_cues"].append(nc)
-                out["n_bad"].append(nb)
-                out["error"].append(err)
-
-            for mid, doc in zip(pdf["media_id"], pdf["doc"]):
-                try:
-                    if doc is None:
-                        raise ValueError("null document")
-                    use = fmt
-                    if use == "auto":
-                        use = "vtt" if doc.lstrip("﻿").startswith(
-                            "WEBVTT") else "srt"
-                    d = parse_webvtt(doc) if use == "vtt" else parse_srt(doc)
-                    if not d["cues"]:
-                        emit(mid, None, None, None, None, 0, d["n_bad"],
-                             None)
-                    for ci, s, e, t in d["cues"]:
-                        emit(mid, ci, s, e, t, len(d["cues"]), d["n_bad"],
-                             None)
-                except Exception as e:  # noqa: BLE001 - row-level channel
-                    emit(mid, None, None, None, None, None, None,
-                         f"{type(e).__name__}: {e}")
-            yield pd.DataFrame(out)
-
-    return narrow.mapInPandas(kernel, schema=SUBTITLE_CUES_DDL)
+def _cue_rows(doc: str | None, fmt: str) -> list:
+    if doc is None:
+        raise ValueError("null document")
+    if fmt == "auto":
+        fmt = "vtt" if doc.lstrip("\ufeff").startswith("WEBVTT") else "srt"
+    d = parse_webvtt(doc) if fmt == "vtt" else parse_srt(doc)
+    cues = d["cues"]
+    if not cues:
+        return [{"n_cues": 0, "n_bad": d["n_bad"]}]
+    return [{"cue_index": ci, "start_ms": s, "end_ms": e, "text": t,
+             "n_cues": len(cues), "n_bad": d["n_bad"]}
+            for ci, s, e, t in cues]
 
 
 # --- multi-track language routing (r6) ----------------------------------------

@@ -23,16 +23,12 @@ HTML path) and emits one output row per table row:
   DOM: the lexer's auto-recovery places them; rows with zero cells are
   dropped.
 
-Spark surface: ONE Arrow mapInPandas pass; per-row failures land in the
+Spark surface: ONE Arrow mapInArrow pass; per-row failures land in the
 error column, never a task failure. A page with no tables emits zero
 rows (use a left join against the source to find table-free pages).
 """
 
 from __future__ import annotations
-
-from typing import Iterator
-
-import pandas as pd
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -40,6 +36,7 @@ from pyspark.sql import functions as F
 import html as _html
 
 from .markdown import _WS_RE, _Node, _attr, _parse_tree
+from .rows import html_text, map_rows
 
 __all__ = ["extract_html_tables", "html_tables", "TABLES_OUTPUT_DDL"]
 
@@ -122,54 +119,12 @@ def html_tables(html_text: str) -> list:
 def extract_html_tables(pages: DataFrame, html_col: str = "html") -> DataFrame:
     """pages(url, html) -> one row per table row (see module docstring)."""
     narrow = pages.select("url", F.col(html_col).alias("html"))
+    return map_rows(narrow, _table_rows, TABLES_OUTPUT_DDL)
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            urls: list = []
-            ti: list = []
-            ri: list = []
-            hdr: list = []
-            cells: list = []
-            errs: list = []
-            for url, h in zip(pdf["url"], pdf["html"]):
-                try:
-                    if h is None:
-                        urls.append(url)
-                        ti.append(None)
-                        ri.append(None)
-                        hdr.append(None)
-                        cells.append(None)
-                        errs.append("null html")
-                        continue
-                    text = (
-                        h.decode("utf-8", errors="replace")
-                        if isinstance(h, (bytes, bytearray, memoryview))
-                        else str(h)
-                    )
-                    for t_idx, r_idx, is_h, cs in html_tables(text):
-                        urls.append(url)
-                        ti.append(t_idx)
-                        ri.append(r_idx)
-                        hdr.append(is_h)
-                        cells.append(cs)
-                        errs.append(None)
-                except Exception as e:  # pragma: no cover - defensive
-                    urls.append(url)
-                    ti.append(None)
-                    ri.append(None)
-                    hdr.append(None)
-                    cells.append(None)
-                    errs.append(f"{type(e).__name__}: {e}")
-            yield pd.DataFrame(
-                {"url": urls, "table_idx": pd.array(ti, dtype="Int32"),
-                 "row_idx": pd.array(ri, dtype="Int32"),
-                 "is_header": pd.array(hdr, dtype="boolean"),
-                 # explicit object dtype: pandas otherwise coerces a list
-                 # of equal-length lists into a 2-D block, which Arrow's
-                 # NumPyConverter cannot turn into list<string>
-                 "cells": pd.Series(cells, dtype=object),
-                 "error": errs})
 
-    return narrow.mapInPandas(kernel, schema=TABLES_OUTPUT_DDL)
+def _table_rows(h) -> list:
+    if h is None:
+        return [{"error": "null html"}]
+    return [{"table_idx": t_idx, "row_idx": r_idx, "is_header": is_h,
+             "cells": cells}
+            for t_idx, r_idx, is_h, cells in html_tables(html_text(h))]

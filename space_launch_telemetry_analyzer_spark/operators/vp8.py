@@ -32,7 +32,7 @@ codec being lossy.  Its output is real VP8: libwebp decodes it to the same
 flat frame (cross-checked in tests).
 
 Per-pixel Python decode: fine for crawl-image payloads (images are small
-relative to page text); the distributed path batches via mapInPandas like
+relative to page text); the distributed path batches via mapInArrow like
 PNG/GIF/JPEG.
 """
 

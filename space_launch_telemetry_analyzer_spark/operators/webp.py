@@ -29,7 +29,7 @@ the decoder's backward-reference path is exercised by roundtrips. VP8L is
 lossless, so roundtrips assert byte-exact pixels (unlike the JPEG twin).
 
 Per-pixel Python decode: fine for crawl-image payloads (small relative to
-page text); the distributed path batches via mapInPandas like PNG/GIF.
+page text); the distributed path batches via mapInArrow like PNG/GIF.
 """
 
 from __future__ import annotations

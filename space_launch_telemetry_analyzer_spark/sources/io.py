@@ -29,17 +29,20 @@ from __future__ import annotations
 import os
 from dataclasses import dataclass
 
+from py4j.protocol import Py4JJavaError
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 
 def iceberg_available(spark: SparkSession) -> bool:
-    """True when an Iceberg catalog is usable on this session."""
+    """True when the Iceberg Spark runtime is on this session's classpath.
+    Only the JVM's answer to the class lookup (ClassNotFoundException,
+    raised as Py4JJavaError) means "no"; any other failure propagates."""
     try:
         jvm = spark.sparkContext._jvm
         jvm.java.lang.Class.forName("org.apache.iceberg.spark.source.IcebergSource")
         return True
-    except Exception:
+    except Py4JJavaError:
         return False
 
 

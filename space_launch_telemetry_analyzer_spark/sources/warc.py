@@ -572,59 +572,7 @@ def load_wet(
     task per file, records stream in bounded chunks, malformed records go
     to the error channel. Non-conversion records are skipped, so a mixed
     archive reads fine."""
-    import pandas as pd
-
-    from pyspark.sql import functions as F
-
-    files = spark.read.format("binaryFile").load(path)
-    narrow = files.select(
-        F.col("path").alias("source_file"), F.col("content"))
-
-    def parse(pdfs):
-        def flush(rows):
-            return pd.DataFrame(
-                rows, columns=["url", "warc_ts", "text", "source_file",
-                               "error"])
-
-        for pdf in pdfs:
-            rows = []
-            for src, raw in zip(pdf["source_file"], pdf["content"]):
-                try:
-                    stream = iter_warc_records_stream(
-                        _open_stream(bytes(raw)))
-                    for rec in stream:
-                        if rec["error"] is not None:
-                            rows.append((None, None, None, src,
-                                         rec["error"]))
-                            continue
-                        h = rec["headers"]
-                        if h.get("warc-type") != "conversion":
-                            continue
-                        url = h.get("warc-target-uri")
-                        if not url:
-                            rows.append((None, None, None, src,
-                                         "conversion record without "
-                                         "WARC-Target-URI"))
-                            continue
-                        rows.append((
-                            url, h.get("warc-date"),
-                            rec["content"].decode("utf-8", "replace"),
-                            src, None))
-                        if len(rows) >= rows_per_chunk:
-                            yield flush(rows)
-                            rows = []
-                except Exception as e:  # noqa: BLE001 - file-level channel
-                    rows.append((None, None, None, src,
-                                 f"{type(e).__name__}: {e}"))
-            if rows:
-                yield flush(rows)
-
-    out = narrow.mapInPandas(
-        parse,
-        "url string, warc_ts string, text string, source_file string, "
-        "error string",
-    )
-    return out.withColumn("warc_ts", F.to_timestamp("warc_ts"))
+    return _load_typed_records(spark, path, rows_per_chunk, "conversion", "text")
 
 
 def load_wat(
@@ -634,6 +582,14 @@ def load_wat(
     source_file, error). The metadata-record twin of load_wet; other
     record types are skipped, so mixed archives read fine. Parse the JSON
     downstream with F.get_json_object / F.from_json."""
+    return _load_typed_records(spark, path, rows_per_chunk, "metadata", "meta_json")
+
+
+def _load_typed_records(spark: SparkSession, path: str, rows_per_chunk: int,
+                        warc_type: str, body_col: str) -> DataFrame:
+    """The records of one WARC-Type from WARC file(s): (url, warc_ts,
+    <body_col> as UTF-8 text, source_file, error), streamed per file in
+    chunks of rows_per_chunk; a file that fails to read is one error row."""
     import pandas as pd
 
     from pyspark.sql import functions as F
@@ -641,13 +597,9 @@ def load_wat(
     files = spark.read.format("binaryFile").load(path)
     narrow = files.select(
         F.col("path").alias("source_file"), F.col("content"))
+    columns = ["url", "warc_ts", body_col, "source_file", "error"]
 
     def parse(pdfs):
-        def flush(rows):
-            return pd.DataFrame(
-                rows, columns=["url", "warc_ts", "meta_json",
-                               "source_file", "error"])
-
         for pdf in pdfs:
             rows = []
             for src, raw in zip(pdf["source_file"], pdf["content"]):
@@ -659,12 +611,12 @@ def load_wat(
                                          rec["error"]))
                             continue
                         h = rec["headers"]
-                        if h.get("warc-type") != "metadata":
+                        if h.get("warc-type") != warc_type:
                             continue
                         url = h.get("warc-target-uri")
                         if not url:
                             rows.append((None, None, None, src,
-                                         "metadata record without "
+                                         f"{warc_type} record without "
                                          "WARC-Target-URI"))
                             continue
                         rows.append((
@@ -672,17 +624,14 @@ def load_wat(
                             rec["content"].decode("utf-8", "replace"),
                             src, None))
                         if len(rows) >= rows_per_chunk:
-                            yield flush(rows)
+                            yield pd.DataFrame(rows, columns=columns)
                             rows = []
                 except Exception as e:  # noqa: BLE001 - file-level channel
                     rows.append((None, None, None, src,
                                  f"{type(e).__name__}: {e}"))
             if rows:
-                yield flush(rows)
+                yield pd.DataFrame(rows, columns=columns)
 
     out = narrow.mapInPandas(
-        parse,
-        "url string, warc_ts string, meta_json string, "
-        "source_file string, error string",
-    )
+        parse, ", ".join(f"{c} string" for c in columns))
     return out.withColumn("warc_ts", F.to_timestamp("warc_ts"))

@@ -152,7 +152,7 @@ def test_decode_image_routes_jpeg():
 
 def test_image_features_jpeg_through_spark(spark):
     """The distributed path runs the real JPEG decoder alongside PNG/GIF
-    and the error channel, one mapInPandas pass."""
+    and the error channel, one mapInArrow pass."""
     from pyspark.sql import functions as F
 
     img = _grad(12, 12)

@@ -255,6 +255,23 @@ def test_iceberg_unavailable_in_sandbox(spark):
     assert iceberg_available(spark) is False
 
 
+def test_iceberg_probe_propagates_non_py4j_errors():
+    """Only the JVM's class-lookup failure means "unavailable"; a broken
+    probe (here a Python error from the gateway) is not swallowed."""
+    from types import SimpleNamespace
+
+    from space_launch_telemetry_analyzer_spark.sources.io import iceberg_available
+
+    def for_name(_):
+        raise RuntimeError("gateway gone")
+
+    jvm = SimpleNamespace(java=SimpleNamespace(lang=SimpleNamespace(
+        Class=SimpleNamespace(forName=for_name))))
+    spark = SimpleNamespace(sparkContext=SimpleNamespace(_jvm=jvm))
+    with pytest.raises(RuntimeError, match="gateway gone"):
+        iceberg_available(spark)
+
+
 def test_load_pages_roundtrip(spark, tmp_path_factory):
     """Ingest: JSONL (string html / string ts) and parquet (missing lang)
     both coerce to PAGES_SCHEMA and run through extraction byte-identically."""

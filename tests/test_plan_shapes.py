@@ -95,8 +95,8 @@ def test_model_joins_stay_broadcast(spark, sf_dir, name):
 
 
 def test_markdown_pages_is_one_arrow_pass_no_shuffle(spark, sf_dir):
-    """The converter is a single mapInPandas over a JVM-built fixture: no
-    join, exactly one Arrow Python stage (MapInPandas), and the ONLY
+    """The converter is a single mapInArrow over a JVM-built fixture: no
+    join, exactly one Arrow Python stage (MapInArrow), and the ONLY
     permitted exchange is spread()'s round-robin scan widener BELOW the
     kernel (r7: the single-row-group fixture scans otherwise run the whole
     converter on one task; at production split counts spread() no-ops and
@@ -104,7 +104,8 @@ def test_markdown_pages_is_one_arrow_pass_no_shuffle(spark, sf_dir):
     the kernel and nothing hash-partitions."""
     plan = _plan(spark, sf_dir, "markdown_pages")
     assert "Join" not in plan
-    assert plan.count("MapInPandas") == 1
+    assert plan.count("MapInArrow") == 1
+    assert "MapInPandas" not in plan
     assert "hashpartitioning" not in plan
     # any exchange must be the round-robin widener, and at most one
     assert plan.count("Exchange") <= 1
@@ -112,7 +113,7 @@ def test_markdown_pages_is_one_arrow_pass_no_shuffle(spark, sf_dir):
         assert "RoundRobinPartitioning" in plan
         # it sits BELOW the kernel: the Arrow stage consumes the exchange,
         # never feeds one (converted rows don't shuffle)
-        assert plan.index("MapInPandas") < plan.index("Exchange RoundRobin")
+        assert plan.index("MapInArrow") < plan.index("Exchange RoundRobin")
 
 
 def test_dsir_select_broadcasts_model_and_heaps_topk(spark, sf_dir):

@@ -152,6 +152,12 @@ def test_sitemap_entries_explode_and_error_rows(spark):
     assert by_url["s1"][0]["priority"] == 0.5
     assert len(by_url["s2"]) == 1 and by_url["s2"][0]["error"]
     assert by_url["s3"][0]["error"] == "ValueError: null xml"
+    # feed_entries over the same inputs: none is a feed, so each url is
+    # exactly one error row, and the null one names its cause
+    feeds = {r["url"]: r for r in feed_entries(df).collect()}
+    assert sorted(feeds) == ["s1", "s2", "s3"]
+    assert all(r["error"] and r["ordinal"] is None for r in feeds.values())
+    assert feeds["s3"]["error"] == "ValueError: null xml"
 
 
 @pytest.mark.usefixtures("spark")

@@ -85,5 +85,6 @@ def test_spark_operator_plan_is_single_python_pass(spark):
     pages = spark.createDataFrame([("u", b"<p></p>")], "url string, html binary")
     plan = (extract_html_tables(pages)
             ._jdf.queryExecution().executedPlan().toString())
-    assert plan.count("MapInPandas") == 1
+    assert plan.count("MapInArrow") == 1
+    assert "MapInPandas" not in plan
     assert "Exchange" not in plan
