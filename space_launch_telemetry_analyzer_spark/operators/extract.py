@@ -8,7 +8,7 @@ boilerplate strip (text-density + link-density block classification); the
 field parsers are exact ports (functions/parse.py).
 
 Execution model (Spark-first):
-- ONE `mapInPandas` pass over Arrow batches of pages — the only Python hot
+- ONE `mapInArrow` pass over Arrow batches of pages — the only Python hot
   path in the engine. Everything downstream (validation, derived metrics,
   aggregation) is JVM-side DataFrame expressions.
 - Per-row failures become an `error` column, never a task failure — the
@@ -487,8 +487,8 @@ def extract_pages(
     """pages(url, warc_ts, html[, row_idx]) -> extraction results.
 
     The physical plan this builds (SURVEY.md §4 sketch): column-pruned scan
-    -> bucket computation (xxhash64(url) — JVM-side) -> ONE Arrow
-    `mapInPandas` -> results. Callers wanting skew-safe layout repartition
+    -> bucket computation (xxhash64(url) — JVM-side) -> ONE
+    `mapInArrow` -> results. Callers wanting skew-safe layout repartition
     via plans.pipeline.bucketed_repartition before this operator.
     """
     spark = pages.sparkSession

@@ -12,6 +12,8 @@ Two paths, as a 100 TB pipeline needs both:
 
 from __future__ import annotations
 
+import numpy as np
+
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -256,136 +258,141 @@ def ivf_assign(corpus: DataFrame, id_col: str, vec_col: str,
     ).select("id", "vec", "centroid_id")
 
 
-def _cosine_batch(a: Column, b: Column) -> Column:
-    """Vectorized cosine over Arrow batches (numpy einsum) — the fast
-    path for pair-heavy operators. NOT bit-identical to the sequential
-    fold `cosine()` (BLAS/pairwise reduction order differs in the last
-    ulps), so exactness-gated callers keep the fold."""
-    from pyspark.sql.functions import pandas_udf
+# --- fold math shared by the Arrow kernels -------------------------------------
+# The interpreted `cosine()` fold, reproduced BIT-EXACTLY in numpy: dot and
+# both squared norms accumulate in DIMENSION ORDER with scalar float64 IEEE
+# ops, vectorized across pairs while the dimension loop stays sequential, so
+# every intermediate double equals the fold's (no FMA, no pairwise/BLAS
+# reassociation; float32 -> float64 widening is exact on both paths).
 
-    @pandas_udf("double")
-    def _cos(xa, xb):  # type: ignore[no-untyped-def]
-        import numpy as np
-        import pandas as pd
-        n = len(xa)
-        if n == 0:
-            return pd.Series([], dtype="float64")
-        va, vb = xa.to_numpy(), xb.to_numpy()
-        # NULL or length-mismatched vectors score NULL — the SAME drop
-        # decision the exact fold makes (zip_with pads with null ->
-        # NULL cosine -> pair filtered); vstack on them would crash.
-        # Real None, NOT NaN: Spark orders NaN ABOVE every double, so a
-        # NaN score would pass `>= threshold` and mark garbage as dups.
-        out: list = [None] * n
-        lens_a = np.array([-1 if v is None else len(v) for v in va])
-        lens_b = np.array([-1 if v is None else len(v) for v in vb])
-        for d in np.unique(lens_a):
-            if d < 0:
-                continue
-            idx = np.nonzero((lens_a == d) & (lens_b == d))[0]
-            if not len(idx):
-                continue
-            A = np.vstack([va[i] for i in idx]).astype(np.float64)
-            B = np.vstack([vb[i] for i in idx]).astype(np.float64)
-            num = np.einsum("ij,ij->i", A, B)
-            den = np.linalg.norm(A, axis=1) * np.linalg.norm(B, axis=1)
-            vals = np.where(den > 0, num / np.where(den > 0, den, 1.0), 0.0)
-            for j, i in enumerate(idx):
-                out[i] = float(vals[j])
-        return pd.Series(out, dtype=object)
 
-    return _cos(a, b)
+def _vectors(arr, width: int = 0) -> tuple[np.ndarray, np.ndarray]:
+    """Arrow list<float|double> array -> (V, lens). V is float64
+    (len(arr), max(width, longest vector)) with each vector left-aligned
+    and padded with +0.0; lens is each vector's length, -1 where the fold
+    sees a NULL norm (a NULL vector, or one holding a NULL element).
+    Padding leaves fold sums bit-identical: a sum starts at +0.0, so it is
+    never -0.0, and adding 0*0 = +0.0 to any other double returns it
+    unchanged (NaN and Inf included)."""
+    import pyarrow.compute as pc
+
+    raw = pc.list_value_length(arr).fill_null(0) \
+        .to_numpy(zero_copy_only=False).astype(np.int64)
+    lens = np.where(arr.is_null().to_numpy(zero_copy_only=False), -1, raw)
+    flat = arr.flatten()
+    rows = np.repeat(np.arange(len(raw)), raw)
+    if flat.null_count:
+        lens[rows[flat.is_null().to_numpy(zero_copy_only=False)]] = -1
+        flat = flat.fill_null(0.0)
+    cols = np.arange(len(flat)) - np.repeat(np.cumsum(raw) - raw, raw)
+    V = np.zeros((len(raw), max(width, int(raw.max(initial=0)))))
+    V[rows, cols] = flat.to_numpy(zero_copy_only=False)
+    return V, lens
+
+
+def _fold_dot(A: np.ndarray, B: np.ndarray) -> np.ndarray:
+    """Σ_k A[..., k] * B[..., k], the dimension loop SEQUENTIAL (the fold's
+    operation order). Leading axes broadcast: (m, d) x (m, d) scores m
+    row-aligned pairs, (ti, 1, d) x (1, tj, d) a ti x tj tile."""
+    shape = np.broadcast_shapes(A.shape[:-1], B.shape[:-1])
+    acc, term = np.zeros(shape), np.empty(shape)
+    for k in range(A.shape[-1]):
+        np.multiply(A[..., k], B[..., k], out=term)
+        acc += term
+    return acc
+
+
+def _fold_cosine(dot, na, nb, la, lb) -> tuple[np.ndarray, np.ndarray]:
+    """`cosine()`'s value from the dot and the two squared-norm sums of
+    operands with lengths `la`, `lb` (-1 = NULL norm), as (score,
+    is_null). Edge semantics are the fold's:
+    - either side NULL  -> NULL norm -> NULL denom -> otherwise 0.0
+    - length mismatch   -> zip_with pads with NULL -> NULL dot: NULL when
+                           denom > 0, else 0.0
+    - empty arrays      -> denom 0.0 -> 0.0
+    - NaN/Inf components propagate as in the fold.
+    Spark SQL's `denom > 0` is NaN-AS-LARGEST (a NaN denom takes the TRUE
+    branch and yields dot/NaN = NaN); numpy's > is IEEE, so isnan is ORed
+    in."""
+    with np.errstate(divide="ignore", invalid="ignore", over="ignore"):
+        den = np.sqrt(na) * np.sqrt(nb)
+        ok = (den > 0) | np.isnan(den)
+        score = np.where(ok, dot / np.where(ok, den, 1.0), 0.0)
+    null_side = (la < 0) | (lb < 0)
+    return np.where(null_side, 0.0, score), ~null_side & (la != lb) & ok
 
 
 def cosine_fold_batch(a: Column, b: Column) -> Column:
     """Arrow-batched cosine that reproduces the sequential-fold `cosine()`
-    BIT-EXACTLY (r7): per row, dot and both norms accumulate in DIMENSION
-    ORDER with scalar float64 IEEE ops — numpy elementwise multiply/add
-    vectorized across ROWS while the dimension loop stays sequential, so
-    every intermediate double equals the interpreted HOF fold's (no FMA,
-    no pairwise/BLAS reassociation; float32 -> float64 widening is exact
-    on both paths). Null/edge semantics mirror the fold:
-    - either side NULL        -> NULL norm -> NULL denom -> otherwise 0.0
-    - length mismatch         -> zip_with-padded NULL dot -> NULL score
-    - empty arrays            -> denom 0.0 -> 0.0
-    - NaN/Inf components      -> identical NaN/Inf propagation.
-    Pinned bitwise against the fold by tests/test_similarity.py's
-    differential harness (random, denormal, NaN/Inf, null, mismatched).
-    Implemented as an arrow_udf (not pandas_udf): the pandas path folds
-    NaN into null on the return conversion, while the fold must emit a
-    REAL NaN (Spark's `NaN >= threshold` is NaN-as-largest = true, a
-    NULL comparison is null = dropped — a visible semantic difference).
-    Use where pair volume makes the interpreted fold the bottleneck and
-    the Arrow transfer of both vectors is affordable (the SemDeDup
-    within-cluster scoring); the fold stays the reference."""
+    BIT-EXACTLY, edge cases included (see _fold_cosine). Pinned bitwise
+    against the fold by tests/test_similarity.py's differential harness
+    (random, denormal, NaN/Inf, null, mismatched), which thereby pins the
+    fold math semdedup's kernel runs. Implemented as an arrow_udf (not
+    pandas_udf): the pandas path folds NaN into null on the return
+    conversion, while the fold must emit a REAL NaN (Spark's `NaN >=
+    threshold` is NaN-as-largest = true, a NULL comparison is null =
+    dropped — a visible semantic difference)."""
     from pyspark.sql.functions import arrow_udf
 
     @arrow_udf("double")
     def _cos(xa, xb):  # type: ignore[no-untyped-def]
-        import numpy as np
         import pyarrow as pa
-        n = len(xa)
-        if n == 0:
-            return pa.array([], type=pa.float64())
-        va = xa.to_numpy(zero_copy_only=False)
-        vb = xb.to_numpy(zero_copy_only=False)
-        out: list = [None] * n
-        lens_a = np.array([-1 if v is None else len(v) for v in va])
-        lens_b = np.array([-2 if v is None else len(v) for v in vb])
-        for i in np.nonzero((lens_a == -1) | (lens_b == -2))[0]:
-            out[i] = 0.0  # NULL side: NULL denom -> otherwise branch
-        # length mismatch (both non-null): zip_with pads the shorter side
-        # with nulls -> dot is NULL; the fold then yields NULL when
-        # denom > 0 (NULL/denom) but 0.0 when denom == 0.0 (otherwise
-        # branch). Rare rows — per-row sequential norm folds.
-        import math
-        for i in np.nonzero((lens_a >= 0) & (lens_b >= 0)
-                            & (lens_a != lens_b))[0]:
-            na_i = 0.0
-            for x in va[i]:
-                x = float(x)
-                na_i = na_i + x * x
-            nb_i = 0.0
-            for y in vb[i]:
-                y = float(y)
-                nb_i = nb_i + y * y
-            den_i = math.sqrt(na_i) * math.sqrt(nb_i)
-            out[i] = 0.0 if den_i == 0.0 else None
-        for d in np.unique(lens_a):
-            if d < 0:
-                continue
-            idx = np.nonzero((lens_a == d) & (lens_b == d))[0]
-            if not len(idx):
-                continue
-            if d == 0:
-                for i in idx:
-                    out[i] = 0.0  # sqrt(0)*sqrt(0) = 0 -> otherwise
-                continue
-            A = np.vstack([va[i] for i in idx]).astype(np.float64)
-            B = np.vstack([vb[i] for i in idx]).astype(np.float64)
-            m = len(idx)
-            dot = np.zeros(m)
-            na = np.zeros(m)
-            nb = np.zeros(m)
-            for k in range(d):  # dimension loop SEQUENTIAL == the fold
-                x, y = A[:, k], B[:, k]
-                dot = dot + x * y
-                na = na + x * x
-                nb = nb + y * y
-            den = np.sqrt(na) * np.sqrt(nb)
-            # Spark SQL's `denom > 0` is NaN-AS-LARGEST (a NaN denom takes
-            # the TRUE branch and yields dot/NaN = NaN); numpy's > is
-            # IEEE (NaN -> False), so OR in isnan explicitly
-            ok = (den > 0) | np.isnan(den)
-            with np.errstate(divide="ignore", invalid="ignore", over="ignore"):
-                val = np.where(ok, dot / np.where(ok, den, 1.0), 0.0)
-            for j, i in enumerate(idx):
-                out[i] = float(val[j])
-        # from_pandas=False (the pa.array default): NaN is a VALUE,
-        # None is the null — exactly the fold's semantics
-        return pa.array(out, type=pa.float64())
+        Va, la = _vectors(xa)
+        Vb, lb = _vectors(xb, Va.shape[1])
+        if Va.shape[1] < Vb.shape[1]:
+            Va, la = _vectors(xa, Vb.shape[1])
+        score, null = _fold_cosine(_fold_dot(Va, Vb), _fold_dot(Va, Va),
+                                   _fold_dot(Vb, Vb), la, lb)
+        # NaN is a VALUE, the mask the null — exactly the fold's semantics
+        return pa.array(score, mask=null, type=pa.float64())
 
     return _cos(a, b)
+
+
+# Edge of a semdedup scoring tile: one step scores at most T*T pairs, so its
+# score matrices stay ~0.5 MB each however large a cluster grows.
+SEMDEDUP_TILE = 256
+
+
+def _tiles(n: int, t: int = SEMDEDUP_TILE):
+    """Blocks (i0, i1, j0, j1) of the n x n pair matrix that together cover
+    every pair i > j exactly once, each at most t x t. A diagonal block
+    (i0 == j0) also spans pairs i <= j, which the caller masks out."""
+    for i0 in range(0, n, t):
+        i1 = min(i0 + t, n)
+        for j0 in range(0, i0 + 1, t):
+            yield i0, i1, j0, min(j0 + t, n)
+
+
+def _semdedup_cluster(table, threshold: float, exact: bool,
+                      t: int = SEMDEDUP_TILE):
+    """One cluster's (id, vec, centroid_id) rows -> (id, centroid_id,
+    is_dup): a member is a dup when its cosine to an EARLIER-id member
+    reaches `threshold` (a NaN score counts as reaching it, Spark's
+    NaN-as-largest order; a NULL score never does). Each vector's squared
+    norm is summed once; pairs are scored tile by tile (_tiles). NULL ids
+    sort last and pair with nothing, as `a.id > b.id` is NULL for them.
+    `exact` scores with the sequential fold; otherwise the dot and norms
+    are BLAS reductions and only the edge semantics are shared."""
+    import pyarrow as pa
+
+    table = table.sort_by("id")
+    ids = table.column("id")
+    n = len(ids) - ids.null_count
+    V, lens = _vectors(table.column("vec").combine_chunks())
+    sq = _fold_dot(V, V) if exact else np.einsum("ij,ij->i", V, V)
+    is_dup = np.zeros(len(lens), dtype=bool)
+    for i0, i1, j0, j1 in _tiles(n, t):
+        A, B = V[i0:i1], V[j0:j1]
+        dot = _fold_dot(A[:, None, :], B[None, :, :]) if exact else A @ B.T
+        score, null = _fold_cosine(dot, sq[i0:i1, None], sq[None, j0:j1],
+                                   lens[i0:i1, None], lens[None, j0:j1])
+        hit = ((score >= threshold) | np.isnan(score)) & ~null
+        if i0 == j0:
+            hit &= np.tri(i1 - i0, j1 - j0, -1, dtype=bool)
+        is_dup[i0:i1] |= hit.any(axis=1)
+    return pa.table({"id": ids, "centroid_id": table.column("centroid_id"),
+                     "is_dup": is_dup})
 
 
 def semdedup(corpus: DataFrame, id_col: str, vec_col: str,
@@ -400,50 +407,32 @@ def semdedup(corpus: DataFrame, id_col: str, vec_col: str,
     (id, centroid_id, is_dup); filter `~is_dup` for the survivor set.
 
     Scale shape: assignment is the broadcast-centroid scan (ivf_assign, no
-    corpus shuffle); the duplicate test is a WITHIN-CLUSTER self-join —
-    quadratic in cluster size by design (that is SemDeDup: k must grow
-    with the corpus so clusters stay bounded; the paper uses k ~ sqrt(n)).
-    The join keys on centroid_id, so a runaway cluster is a skew key —
-    AQE skew-join splits it, and the real fix is more centroids. The
-    assigned frame feeds three consumers (both join sides + the output),
-    so it is localCheckpoint'ed once instead of re-scoring the corpus
-    3x (the MinHash self-join lesson).
+    corpus shuffle); the duplicate test is ONE grouped Arrow pass keyed on
+    centroid_id, so each assigned vector crosses to Python once (not once
+    per candidate pair, as a self-join would send it) and the assigned
+    frame is read once. Per-task work is one cluster's pairs — quadratic
+    in cluster size by design (that is SemDeDup: k must grow with the
+    corpus so clusters stay bounded; the paper uses k ~ sqrt(n)), and the
+    whole cluster's vectors sit in one Python worker. Within it, pairs are
+    scored in tiles of at most SEMDEDUP_TILE² pairs, so per-step memory
+    stays bounded even for a runaway cluster; the real fix for one is more
+    centroids.
 
-    `exact=True` (default) scores pairs with the deterministic sequential
-    fold — engine-exact threshold comparisons, what the driver oracle
-    pins. `exact=False` scores with the Arrow-batched numpy kernel
-    (measured 13x faster on the 3M-pair bench leg, BENCH.md #42); its
-    reduction order differs in the last ulps, so a pair sitting WITHIN
-    float noise of the threshold may flip — the dup_ngram_mask(
-    exact=False) trade, documented and tested for agreement away from
-    the boundary."""
+    `exact=True` (default) scores pairs with the sequential fold,
+    bit-identical to `cosine()` — engine-exact threshold comparisons, what
+    the driver oracle pins. `exact=False` takes the dot and norms from
+    BLAS; its reduction order differs in the last ulps, so a pair sitting
+    WITHIN float noise of the threshold may flip — the dup_ngram_mask(
+    exact=False) trade, documented and tested for agreement away from the
+    boundary."""
+    from pyspark.sql import types as _T
+
     assigned = ivf_assign(corpus, id_col, vec_col, centroids,
-                          centroid_id_col, centroid_vec_col) \
-        .localCheckpoint(eager=False)
-    a, b = assigned.alias("a"), assigned.alias("b")
-    # exact=True scores with cosine_fold_batch — the Arrow-batched kernel
-    # proven BIT-EQUAL to the sequential fold (dimension-order float64
-    # accumulation; differential-pinned in tests). The within-cluster
-    # join is quadratic in cluster size, so the interpreted per-pair fold
-    # was the operator's wall: sf1.0 fixture (20k vectors / 8 centroids
-    # -> ~25M pairs) measured 108 s interpreted vs ~8 s batched, value-
-    # identical. exact=False keeps the einsum kernel (last-ulp looser,
-    # further ~30% faster at width).
-    score = (cosine_fold_batch if exact else _cosine_batch)(
-        F.col("a.vec"), F.col("b.vec"))
-    dup_ids = (
-        a.join(b, (F.col("a.centroid_id") == F.col("b.centroid_id"))
-               & (F.col("a.id") > F.col("b.id")))
-        .where(score >= F.lit(threshold))
-        .select(F.col("a.id").alias("id"))
-        .distinct()
-    )
-    return (
-        assigned
-        .join(dup_ids.withColumn("__dup", F.lit(True)), "id", "left")
-        .select("id", "centroid_id",
-                F.coalesce("__dup", F.lit(False)).alias("is_dup"))
-    )
+                          centroid_id_col, centroid_vec_col)
+    out = _T.StructType([assigned.schema["id"], assigned.schema["centroid_id"],
+                         _T.StructField("is_dup", _T.BooleanType(), False)])
+    return assigned.groupBy("centroid_id").applyInArrow(
+        lambda t: _semdedup_cluster(t, threshold, exact), schema=out)
 
 
 def kmeans_lloyd(corpus: DataFrame, id_col: str, vec_col: str,

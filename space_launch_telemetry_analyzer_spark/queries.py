@@ -58,7 +58,19 @@ from .rules import default_config
 
 
 def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    """Table `name` (a parquet file, or a directory of part files) with its
+    schema read from the parquet footer on the driver. Passing the schema
+    spares Spark the job it runs to infer one; the result equals the
+    inferred schema (tests/test_load.py pins that per table): TIMESTAMP
+    without a time zone reads as TIMESTAMP_NTZ, and Spark makes every field
+    of the passed schema nullable, as it does an inferred one."""
+    import pyarrow.dataset as pads
+    from pyspark.sql.pandas.types import from_arrow_schema
+
+    path = f"{sf_dir}/{name}.parquet"
+    schema = from_arrow_schema(pads.dataset(path, format="parquet").schema,
+                               prefer_timestamp_ntz=True)
+    return spark.read.schema(schema).parquet(path)
 
 
 def spread(df: DataFrame, factor: int = 1) -> DataFrame:

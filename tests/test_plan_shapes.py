@@ -23,11 +23,12 @@ Facts pinned per query (why):
 - ``lm_bigram_score`` / ``quality_clf_filter`` / ``subtitle_lang_route`` /
   ``pack_sequences_bpe``: model/route/boundary joins stay ``Broadcast``
   (the model tables are config-sized); no SortMergeJoin.
-- ``semdedup``: the within-cluster self-join IS a keyed join on
-  centroid_id (quadratic-in-cluster by design, Abbas et al. 2023) — pin
-  that it is keyed (no BroadcastNestedLoopJoin / cartesian fallback), and
-  that the assigned frame is localCheckpoint'ed (plan restarts at
-  ``Scan ExistingRDD``) so the corpus is scored once, not three times.
+- ``semdedup``: within-cluster scoring is ONE grouped Arrow pass keyed on
+  centroid_id (``FlatMapGroupsInArrow``), so each vector crosses to Python
+  once — no pair self-join (``SortMergeJoin``/``CartesianProduct``) and no
+  per-pair Arrow UDF (``ArrowEvalPython``). The one
+  ``BroadcastNestedLoopJoin`` is ivf_assign's keyless join against the
+  broadcast centroids.
 """
 
 from __future__ import annotations
@@ -162,10 +163,11 @@ def test_split_sentences_is_scan_stage_generate(spark, sf_dir):
 
 def test_semdedup_self_join_is_keyed_and_checkpointed(spark, sf_dir):
     plan = _plan(spark, sf_dir, "semdedup")
-    # keyed on centroid_id — never a cartesian/unkeyed fallback
-    assert "BroadcastNestedLoopJoin" not in plan
-    assert "CartesianProduct" not in plan
-    assert "SortMergeJoin" in plan
-    # the assigned frame is localCheckpoint'ed: downstream plan restarts at
-    # Scan ExistingRDD instead of re-running the broadcast-assign 3x
-    assert "Scan ExistingRDD" in plan
+    # one grouped pass scores every cluster; vectors are not paired up in
+    # the JVM and shipped per pair
+    assert plan.count("FlatMapGroupsInArrow") == 1
+    # ivf_assign's keyless join against the broadcast centroids, and no other
+    assert plan.count("BroadcastNestedLoopJoin") == 1
+    for node in ("SortMergeJoin", "CartesianProduct", "ArrowEvalPython",
+                 "BatchEvalPython"):
+        assert node not in plan, node

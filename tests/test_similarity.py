@@ -384,15 +384,92 @@ def test_semdedup_exact_batch_matches_fold_form(spark, vectors):
         F.col("vec_id").alias("cid"), F.col("vec").alias("cvec"))
     out = S.semdedup(corpus, "vec_id", "vec", cents, "cid", "cvec",
                      threshold=0.4).collect()
-    # fold-form reference: same assignment, fold-scored pairs
+    ref = _fold_form_semdedup(corpus, cents, 0.4)
+    assert sorted(map(tuple, out)) == sorted(map(tuple, ref))
+
+
+def _fold_form_semdedup(corpus, cents, threshold):
+    """The reference semdedup: same assignment, pairs from a within-cluster
+    self-join scored by the plain interpreted fold."""
     assigned = S.ivf_assign(corpus, "vec_id", "vec", cents, "cid", "cvec")
     a, b = assigned.alias("a"), assigned.alias("b")
     dup_ids = (
         a.join(b, (F.col("a.centroid_id") == F.col("b.centroid_id"))
                & (F.col("a.id") > F.col("b.id")))
-        .where(S.cosine(F.col("a.vec"), F.col("b.vec")) >= F.lit(0.4))
+        .where(S.cosine(F.col("a.vec"), F.col("b.vec")) >= F.lit(threshold))
         .select(F.col("a.id").alias("id")).distinct())
-    ref = (assigned.join(dup_ids.withColumn("__dup", F.lit(True)), "id", "left")
-           .select("id", "centroid_id",
-                   F.coalesce("__dup", F.lit(False)).alias("is_dup"))).collect()
+    return (assigned.join(dup_ids.withColumn("__dup", F.lit(True)), "id", "left")
+            .select("id", "centroid_id",
+                    F.coalesce("__dup", F.lit(False)).alias("is_dup"))).collect()
+
+
+@pytest.mark.parametrize("threshold", [0.0, 0.45])
+def test_semdedup_kernel_edges_match_fold_form(spark, threshold):
+    """One cluster holding every edge the fold defines — a NULL vector, a
+    NULL element, a length mismatch, an empty vector, NaN and Inf
+    components, a zero vector — must flag exactly what the fold-scored
+    self-join flags."""
+    nan, inf = float("nan"), float("inf")
+    rows = [(1, [1.0, 0.0, 0.0, 0.0]), (2, [-1.0, 0.0, 0.0, 0.0]),
+            (3, [0.9, 0.1, 0.0, 0.0]), (4, [0.0, 0.0, 0.0, 0.0]),
+            (5, [1.0, 0.0, 0.0]), (6, []), (7, [1.0, None, 0.0, 0.0]),
+            (8, None), (9, [0.0, 0.0, 1.0, 0.0]), (10, [0.0, 0.0, 0.0]),
+            (11, [nan, 1.0, 0.0, 0.0]), (12, [inf, 0.0, 0.0, 0.0])]
+    corpus = spark.createDataFrame(rows, "vec_id long, vec array<double>")
+    cents = spark.createDataFrame([(0, [1.0, 0.0, 0.0, 0.0])],
+                                  "cid long, cvec array<double>")
+    out = S.semdedup(corpus, "vec_id", "vec", cents, "cid", "cvec",
+                     threshold=threshold).collect()
+    ref = _fold_form_semdedup(corpus, cents, threshold)
     assert sorted(map(tuple, out)) == sorted(map(tuple, ref))
+    assert {r["centroid_id"] for r in ref} == {0}
+    flagged = {r["id"] for r in ref if r["is_dup"]}
+    assert flagged and len(flagged) < len(rows)
+
+
+def test_tiles_cover_each_later_pair_once():
+    T = S.SEMDEDUP_TILE
+    for n in (0, 1, T - 1, T, T + 1, 3 * T + 5):
+        seen = np.zeros((n, n), dtype=np.int64)
+        for i0, i1, j0, j1 in S._tiles(n):
+            assert (i1 - i0) * (j1 - j0) <= T * T
+            seen[i0:i1, j0:j1] += 1
+        later = np.tri(n, n, -1, dtype=bool)   # pairs i > j
+        assert (seen[later] == 1).all(), n
+
+
+def test_semdedup_runaway_cluster_small_tiles_match_fold_form(spark):
+    """~30% of the corpus on one centroid, scored in 5 x 5 tiles (so the
+    big cluster spans dozens of tile steps), gives the fold form's rows."""
+    import random
+
+    from pyspark.sql import types as T
+
+    rng = random.Random(29)
+    dim = 8
+    cents_v = [[round(rng.uniform(-1, 1), 6) for _ in range(dim)]
+               for _ in range(4)]
+    rows = [(i, [round(rng.uniform(-1, 1), 6) for _ in range(dim)])
+            for i in range(70)]
+    rows += [(100 + i, [round(c + rng.gauss(0, 0.08), 6) for c in cents_v[0]])
+             for i in range(30)]
+    rows += [(200 + i, rows[i][1]) for i in range(0, 100, 11)]
+    corpus = spark.createDataFrame(rows, "vec_id long, vec array<double>")
+    cents = spark.createDataFrame(list(enumerate(cents_v)),
+                                  "cid long, cvec array<double>")
+    assigned = S.ivf_assign(corpus, "vec_id", "vec", cents, "cid", "cvec")
+    out_schema = T.StructType([assigned.schema["id"],
+                               assigned.schema["centroid_id"],
+                               T.StructField("is_dup", T.BooleanType(), False)])
+    out = assigned.groupBy("centroid_id").applyInArrow(
+        lambda t: S._semdedup_cluster(t, 0.99, True, t=5),
+        schema=out_schema).collect()
+    ref = _fold_form_semdedup(corpus, cents, 0.99)
+    assert sorted(map(tuple, out)) == sorted(map(tuple, ref))
+    sizes = {}
+    for r in ref:
+        sizes[r["centroid_id"]] = sizes.get(r["centroid_id"], 0) + 1
+    assert max(sizes.values()) >= 0.3 * len(rows) > 5 * 5
+    big = max(sizes, key=sizes.get)
+    dups = [r["is_dup"] for r in ref if r["centroid_id"] == big]
+    assert any(dups) and not all(dups)
