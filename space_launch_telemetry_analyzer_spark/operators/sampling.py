@@ -43,7 +43,8 @@ def quota_sample(df: DataFrame, strata_cols: list[str], order_col: str,
     runs. Adds `strata_rank` (1-based).
 
     Scale note: Spark plans a rank<=k filter as WindowGroupLimit — a
-    per-map-task top-k prune BEFORE the exchange (verified in PLANS.md), so
+    per-map-task top-k prune BEFORE the exchange (see the WindowGroupLimit
+    below the Exchange in plans/r07/tfidf_topk_after.txt), so
     the shuffle carries at most k rows per strata per map task. If a single
     strata still overwhelms one reducer's sort (billions of rows in one
     domain across millions of map tasks), `quota_sample_two_phase` salts it

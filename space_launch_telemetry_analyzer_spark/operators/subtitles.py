@@ -51,6 +51,15 @@ def _ts_ms(stamp: str) -> int:
         + int(m.group(4))
 
 
+def format_ts(ms: int, sep: str = ".") -> str:
+    """The inverse of _ts_ms: HH:MM:SS.mmm (WebVTT) or, with sep=",",
+    HH:MM:SS,mmm (SubRip)."""
+    h, rem = divmod(ms, 3600000)
+    m, rem = divmod(rem, 60000)
+    s, ms3 = divmod(rem, 1000)
+    return f"{h:02d}:{m:02d}:{s:02d}{sep}{ms3:03d}"
+
+
 def parse_webvtt(text: str) -> dict:
     """WebVTT document -> {"cues": [(index, start_ms, end_ms, text)],
     "n_bad": skipped malformed blocks}. Raises ValueError when the WEBVTT

@@ -54,6 +54,7 @@ from .functions import lm as LM
 from .functions import quality_clf as QC
 from .operators import windows as W
 from .operators.extract import extract_pages
+from .operators.rows import map_rows
 from .rules import default_config
 
 
@@ -94,6 +95,25 @@ def spread(df: DataFrame, factor: int = 1) -> DataFrame:
     if df.rdd.getNumPartitions() >= target:
         return df
     return df.repartition(target)
+
+
+def fixture_rows(narrow: DataFrame, fn, ddl: str) -> DataFrame:
+    """narrow(key, value) -> the rows `fn(value)` returns, in the output
+    schema `ddl`, through operators.rows.map_rows. A registry fixture has
+    no bad input, so an exception in `fn` fails the query with its
+    "<Type>: <message>" instead of becoming an error row. The check is a
+    filter: a projection would be pruned once a later operator narrows
+    the output to the columns it reads."""
+    out = map_rows(narrow, fn, ddl + ", error string")
+    ok = F.assert_true(F.col("error").isNull(), F.col("error")).isNull()
+    return out.where(ok).drop("error")
+
+
+def _doc_ids(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(doc_id, did): each document's id as key and as fixture_rows value,
+    spread over one task wave."""
+    ids = spread(load(spark, sf_dir, "documents").select("doc_id"))
+    return ids.select("doc_id", F.col("doc_id").alias("did"))
 
 
 def epoch_seconds(c):
@@ -3367,36 +3387,21 @@ def q_png_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     synthesize a deterministic (4+doc_id%5) x (4+doc_id%3) grayscale
     gradient pixel(x,y) = (doc_id + 7x + 13y) % 256, encode it to actual
     PNG bytes (operators.multimodal.encode_png: IHDR/IDAT/zlib/CRC), decode
-    with the pure-stdlib decoder (decode_png: chunk framing, scanline
-    unfiltering), and emit dimensions + exact integer luma sum. The oracle
-    recomputes the same pixel arithmetic analytically with generate_series
-    — any divergence in framing, filtering, or pixel math fails the hash."""
-    from .operators import multimodal as MM
+    through the decode_image router into the pure-stdlib decoder
+    (decode_png: chunk framing, scanline unfiltering), and emit dimensions
+    + exact integer luma sum. The oracle recomputes the same pixel
+    arithmetic analytically with generate_series — any divergence in
+    framing, filtering, or pixel math fails the hash."""
+    import numpy as np
 
-    docs = spread(load(spark, sf_dir, "documents").select("doc_id"))
+    def row(did):
+        w, h = 4 + did % 5, 4 + did % 3
+        y, x = np.mgrid[0:h, 0:w]
+        arr = ((did + 7 * x + 13 * y) % 256).astype(np.uint8)
+        return [M.decode_image(M.encode_png(arr))]
 
-    def kernel(batches):
-        import numpy as np
-        import pandas as pd
-
-        for pdf in batches:
-            out = {"doc_id": [], "width": [], "height": [],
-                   "channels": [], "luma_sum": []}
-            for doc_id in pdf["doc_id"]:
-                did = int(doc_id)
-                w, h = 4 + did % 5, 4 + did % 3
-                y, x = np.mgrid[0:h, 0:w]
-                arr = ((did + 7 * x + 13 * y) % 256).astype(np.uint8)
-                d = MM.decode_png(MM.encode_png(arr))
-                out["doc_id"].append(did)
-                out["width"].append(d["width"])
-                out["height"].append(d["height"])
-                out["channels"].append(d["channels"])
-                out["luma_sum"].append(d["luma_sum"])
-            yield pd.DataFrame(out)
-
-    return docs.mapInPandas(
-        kernel,
+    return fixture_rows(
+        _doc_ids(spark, sf_dir), row,
         "doc_id long, width int, height int, channels int, luma_sum long",
     ).orderBy("doc_id")
 
@@ -3430,37 +3435,22 @@ def q_jpeg_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     becomes losslessly checkable and the oracle recomputes the sum
     analytically with generate_series. is_progressive pins that the
     payload really contains an SOF2 marker."""
-    from .operators import multimodal as MM
+    import numpy as np
+
     from .operators.jpeg import encode_jpeg_progressive
 
-    docs = spread(load(spark, sf_dir, "documents").select("doc_id"))
+    def row(did):
+        tx, ty = 1 + did % 3, 1 + did % 2
+        tyi, txi = np.mgrid[0:ty, 0:tx]
+        tiles = 78 + 2 * ((did + 3 * txi + 5 * tyi) % 50)
+        arr = np.repeat(np.repeat(tiles, 8, axis=0), 8,
+                        axis=1).astype(np.uint8)
+        payload = encode_jpeg_progressive(arr, quality=50)
+        return [{**M.decode_image(payload),
+                 "is_progressive": b"\xff\xc2" in payload}]
 
-    def kernel(batches):
-        import numpy as np
-        import pandas as pd
-
-        for pdf in batches:
-            out = {"doc_id": [], "width": [], "height": [], "channels": [],
-                   "luma_sum": [], "is_progressive": []}
-            for doc_id in pdf["doc_id"]:
-                did = int(doc_id)
-                tx, ty = 1 + did % 3, 1 + did % 2
-                tyi, txi = np.mgrid[0:ty, 0:tx]
-                tiles = 78 + 2 * ((did + 3 * txi + 5 * tyi) % 50)
-                arr = np.repeat(np.repeat(tiles, 8, axis=0), 8,
-                                axis=1).astype(np.uint8)
-                payload = encode_jpeg_progressive(arr, quality=50)
-                d = MM.decode_image(payload)
-                out["doc_id"].append(did)
-                out["width"].append(d["width"])
-                out["height"].append(d["height"])
-                out["channels"].append(d["channels"])
-                out["luma_sum"].append(d["luma_sum"])
-                out["is_progressive"].append(b"\xff\xc2" in payload)
-            yield pd.DataFrame(out)
-
-    return docs.mapInPandas(
-        kernel,
+    return fixture_rows(
+        _doc_ids(spark, sf_dir), row,
         "doc_id long, width int, height int, channels int, luma_sum long, "
         "is_progressive boolean",
     ).orderBy("doc_id")
@@ -3494,35 +3484,19 @@ def q_webp_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     VP8L is lossless so the oracle recomputes the pixel arithmetic
     analytically — any prefix-code, bit-order, or LZ77 divergence fails
     the hash."""
-    from .operators import multimodal as MM
+    import numpy as np
+
     from .operators.webp import encode_webp
 
-    docs = spread(load(spark, sf_dir, "documents").select("doc_id"))
+    def row(did):
+        w, h = 4 + did % 6, 3 + did % 4
+        y, x = np.mgrid[0:h, 0:w]
+        arr = ((did * 5 + 3 * x + 7 * y) % 256).astype(np.uint8)
+        payload = encode_webp(arr)
+        return [{**M.decode_image(payload), "magic": M.sniff_magic(payload)}]
 
-    def kernel(batches):
-        import numpy as np
-        import pandas as pd
-
-        for pdf in batches:
-            out = {"doc_id": [], "width": [], "height": [], "channels": [],
-                   "luma_sum": [], "magic": []}
-            for doc_id in pdf["doc_id"]:
-                did = int(doc_id)
-                w, h = 4 + did % 6, 3 + did % 4
-                y, x = np.mgrid[0:h, 0:w]
-                arr = ((did * 5 + 3 * x + 7 * y) % 256).astype(np.uint8)
-                payload = encode_webp(arr)
-                d = MM.decode_image(payload)
-                out["doc_id"].append(did)
-                out["width"].append(d["width"])
-                out["height"].append(d["height"])
-                out["channels"].append(d["channels"])
-                out["luma_sum"].append(d["luma_sum"])
-                out["magic"].append(MM.sniff_magic(payload))
-            yield pd.DataFrame(out)
-
-    return docs.mapInPandas(
-        kernel,
+    return fixture_rows(
+        _doc_ids(spark, sf_dir), row,
         "doc_id long, width int, height int, channels int, luma_sum long, "
         "magic string",
     ).orderBy("doc_id")
@@ -3558,34 +3532,16 @@ def q_vp8_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     the decoded value follows a closed form — so the oracle is exact
     arithmetic: any bool-decoder, WHT/DCT, dequant, prediction, or
     partition-table divergence fails the hash."""
-    from .operators import multimodal as MM
     from .operators.vp8 import encode_webp_lossy_flat
 
-    docs = spread(load(spark, sf_dir, "documents").select("doc_id"))
+    def row(did):
+        w, h = 5 + did % 28, 7 + did % 23
+        val = 30 + (did * 13) % 200
+        payload = encode_webp_lossy_flat(val, w, h, nparts=1 << (did % 3))
+        return [{**M.decode_image(payload), "magic": M.sniff_magic(payload)}]
 
-    def kernel(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            out = {"doc_id": [], "width": [], "height": [], "channels": [],
-                   "luma_sum": [], "magic": []}
-            for doc_id in pdf["doc_id"]:
-                did = int(doc_id)
-                w, h = 5 + did % 28, 7 + did % 23
-                val = 30 + (did * 13) % 200
-                payload = encode_webp_lossy_flat(val, w, h,
-                                                 nparts=1 << (did % 3))
-                d = MM.decode_image(payload)
-                out["doc_id"].append(did)
-                out["width"].append(d["width"])
-                out["height"].append(d["height"])
-                out["channels"].append(d["channels"])
-                out["luma_sum"].append(d["luma_sum"])
-                out["magic"].append(MM.sniff_magic(payload))
-            yield pd.DataFrame(out)
-
-    return docs.mapInPandas(
-        kernel,
+    return fixture_rows(
+        _doc_ids(spark, sf_dir), row,
         "doc_id long, width int, height int, channels int, luma_sum long, "
         "magic string",
     ).orderBy("doc_id")
@@ -3619,35 +3575,25 @@ def q_gif_anim_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
     integer luma sums analytically; an LZW, GCE-parse, sampling-grid or
     compositing divergence fails the hash. Partial-frame offsets,
     transparency and disposal 2/3 are pixel-pinned in tests/test_multimodal."""
-    from .operators import multimodal as MM
+    import numpy as np
 
-    docs = spread(load(spark, sf_dir, "documents").select("doc_id"))
+    docs = _doc_ids(spark, sf_dir)
 
-    def synth(batches):
-        import numpy as np
-        import pandas as pd
+    def synth(did):
+        w, h = 4 + did % 5, 3 + did % 4
+        frames = [
+            {"indices": np.full((h, w), (did * 37 + k * 41) % 256, np.uint8),
+             "delay_cs": 3 + k, "disposal": 1}
+            for k in range(2 + did % 4)
+        ]
+        return [{"payload": M.encode_gif_anim(w, h, frames)}]
 
-        for pdf in batches:
-            ids, blobs = [], []
-            for doc_id in pdf["doc_id"]:
-                did = int(doc_id)
-                w, h = 4 + did % 5, 3 + did % 4
-                frames = [
-                    {"indices": np.full((h, w), (did * 37 + k * 41) % 256,
-                                        np.uint8),
-                     "delay_cs": 3 + k, "disposal": 1}
-                    for k in range(2 + did % 4)
-                ]
-                ids.append(did)
-                blobs.append(MM.encode_gif_anim(w, h, frames))
-            yield pd.DataFrame({"doc_id": ids, "payload": blobs})
-
-    # filter BEFORE the opaque mapInPandas: Catalyst cannot push a
+    # filter BEFORE the opaque Python pass: Catalyst cannot push a
     # predicate through it, and the Python GIF-encode dominates this query
     parts = [
-        MM.animation_frames(
-            docs.where(F.col("doc_id") % 3 == rate - 1)
-                .mapInPandas(synth, "doc_id long, payload binary"),
+        M.animation_frames(
+            fixture_rows(docs.where(F.col("doc_id") % 3 == rate - 1), synth,
+                         "doc_id long, payload binary"),
             "doc_id", "payload", sample_rate=rate,
         )
         for rate in (1, 2, 3)
@@ -3686,34 +3632,21 @@ def q_mp4_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     (/root/reference/processing/video_processing/main_processing.py:56-58).
     The oracle recomputes every field analytically; a box-size, version,
     fixed-point, or handler-routing divergence fails the hash."""
-    from .operators import multimodal as MM
+    from .operators.mp4 import make_mp4
 
-    docs = spread(load(spark, sf_dir, "documents").select("doc_id"))
+    def synth(did):
+        return [{"payload": make_mp4(
+            90000 if did % 2 == 0 else 1000, (did * 97 + 7) * 1000,
+            320 + did % 64, 240 + did % 48,
+            video_codec=("avc1", "hvc1", "vp09")[did % 3],
+            audio_codec="mp4a" if did % 2 == 0 else None,
+            major_brand="mp42" if did % 5 == 0 else "isom",
+            media_timescale=600,
+            frame_deltas=[(100 + did % 50, 20 + did % 10)])}]
 
-    def synth(batches):
-        import pandas as pd
-
-        from .operators.mp4 import make_mp4
-
-        for pdf in batches:
-            ids, blobs = [], []
-            for doc_id in pdf["doc_id"]:
-                did = int(doc_id)
-                ts = 90000 if did % 2 == 0 else 1000
-                dur = (did * 97 + 7) * 1000
-                codec = ("avc1", "hvc1", "vp09")[did % 3]
-                ids.append(did)
-                blobs.append(make_mp4(
-                    ts, dur, 320 + did % 64, 240 + did % 48,
-                    video_codec=codec,
-                    audio_codec="mp4a" if did % 2 == 0 else None,
-                    major_brand="mp42" if did % 5 == 0 else "isom",
-                    media_timescale=600,
-                    frame_deltas=[(100 + did % 50, 20 + did % 10)]))
-            yield pd.DataFrame({"doc_id": ids, "payload": blobs})
-
-    blobs = docs.mapInPandas(synth, "doc_id long, payload binary")
-    return MM.media_probe(blobs, "doc_id", "payload").select(
+    blobs = fixture_rows(_doc_ids(spark, sf_dir), synth,
+                         "doc_id long, payload binary")
+    return M.media_probe(blobs, "doc_id", "payload").select(
         F.col("media_id").alias("doc_id"), "major_brand", "timescale",
         "duration_ms", "n_tracks", "video_codec", "audio_codec",
         "width", "height", "n_frames", "fps",
@@ -3753,47 +3686,29 @@ def q_subtitle_cues(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream (/root/reference/processing/ocr.py) — the web ships the same
     video text as caption tracks. A timing-parse, tag-strip, block-split,
     or format-sniff divergence fails the hash."""
-    from .operators.subtitles import subtitle_cues
+    from .operators.subtitles import format_ts, subtitle_cues
 
     docs = spread(load(spark, sf_dir, "documents"))
 
-    def synth(batches):
-        import pandas as pd
+    def synth(v):
+        did = v["doc_id"]
+        sub = (v["text"] or "")[:40]
+        cues = []
+        for k in range(1 + did % 3):
+            start = did * 1000 + k * 2000
+            payload = f"T{did} C{k} <i>x</i> {sub}"
+            if did % 2 == 0:
+                cues.append(f"{format_ts(start)} --> "
+                            f"{format_ts(start + 1500)} align:start\n{payload}")
+            else:
+                cues.append(f"{k + 1}\n{format_ts(start, ',')} --> "
+                            f"{format_ts(start + 1500, ',')}\n{payload}")
+        head = "WEBVTT - generated\n\nNOTE synthetic\n\n" if did % 2 == 0 else ""
+        return [{"doc": head + "\n\n".join(cues) + "\n"}]
 
-        def ts(ms: int, sep: str) -> str:
-            h, rem = divmod(ms, 3600000)
-            m, rem = divmod(rem, 60000)
-            s, ms3 = divmod(rem, 1000)
-            return f"{h:02d}:{m:02d}:{s:02d}{sep}{ms3:03d}"
-
-        for pdf in batches:
-            ids, blobs = [], []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                did = int(doc_id)
-                sub = (text or "")[:40]
-                cues = []
-                for k in range(1 + did % 3):
-                    start = did * 1000 + k * 2000
-                    payload = f"T{did} C{k} <i>x</i> {sub}"
-                    if did % 2 == 0:
-                        cues.append(
-                            f"{ts(start, '.')} --> {ts(start + 1500, '.')}"
-                            f" align:start\n{payload}")
-                    else:
-                        cues.append(
-                            f"{k + 1}\n{ts(start, ',')} --> "
-                            f"{ts(start + 1500, ',')}\n{payload}")
-                if did % 2 == 0:
-                    doc = ("WEBVTT - generated\n\nNOTE synthetic\n\n"
-                           + "\n\n".join(cues) + "\n")
-                else:
-                    doc = "\n\n".join(cues) + "\n"
-                ids.append(did)
-                blobs.append(doc)
-            yield pd.DataFrame({"doc_id": ids, "doc": blobs})
-
-    blobs = docs.select("doc_id", "text").mapInPandas(
-        synth, "doc_id long, doc string")
+    blobs = fixture_rows(
+        docs.select("doc_id", F.struct("doc_id", "text").alias("v")), synth,
+        "doc_id long, doc string")
     return subtitle_cues(blobs, "doc_id", "doc", fmt="auto").select(
         F.col("media_id").alias("doc_id"), "cue_index", "start_ms",
         "end_ms", "text", "n_cues", "n_bad",
@@ -3827,38 +3742,24 @@ def q_subtitle_lang_route(spark: SparkSession, sf_dir: str) -> DataFrame:
     sniff-regexp, preference-rank, tie-break, or timing divergence fails
     the hash. Reference analog: selecting ONE camera/caption feed ahead
     of the OCR stream."""
-    from .operators.subtitles import route_subtitle_tracks
+    from .operators.subtitles import format_ts, route_subtitle_tracks
 
-    docs = spread(load(spark, sf_dir, "documents").select("doc_id"))
     langs = ["en", "fr", "de"]
 
-    def synth(batches):
-        import pandas as pd
+    def track(did, t):
+        lang = langs[(did + t) % 3]
+        cues = []
+        for k in range(1 + did % 2):
+            start = did * 1000 + t * 100000 + k * 2000
+            cues.append(f"{format_ts(start)} --> {format_ts(start + 1500)}\n"
+                        f"T{did} K{t} C{k} {lang}")
+        return {"track_id": t, "doc": f"WEBVTT\nLanguage: {lang}\n\n"
+                + "\n\n".join(cues) + "\n"}
 
-        def ts(ms: int) -> str:
-            h, rem = divmod(ms, 3600000)
-            m, rem = divmod(rem, 60000)
-            s, ms3 = divmod(rem, 1000)
-            return f"{h:02d}:{m:02d}:{s:02d}.{ms3:03d}"
-
-        for pdf in batches:
-            out = {"doc_id": [], "track_id": [], "doc": []}
-            for doc_id in pdf["doc_id"]:
-                did = int(doc_id)
-                for t in range(2 + did % 2):
-                    lang = langs[(did + t) % 3]
-                    cues = []
-                    for k in range(1 + did % 2):
-                        start = did * 1000 + t * 100000 + k * 2000
-                        cues.append(f"{ts(start)} --> {ts(start + 1500)}\n"
-                                    f"T{did} K{t} C{k} {lang}")
-                    out["doc_id"].append(did)
-                    out["track_id"].append(t)
-                    out["doc"].append(f"WEBVTT\nLanguage: {lang}\n\n"
-                                      + "\n\n".join(cues) + "\n")
-            yield pd.DataFrame(out)
-
-    tracks = docs.mapInPandas(synth, "doc_id long, track_id int, doc string")
+    tracks = fixture_rows(
+        _doc_ids(spark, sf_dir),
+        lambda did: [track(did, t) for t in range(2 + did % 2)],
+        "doc_id long, track_id int, doc string")
     return route_subtitle_tracks(
         tracks, "doc_id", "track_id", "doc", ["fr", "en"]).select(
         "media_id", "track_id", "lang", "cue_index", "start_ms", "end_ms",
@@ -3903,38 +3804,27 @@ def q_webp_anim_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle computes with a nested unnest — an ANMF-header, VP8L, blend,
     dispose-rect, or sampling divergence fails the hash. Fractional-alpha
     blending is pinned separately in tests/test_webp.py."""
-    from .operators import multimodal as MM
+    import numpy as np
 
-    docs = spread(load(spark, sf_dir, "documents").select("doc_id"))
+    from .operators.webp import encode_webp_anim
 
-    def synth(batches):
-        import numpy as np
-        import pandas as pd
+    docs = _doc_ids(spark, sf_dir)
 
-        from .operators.webp import encode_webp_anim
-
-        for pdf in batches:
-            ids, blobs = [], []
-            for doc_id in pdf["doc_id"]:
-                did = int(doc_id)
-                h = 3 + did % 4
-                bg = (did * 11) % 256
-                frames = [
-                    {"pixels": np.full((h, 2), (did * 31 + k * 57) % 256,
-                                       np.uint8),
-                     "x": 4 * k, "duration_ms": 10 * k + 5,
-                     "dispose": bool(k % 2)}
-                    for k in range(2 + did % 3)
-                ]
-                ids.append(did)
-                blobs.append(encode_webp_anim(
-                    16, h, frames, bg_bgra=(bg, bg, bg, 255)))
-            yield pd.DataFrame({"doc_id": ids, "payload": blobs})
+    def synth(did):
+        h = 3 + did % 4
+        bg = (did * 11) % 256
+        frames = [
+            {"pixels": np.full((h, 2), (did * 31 + k * 57) % 256, np.uint8),
+             "x": 4 * k, "duration_ms": 10 * k + 5, "dispose": bool(k % 2)}
+            for k in range(2 + did % 3)
+        ]
+        return [{"payload": encode_webp_anim(
+            16, h, frames, bg_bgra=(bg, bg, bg, 255))}]
 
     parts = [
-        MM.webp_animation_frames(
-            docs.where(F.col("doc_id") % 2 == rate - 1)
-                .mapInPandas(synth, "doc_id long, payload binary"),
+        M.webp_animation_frames(
+            fixture_rows(docs.where(F.col("doc_id") % 2 == rate - 1), synth,
+                         "doc_id long, payload binary"),
             "doc_id", "payload", sample_rate=rate,
         )
         for rate in (1, 2)
@@ -3982,37 +3872,20 @@ def q_bmp_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     exactly v, so the oracle recomputes the pixel arithmetic analytically;
     a stride/padding, bottom-up flip, palette, directory-offset, or
     BGR-order divergence fails the hash."""
-    from .operators import multimodal as MM
+    import numpy as np
+
     from .operators.bmp import encode_bmp, encode_ico
 
-    docs = spread(load(spark, sf_dir, "documents").select("doc_id"))
+    def row(did):
+        w, h = 3 + did % 6, 2 + did % 5
+        y, x = np.mgrid[0:h, 0:w]
+        arr = ((did * 7 + 11 * x + 13 * y) % 256).astype(np.uint8)
+        rgb = np.stack([arr] * 3, axis=2)
+        payload = encode_ico([rgb]) if did % 3 == 0 else encode_bmp(rgb)
+        return [{**M.decode_image(payload), "magic": M.sniff_magic(payload)}]
 
-    def kernel(batches):
-        import numpy as np
-        import pandas as pd
-
-        for pdf in batches:
-            out = {"doc_id": [], "width": [], "height": [], "channels": [],
-                   "luma_sum": [], "magic": []}
-            for doc_id in pdf["doc_id"]:
-                did = int(doc_id)
-                w, h = 3 + did % 6, 2 + did % 5
-                y, x = np.mgrid[0:h, 0:w]
-                arr = ((did * 7 + 11 * x + 13 * y) % 256).astype(np.uint8)
-                rgb = np.stack([arr] * 3, axis=2)
-                payload = encode_ico([rgb]) if did % 3 == 0 else \
-                    encode_bmp(rgb)
-                d = MM.decode_image(payload)
-                out["doc_id"].append(did)
-                out["width"].append(d["width"])
-                out["height"].append(d["height"])
-                out["channels"].append(d["channels"])
-                out["luma_sum"].append(d["luma_sum"])
-                out["magic"].append(MM.sniff_magic(payload))
-            yield pd.DataFrame(out)
-
-    return docs.mapInPandas(
-        kernel,
+    return fixture_rows(
+        _doc_ids(spark, sf_dir), row,
         "doc_id long, width int, height int, channels int, luma_sum long, "
         "magic string",
     ).orderBy("doc_id")
@@ -4045,35 +3918,19 @@ def q_tiff_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     dimensions + the exact integer luma sum. TIFF LZW is lossless, so the
     oracle recomputes the pixel arithmetic analytically — an IFD, strip,
     LZW width-schedule, or predictor divergence fails the hash."""
-    from .operators import multimodal as MM
+    import numpy as np
+
     from .operators.tiff import encode_tiff
 
-    docs = spread(load(spark, sf_dir, "documents").select("doc_id"))
+    def row(did):
+        w, h = 3 + did % 5, 2 + did % 6
+        y, x = np.mgrid[0:h, 0:w]
+        arr = ((did * 7 + 11 * x + 13 * y) % 256).astype(np.uint8)
+        payload = encode_tiff(arr, compression="lzw")
+        return [{**M.decode_image(payload), "magic": M.sniff_magic(payload)}]
 
-    def kernel(batches):
-        import numpy as np
-        import pandas as pd
-
-        for pdf in batches:
-            out = {"doc_id": [], "width": [], "height": [], "channels": [],
-                   "luma_sum": [], "magic": []}
-            for doc_id in pdf["doc_id"]:
-                did = int(doc_id)
-                w, h = 3 + did % 5, 2 + did % 6
-                y, x = np.mgrid[0:h, 0:w]
-                arr = ((did * 7 + 11 * x + 13 * y) % 256).astype(np.uint8)
-                payload = encode_tiff(arr, compression="lzw")
-                d = MM.decode_image(payload)
-                out["doc_id"].append(did)
-                out["width"].append(d["width"])
-                out["height"].append(d["height"])
-                out["channels"].append(d["channels"])
-                out["luma_sum"].append(d["luma_sum"])
-                out["magic"].append(MM.sniff_magic(payload))
-            yield pd.DataFrame(out)
-
-    return docs.mapInPandas(
-        kernel,
+    return fixture_rows(
+        _doc_ids(spark, sf_dir), row,
         "doc_id long, width int, height int, channels int, luma_sum long, "
         "magic string",
     ).orderBy("doc_id")
@@ -4104,36 +3961,18 @@ def q_wav_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     encode_wav), decode through decode_wav, and emit the exact integer
     features. PCM is lossless so the oracle recomputes sum|s| and peak
     analytically with generate_series."""
-    from .operators import multimodal as MM
+    import numpy as np
+
     from .operators.audio import decode_wav, encode_wav
 
-    docs = spread(load(spark, sf_dir, "documents").select("doc_id"))
+    def row(did):
+        i = np.arange(100 + did % 50)
+        s = ((did * 31 + i * 17) % 2001 - 1000).astype(np.int16)
+        payload = encode_wav(s, 16000)
+        return [{**decode_wav(payload), "magic": M.sniff_magic(payload)}]
 
-    def kernel(batches):
-        import numpy as np
-        import pandas as pd
-
-        for pdf in batches:
-            out = {"doc_id": [], "n_samples": [], "sample_rate": [],
-                   "channels": [], "peak": [], "abs_sum": [], "magic": []}
-            for doc_id in pdf["doc_id"]:
-                did = int(doc_id)
-                n = 100 + did % 50
-                i = np.arange(n)
-                s = ((did * 31 + i * 17) % 2001 - 1000).astype(np.int16)
-                payload = encode_wav(s, 16000)
-                d = decode_wav(payload)
-                out["doc_id"].append(did)
-                out["n_samples"].append(d["n_samples"])
-                out["sample_rate"].append(d["sample_rate"])
-                out["channels"].append(d["channels"])
-                out["peak"].append(d["peak"])
-                out["abs_sum"].append(d["abs_sum"])
-                out["magic"].append(MM.sniff_magic(payload))
-            yield pd.DataFrame(out)
-
-    return docs.mapInPandas(
-        kernel,
+    return fixture_rows(
+        _doc_ids(spark, sf_dir), row,
         "doc_id long, n_samples long, sample_rate int, channels int, "
         "peak long, abs_sum long, magic string",
     ).orderBy("doc_id")
@@ -4160,36 +3999,21 @@ def q_gif_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     (3+doc_id%7) x (2+doc_id%4) index gradient pixel(x,y) =
     (doc_id*3 + 5x + 11y) % 256, encode to actual GIF89a bytes
     (multimodal.encode_gif: LZW literal codes + periodic CLEARs, global
-    grayscale palette), decode with the pure-stdlib LZW decoder, and emit
-    dimensions + the exact integer luma sum (identity palette -> luma ==
-    index, lossless). Oracle recomputes the pixel arithmetic analytically
-    — an LZW, sub-block framing, or palette divergence fails the hash."""
-    from .operators import multimodal as MM
+    grayscale palette), decode through the decode_image router into the
+    pure-stdlib LZW decoder, and emit dimensions + the exact integer luma
+    sum (identity palette -> luma == index, lossless). Oracle recomputes
+    the pixel arithmetic analytically — an LZW, sub-block framing, or
+    palette divergence fails the hash."""
+    import numpy as np
 
-    docs = spread(load(spark, sf_dir, "documents").select("doc_id"))
+    def row(did):
+        w, h = 3 + did % 7, 2 + did % 4
+        y, x = np.mgrid[0:h, 0:w]
+        arr = ((did * 3 + 5 * x + 11 * y) % 256).astype(np.uint8)
+        return [M.decode_image(M.encode_gif(arr))]
 
-    def kernel(batches):
-        import numpy as np
-        import pandas as pd
-
-        for pdf in batches:
-            out = {"doc_id": [], "width": [], "height": [],
-                   "n_frames": [], "luma_sum": []}
-            for doc_id in pdf["doc_id"]:
-                did = int(doc_id)
-                w, h = 3 + did % 7, 2 + did % 4
-                y, x = np.mgrid[0:h, 0:w]
-                arr = ((did * 3 + 5 * x + 11 * y) % 256).astype(np.uint8)
-                d = MM.decode_gif(MM.encode_gif(arr))
-                out["doc_id"].append(did)
-                out["width"].append(d["width"])
-                out["height"].append(d["height"])
-                out["n_frames"].append(d["n_frames"])
-                out["luma_sum"].append(d["luma_sum"])
-            yield pd.DataFrame(out)
-
-    return docs.mapInPandas(
-        kernel,
+    return fixture_rows(
+        _doc_ids(spark, sf_dir), row,
         "doc_id long, width int, height int, n_frames int, luma_sum long",
     ).orderBy("doc_id")
 
@@ -4261,33 +4085,19 @@ def q_pdf_layout(spark: SparkSession, sf_dir: str) -> DataFrame:
     layout_text and fails the hash."""
     from .operators import layout as LY
 
-    docs = spread(load(spark, sf_dir, "documents").select("doc_id"))
+    def row(did):
+        n_l, n_r = 2 + did % 3, 1 + did % 2
+        boxes = (
+            [{"x": 50.0, "y": 80.0 + 40.0 * i, "w": 100.0, "h": 12.0,
+              "text": f"L{did}.{i}"} for i in range(n_l)]
+            + [{"x": 350.0, "y": 80.0 + 40.0 * i, "w": 100.0, "h": 12.0,
+                "text": f"R{did}.{i}"} for i in range(n_r)]
+        )
+        n, t = LY.reading_order(LY.parse_pdf_real(LY.make_pdf(boxes)))
+        return [{"n_columns": n, "n_boxes": n_l + n_r, "layout_text": t}]
 
-    def kernel(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            out = {"doc_id": [], "n_columns": [], "n_boxes": [],
-                   "layout_text": []}
-            for doc_id in pdf["doc_id"]:
-                did = int(doc_id)
-                n_l, n_r = 2 + did % 3, 1 + did % 2
-                boxes = (
-                    [{"x": 50.0, "y": 80.0 + 40.0 * i, "w": 100.0, "h": 12.0,
-                      "text": f"L{did}.{i}"} for i in range(n_l)]
-                    + [{"x": 350.0, "y": 80.0 + 40.0 * i, "w": 100.0, "h": 12.0,
-                        "text": f"R{did}.{i}"} for i in range(n_r)]
-                )
-                blob = LY.make_pdf(boxes)
-                n, t = LY.reading_order(LY.parse_pdf_real(blob))
-                out["doc_id"].append(did)
-                out["n_columns"].append(n)
-                out["n_boxes"].append(n_l + n_r)
-                out["layout_text"].append(t)
-            yield pd.DataFrame(out)
-
-    return docs.mapInPandas(
-        kernel,
+    return fixture_rows(
+        _doc_ids(spark, sf_dir), row,
         "doc_id long, n_columns int, n_boxes int, layout_text string",
     ).orderBy("doc_id")
 
@@ -4323,33 +4133,20 @@ def q_pdf_winansi(spark: SparkSession, sf_dir: str) -> DataFrame:
     text regression fails the hash byte-exactly."""
     from .operators import layout as LY
 
-    docs = spread(load(spark, sf_dir, "documents").select("doc_id"))
+    def row(did):
+        # equal-length lines: the parser's width estimate is per-char, so
+        # equal lengths keep x-centers aligned and the valley split sees
+        # one column
+        lines = [f"Café “€{did % 10}”™", f"œuvre Š{did % 7}—ž"]
+        boxes = [{"x": 50.0, "y": 80.0 + 40.0 * i, "w": 100.0, "h": 12.0,
+                  "text": t} for i, t in enumerate(lines)]
+        blob = LY.make_pdf(boxes, encoding="winansi")
+        _n, t = LY.reading_order(LY.parse_pdf_real(blob))
+        return [{"n_boxes": len(boxes), "layout_text": t}]
 
-    def kernel(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            out = {"doc_id": [], "n_boxes": [], "layout_text": []}
-            for doc_id in pdf["doc_id"]:
-                did = int(doc_id)
-                # equal-length lines: the parser's width estimate is
-                # per-char, so equal lengths keep x-centers aligned and
-                # the valley split sees one column
-                lines = [
-                    f"Café “€{did % 10}”™",
-                    f"œuvre Š{did % 7}—ž",
-                ]
-                boxes = [{"x": 50.0, "y": 80.0 + 40.0 * i, "w": 100.0,
-                          "h": 12.0, "text": t} for i, t in enumerate(lines)]
-                blob = LY.make_pdf(boxes, encoding="winansi")
-                _n, t = LY.reading_order(LY.parse_pdf_real(blob))
-                out["doc_id"].append(did)
-                out["n_boxes"].append(len(boxes))
-                out["layout_text"].append(t)
-            yield pd.DataFrame(out)
-
-    return docs.mapInPandas(
-        kernel, "doc_id long, n_boxes int, layout_text string"
+    return fixture_rows(
+        _doc_ids(spark, sf_dir), row,
+        "doc_id long, n_boxes int, layout_text string",
     ).orderBy("doc_id")
 
 
@@ -4487,7 +4284,7 @@ def q_sitemap_parse(spark: SparkSession, sf_dir: str) -> DataFrame:
     and the oracle recomputes them with a generate_series join. Exercises
     the no-ElementTree XML lexer, the gunzip cap path, and the kernel-side
     explode."""
-    import pyarrow as pa
+    import gzip
 
     from .operators.sitemap import sitemap_entries
 
@@ -4514,25 +4311,14 @@ def q_sitemap_parse(spark: SparkSession, sf_dir: str) -> DataFrame:
         seg(0), seg(1), seg(2), F.lit("</urlset>"))
     pages = docs.select(
         F.concat(F.lit("sm://"), sid).alias("url"),
-        xml.cast("binary").alias("xml"),
-        (F.col("doc_id") % 5 == 0).alias("gz"))
+        F.struct(xml.cast("binary").alias("xml"),
+                 (F.col("doc_id") % 5 == 0).alias("gz")).alias("v"))
 
-    def gz_kernel(batches):
-        import gzip as _gzip
+    def gz(v):
+        return [{"xml": gzip.compress(v["xml"], 6, mtime=0) if v["gz"]
+                 else v["xml"]}]
 
-        for rb in batches:
-            if rb.num_rows == 0:
-                continue
-            out = [
-                _gzip.compress(bytes(x), 6, mtime=0) if g else bytes(x)
-                for x, g in zip(rb.column(1).to_pylist(),
-                                rb.column(2).to_pylist())
-            ]
-            yield pa.RecordBatch.from_arrays(
-                [rb.column(0), pa.array(out, pa.binary())],
-                names=["url", "xml"])
-
-    res = sitemap_entries(pages.mapInArrow(gz_kernel, "url string, xml binary"))
+    res = sitemap_entries(fixture_rows(pages, gz, "url string, xml binary"))
     return res.select("url", "kind", "ordinal", "loc", "lastmod",
                       "changefreq", "priority").orderBy("url", "ordinal")
 

@@ -182,8 +182,8 @@ def stream_markdown_pages(spark: SparkSession, input_path: str,
                           available_now: bool = True,
                           max_files_per_trigger: int | None = None):
     """Streaming twin of operators.markdown.to_markdown_pages: the
-    converter kernel is a pure function of the Arrow batch (stateless
-    mapInPandas), so it runs unchanged under readStream."""
+    converter is a pure per-row function run through map_rows (one
+    stateless mapInArrow pass), so it runs unchanged under readStream."""
     from ..operators.markdown import to_markdown_pages
 
     pages = read_file_stream(spark, input_path,

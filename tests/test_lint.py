@@ -9,6 +9,7 @@ Session-wide conf writes belong to session.py alone.
 
 from __future__ import annotations
 
+import re
 from pathlib import Path
 
 PKG = Path(__file__).resolve().parent.parent / "space_launch_telemetry_analyzer_spark"
@@ -36,3 +37,24 @@ def test_session_conf_set_only_in_session_module():
            if p.name != "session.py"
            and any(s in p.read_text(encoding="utf-8") for s in ("conf.set(", "conf.unset("))]
     assert bad == [], f"session-wide conf writes outside session.py: {bad}"
+
+
+def test_registry_has_no_batch_kernels():
+    """The registry's fixture queries run plain row functions through
+    queries.fixture_rows (map_rows); none builds its own batch loop."""
+    src = (PKG / "queries.py").read_text(encoding="utf-8")
+    bad = [s for s in ("mapInPandas(", "mapInArrow(") if s in src]
+    bad += re.findall(r"def \w+\(batches", src)
+    assert bad == [], f"batch kernel in queries.py: {bad}"
+
+
+def test_mapinpandas_only_where_allowed():
+    """mapInPandas stays where no row-level error channel fits:
+    sample_frames (no `error` column), the synthetic page source and the
+    file-level WARC readers. Everything else goes through map_rows."""
+    allowed = {"operators/multimodal.py", "sources/pages.py", "sources/warc.py"}
+    used = {p.relative_to(PKG).as_posix() for p in _sources()
+            if "mapInPandas(" in p.read_text(encoding="utf-8")}
+    assert used <= allowed, f"mapInPandas outside {sorted(allowed)}: {sorted(used - allowed)}"
+    mm = (PKG / "operators/multimodal.py").read_text(encoding="utf-8")
+    assert mm.count("mapInPandas(") == 1, "multimodal: only sample_frames may use mapInPandas"

@@ -1,9 +1,11 @@
 """The row-level error channel (operators/rows.py map_rows): fan-out,
-NULL-filled columns, the exception row and the driver-side DDL check."""
+NULL-filled columns, the exception row and the driver-side DDL check;
+and queries.fixture_rows, which turns an error row into a failed query."""
 
 from __future__ import annotations
 
 import pytest
+from pyspark.sql import functions as F
 
 from space_launch_telemetry_analyzer_spark.operators.rows import html_text, map_rows
 
@@ -85,3 +87,41 @@ def test_non_pair_frame_is_rejected(spark):
 def test_html_text_decodes_binary_and_passes_strings():
     assert html_text(b"caf\xc3\xa9 \xff") == "café �"
     assert html_text("<p>x</p>") == "<p>x</p>"
+
+
+def _raises_at(bad):
+    def synth(did):
+        if did == bad:
+            raise ValueError(f"no fixture for doc {did}")
+        return [{"payload": b"not an mp4"}]
+    return synth
+
+
+def _doc_pairs(spark):
+    return spark.range(12).select(F.col("id").alias("doc_id"), F.col("id").alias("did"))
+
+
+def test_fixture_rows_drops_the_error_column(spark):
+    from space_launch_telemetry_analyzer_spark.queries import fixture_rows
+
+    out = fixture_rows(_doc_pairs(spark), _raises_at(-1), "doc_id long, payload binary")
+    assert out.columns == ["doc_id", "payload"]
+    assert sorted(tuple(r) for r in out.collect()) == [
+        (i, bytearray(b"not an mp4")) for i in range(12)]
+
+
+def test_fixture_rows_fails_the_query_on_a_raised_row(spark):
+    """A registry fixture has no bad input: an exception in its row
+    function fails collect() with the exception's type and message, both
+    on the helper's own output and after an operator that narrows it to
+    the columns it reads (the check is a filter, which column pruning
+    cannot drop)."""
+    from space_launch_telemetry_analyzer_spark.operators.multimodal import media_probe
+    from space_launch_telemetry_analyzer_spark.queries import fixture_rows
+
+    blobs = fixture_rows(_doc_pairs(spark), _raises_at(7), "doc_id long, payload binary")
+    with pytest.raises(Exception, match="ValueError: no fixture for doc 7"):
+        blobs.collect()
+    probed = media_probe(blobs, "doc_id", "payload").select("media_id")
+    with pytest.raises(Exception, match="ValueError: no fixture for doc 7"):
+        probed.collect()
