@@ -8,7 +8,7 @@ DOM extraction over a Common-Crawl-style table of web pages
 (url, warc_ts, html, text, lang), built Spark-first:
 
 - declarative DataFrame plans (Catalyst handles pushdown/pruning/folding),
-- one vectorized Arrow `mapInPandas` kernel for DOM extraction (the
+- one vectorized Arrow `mapInArrow` kernel for DOM extraction (the
   EasyOCR-analog slow path; everything else is JVM-side expressions),
 - window functions for the validation / derived-metric layer,
 - url-hash bucketing + host salting for skew, lineage/metrics rows per

@@ -17,6 +17,7 @@ one equi-join shuffle keyed on (band_id, band_hash).
 
 from __future__ import annotations
 
+from py4j.protocol import Py4JJavaError
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -153,17 +154,18 @@ _BANDED_CACHES: list[DataFrame] = []
 def release_banded_caches() -> int:
     """Unpersist every banded frame cached by minhash_lsh_candidates; returns
     how many were released. Call after candidate pairs are materialized.
-    Frames left over from a STOPPED session can't (and don't need to) be
-    unpersisted — their JVM state is gone with the session — so failures are
-    swallowed and the registry is always drained."""
-    n = len(_BANDED_CACHES)
-    while _BANDED_CACHES:
-        df = _BANDED_CACHES.pop()
+    The registry is drained first, so it is empty even when a release
+    fails. A frame left over from a STOPPED session raises Py4JJavaError
+    (the JVM's block manager is gone) and needs no release: its storage
+    went with the session. Any other failure propagates."""
+    frames = list(_BANDED_CACHES)
+    _BANDED_CACHES.clear()
+    for df in frames:
         try:
             df.unpersist()
-        except Exception:
-            pass  # stopped/stale session: storage already released with it
-    return n
+        except Py4JJavaError:
+            pass  # stopped session: storage already released with it
+    return len(frames)
 
 
 def minhash_lsh_candidates(

@@ -55,7 +55,7 @@ from typing import Iterator
 
 import pandas as pd
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.parse import extract_single_value, extract_time, convert_measurement
@@ -477,6 +477,13 @@ EXTRACT_OUTPUT_DDL = (
 )
 
 
+def url_bucket(url: Column, n_buckets: int) -> Column:
+    """The url-hash bucket, pmod(xxhash64(url), n_buckets) as int: uniform
+    regardless of host skew. extract_pages stamps it on every result and
+    plans.pipeline.with_bucket lays pages out by it."""
+    return F.pmod(F.xxhash64(url), F.lit(n_buckets)).cast("int")
+
+
 def extract_pages(
     pages: DataFrame,
     cfg: RuleConfig | None = None,
@@ -502,7 +509,7 @@ def extract_pages(
         F.col("url"),
         (F.col("warc_ts") if "warc_ts" in pages.columns else F.lit(None).cast("timestamp")).alias("warc_ts"),
         F.col("html"),
-        F.pmod(F.xxhash64(F.col("url")), F.lit(n_buckets)).cast("int").alias("bucket"),
+        url_bucket(F.col("url"), n_buckets).alias("bucket"),
     ]
     if has_idx:
         cols.append(F.col(row_idx_col).cast("long").alias("__row_idx"))

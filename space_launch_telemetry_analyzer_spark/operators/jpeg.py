@@ -28,6 +28,8 @@ import struct
 
 import numpy as np
 
+from .bits import PrefixCode
+
 # ---------------------------------------------------------------------------
 # ITU-T T.81 constants (written literally from the spec, Annex K)
 # ---------------------------------------------------------------------------
@@ -124,32 +126,16 @@ def _idct2(coef: np.ndarray) -> np.ndarray:
 # ---------------------------------------------------------------------------
 
 
-def _build_decode_table(bits: list[int], vals: list[int]) -> dict[tuple[int, int], int]:
-    """(code_length, code) -> symbol, canonical T.81 assignment."""
-    table: dict[tuple[int, int], int] = {}
-    code = 0
-    k = 0
-    for length in range(1, 17):
-        for _ in range(bits[length - 1]):
-            table[(length, code)] = vals[k]
-            code += 1
-            k += 1
-        code <<= 1
-    return table
+def _build_decode_table(bits: list[int], vals: list[int]) -> PrefixCode:
+    """T.81 BITS (code counts per length 1..16) and HUFFVAL -> the
+    canonical code, symbols assigned in HUFFVAL order."""
+    lengths = [ln for ln in range(1, 17) for _ in range(bits[ln - 1])]
+    return PrefixCode(zip(lengths, vals))
 
 
 def _build_encode_table(bits: list[int], vals: list[int]) -> dict[int, tuple[int, int]]:
     """symbol -> (code, code_length)."""
-    out: dict[int, tuple[int, int]] = {}
-    code = 0
-    k = 0
-    for length in range(1, 17):
-        for _ in range(bits[length - 1]):
-            out[vals[k]] = (code, length)
-            code += 1
-            k += 1
-        code <<= 1
-    return out
+    return _build_decode_table(bits, vals).codes
 
 
 class _BitReaderMSB:
@@ -213,14 +199,13 @@ class _BitReaderMSB:
         return None
 
 
-def _decode_huff(br: _BitReaderMSB, table: dict[tuple[int, int], int]) -> int:
-    code = 0
-    for length in range(1, 17):
-        code = (code << 1) | br.read_bit()
-        sym = table.get((length, code))
-        if sym is not None:
-            return sym
-    raise ValueError("invalid JPEG Huffman code")
+def _mcu_grid(frame) -> tuple[int, int, int, int]:
+    """(max h sampling, max v sampling, MCUs across, MCUs down) of a frame
+    (T.81 A.2.4: an MCU covers 8*hmax x 8*vmax pixels)."""
+    _, h, w, comps = frame
+    hmax = max(c["h"] for c in comps)
+    vmax = max(c["v"] for c in comps)
+    return hmax, vmax, -(-w // (8 * hmax)), -(-h // (8 * vmax))
 
 
 def _extend(v: int, t: int) -> int:
@@ -243,8 +228,8 @@ def decode_jpeg(payload: bytes, return_luma: bool = False) -> dict:
         raise ValueError("not a JPEG: missing SOI")
     pos = 2
     qtables: dict[int, np.ndarray] = {}
-    dc_tables: dict[int, dict] = {}
-    ac_tables: dict[int, dict] = {}
+    dc_tables: dict[int, PrefixCode] = {}
+    ac_tables: dict[int, PrefixCode] = {}
     frame = None  # (precision, h, w, comps)
     restart_interval = 0
     progressive = False
@@ -318,10 +303,7 @@ def decode_jpeg(payload: bytes, return_luma: bool = False) -> dict:
             frame = (prec, h, w, comps)
             if marker == 0xC2:
                 progressive = True
-                hmax = max(c["h"] for c in comps)
-                vmax = max(c["v"] for c in comps)
-                mcux = -(-w // (8 * hmax))
-                mcuy = -(-h // (8 * vmax))
+                _, _, mcux, mcuy = _mcu_grid(frame)
                 coefs = {
                     c["id"]: np.zeros(
                         (mcuy * c["v"], mcux * c["h"], 64), dtype=np.int32)
@@ -371,10 +353,7 @@ def decode_jpeg(payload: bytes, return_luma: bool = False) -> dict:
 def _decode_scan(payload, pos, frame, scan, qtables, dc_tables, ac_tables,
                  restart_interval, return_luma=False) -> dict:
     _, h, w, comps = frame
-    hmax = max(c["h"] for c in comps)
-    vmax = max(c["v"] for c in comps)
-    mcux = -(-w // (8 * hmax))
-    mcuy = -(-h // (8 * vmax))
+    hmax, vmax, mcux, mcuy = _mcu_grid(frame)
     by_id = {c["id"]: c for c in comps}
     order = []
     for cs, td, ta in scan:
@@ -407,13 +386,13 @@ def _decode_scan(payload, pos, frame, scan, qtables, dc_tables, ac_tables,
                 for vy in range(c["v"]):
                     for vx in range(c["h"]):
                         zz = np.zeros(64, dtype=np.int32)
-                        t = _decode_huff(br, dct)
+                        t = dct.decode(br)
                         diff = _extend(br.read_bits(t), t)
                         pred[c["id"]] += diff
                         zz[0] = pred[c["id"]]
                         k = 1
                         while k < 64:
-                            rs = _decode_huff(br, act)
+                            rs = act.decode(br)
                             r, s = rs >> 4, rs & 0x0F
                             if s == 0:
                                 if r == 15:
@@ -473,9 +452,8 @@ def _decode_scan(payload, pos, frame, scan, qtables, dc_tables, ac_tables,
 def _nonint_grid(frame, c) -> tuple[int, int]:
     """Block grid of one component in a NON-interleaved scan (T.81 A.2.2:
     ceil(ceil(dim * sampling / max_sampling) / 8), no MCU padding)."""
-    _, h, w, comps = frame
-    hmax = max(cc["h"] for cc in comps)
-    vmax = max(cc["v"] for cc in comps)
+    _, h, w, _ = frame
+    hmax, vmax, _, _ = _mcu_grid(frame)
     cw = -(-w * c["h"] // hmax)
     ch = -(-h * c["v"] // vmax)
     return -(-ch // 8), -(-cw // 8)
@@ -497,11 +475,8 @@ def _decode_prog_scan(payload, pos, frame, scan, spectral, coefs,
     """Decode one progressive scan into coefs; returns the payload offset
     of the next marker's 0xFF."""
     ss, se, ah, al = spectral
-    _, h, w, comps = frame
-    hmax = max(c["h"] for c in comps)
-    vmax = max(c["v"] for c in comps)
-    mcux = -(-w // (8 * hmax))
-    mcuy = -(-h // (8 * vmax))
+    comps = frame[3]
+    _, _, mcux, mcuy = _mcu_grid(frame)
     by_id = {c["id"]: c for c in comps}
     order = []
     for cs, td, ta in scan:
@@ -545,7 +520,7 @@ def _decode_prog_scan(payload, pos, frame, scan, spectral, coefs,
         def dc_block(c, by_, bx_):
             zz = coefs[c["id"]][by_, bx_]
             if ah == 0:
-                t = _decode_huff(br, tables[c["id"]])
+                t = tables[c["id"]].decode(br)
                 diff = _extend(br.read_bits(t), t)
                 pred[c["id"]] += diff
                 zz[0] = pred[c["id"]] << al
@@ -589,7 +564,7 @@ def _decode_prog_scan(payload, pos, frame, scan, spectral, coefs,
                         continue
                     k = ss
                     while k <= se:
-                        rs = _decode_huff(br, act)
+                        rs = act.decode(br)
                         r, s = rs >> 4, rs & 0x0F
                         if s == 0:
                             if r == 15:
@@ -610,7 +585,7 @@ def _decode_prog_scan(payload, pos, frame, scan, spectral, coefs,
                     k = ss
                     if eobrun == 0:
                         while k <= se:
-                            rs = _decode_huff(br, act)
+                            rs = act.decode(br)
                             r, s = rs >> 4, rs & 0x0F
                             if s == 0:
                                 if r < 15:
@@ -661,8 +636,7 @@ def _decode_prog_scan(payload, pos, frame, scan, spectral, coefs,
 
 def _finish_progressive(frame, coefs, qtables, return_luma=False) -> dict:
     _, h, w, comps = frame
-    hmax = max(c["h"] for c in comps)
-    vmax = max(c["v"] for c in comps)
+    hmax, vmax, _, _ = _mcu_grid(frame)
     full = []
     for c in comps:
         q = qtables.get(c["tq"])

@@ -32,7 +32,7 @@ from __future__ import annotations
 import hashlib
 import struct as _struct
 import zlib
-from typing import Iterator
+from typing import Iterator, NamedTuple
 
 import numpy as np
 import pandas as pd
@@ -40,6 +40,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .bits import LSBReader, LSBWriter
 from .rows import map_rows
 
 MEDIA_META_DDL = (
@@ -316,30 +317,6 @@ def encode_png(pixels: "np.ndarray") -> bytes:
 # ---------------------------------------------------------------------------
 
 
-class _BitReader:
-    """LSB-first bit reader over concatenated GIF data sub-blocks."""
-
-    __slots__ = ("data", "acc", "nbits", "pos")
-
-    def __init__(self, data: bytes):
-        self.data = data
-        self.acc = 0
-        self.nbits = 0
-        self.pos = 0
-
-    def read(self, n: int) -> int:
-        while self.nbits < n:
-            if self.pos >= len(self.data):
-                raise ValueError("GIF LZW stream exhausted")
-            self.acc |= self.data[self.pos] << self.nbits
-            self.pos += 1
-            self.nbits += 8
-        v = self.acc & ((1 << n) - 1)
-        self.acc >>= n
-        self.nbits -= n
-        return v
-
-
 def _gif_subblocks(payload: bytes, pos: int) -> tuple[bytes, int]:
     """Concatenate data sub-blocks starting at pos; returns (data, new_pos
     past the 0 terminator)."""
@@ -361,7 +338,7 @@ def _lzw_decode(data: bytes, min_code_size: int, n_pixels: int) -> bytearray:
     """GIF-variant LZW: variable code width, CLEAR/END codes, table reset."""
     clear = 1 << min_code_size
     end = clear + 1
-    br = _BitReader(data)
+    br = LSBReader(data)
     out = bytearray()
     base = [bytes((i,)) for i in range(clear)] + [b"", b""]
     table: list[bytes] = []
@@ -396,86 +373,118 @@ def _lzw_decode(data: bytes, min_code_size: int, n_pixels: int) -> bytearray:
 _GIF_INTERLACE_PASSES = ((0, 8), (4, 8), (2, 4), (1, 2))
 
 
+class _GifFrame(NamedTuple):
+    left: int
+    top: int
+    width: int
+    height: int
+    interlaced: bool
+    palette: "np.ndarray | None"  # (n, 3) uint8: local table, else global
+    min_code_size: int
+    data: bytes  # the image's LZW sub-blocks, concatenated
+    gce: tuple | None  # (disposal, delay_cs, transparent index | None)
+
+
+def _gif_color_table(payload: bytes, pos: int, packed: int,
+                     which: str) -> tuple["np.ndarray | None", int]:
+    """The color table a packed-fields byte announces at pos, as (n, 3)
+    uint8, and the offset past it."""
+    if not packed & 0x80:
+        return None, pos
+    n = 2 << (packed & 0x07)
+    table = payload[pos:pos + 3 * n]
+    if len(table) < 3 * n:
+        raise ValueError(f"truncated GIF {which} color table")
+    return np.frombuffer(table, dtype=np.uint8).reshape(n, 3), pos + 3 * n
+
+
+def _gif_walk(payload: bytes):
+    """Check a GIF's header and read its global color table; returns
+    (screen_w, screen_h, bg_index, global_table, frames), where `frames`
+    walks the block stream lazily and yields one _GifFrame per image
+    descriptor. Extensions are skipped; a Graphic Control Extension
+    attaches to the next frame. Structural errors raise ValueError when
+    the walk reaches them."""
+    if payload[:6] not in (b"GIF87a", b"GIF89a"):
+        raise ValueError("not a GIF: bad signature")
+    if len(payload) < 13:
+        raise ValueError("truncated GIF header")
+    sw, sh = _struct.unpack_from("<HH", payload, 6)
+    gct, pos = _gif_color_table(payload, 13, payload[10], "global")
+    return sw, sh, payload[11], gct, _gif_blocks(payload, pos, gct)
+
+
+def _gif_blocks(payload: bytes, pos: int, gct) -> Iterator[_GifFrame]:
+    gce = None
+    while pos < len(payload):
+        b = payload[pos]
+        pos += 1
+        if b == 0x3B:  # trailer
+            return
+        if b == 0x21:  # extension: label + sub-blocks
+            if pos >= len(payload):
+                raise ValueError("truncated GIF extension")
+            label = payload[pos]
+            data, pos = _gif_subblocks(payload, pos + 1)
+            if label == 0xF9 and len(data) >= 4:
+                gce = ((data[0] >> 2) & 0x07, data[1] | (data[2] << 8),
+                       data[3] if data[0] & 0x01 else None)
+            continue
+        if b != 0x2C:
+            raise ValueError(f"unknown GIF block 0x{b:02x}")
+        if pos + 9 > len(payload):
+            raise ValueError("truncated GIF image descriptor")
+        left, top, w, h = _struct.unpack_from("<HHHH", payload, pos)
+        ipacked = payload[pos + 8]
+        lct, pos = _gif_color_table(payload, pos + 9, ipacked, "local")
+        if pos >= len(payload):
+            raise ValueError("truncated GIF image data")
+        mcs = payload[pos]
+        data, pos = _gif_subblocks(payload, pos + 1)
+        yield _GifFrame(left, top, w, h, bool(ipacked & 0x40),
+                        gct if lct is None else lct, mcs, data, gce)
+        gce = None
+
+
+def _gif_pixels(fr: _GifFrame) -> tuple[np.ndarray, np.ndarray]:
+    """A frame's (h, w) palette indices and (h, w, 3) uint8 colors: LZW,
+    underrun check, interlace reordering, palette lookup (indices past
+    the table clamp to its last entry)."""
+    w, h = fr.width, fr.height
+    if w == 0 or h == 0:
+        raise ValueError("zero-dimension GIF frame")
+    idx = _lzw_decode(fr.data, fr.min_code_size, w * h)
+    if len(idx) < w * h:
+        raise ValueError("GIF frame underruns declared dimensions")
+    arr = np.frombuffer(bytes(idx[: w * h]), dtype=np.uint8).reshape(h, w)
+    if fr.interlaced:  # rows arrive in 4 passes
+        order = [y for start, step in _GIF_INTERLACE_PASSES
+                 for y in range(start, h, step)]
+        de = np.empty_like(arr)
+        de[np.array(order)] = arr
+        arr = de
+    pal = fr.palette
+    if pal is None:
+        raise ValueError("GIF frame without any color table")
+    return arr, pal[np.minimum(arr, len(pal) - 1)]
+
+
 def decode_gif(payload: bytes) -> dict:
     """Real pure-stdlib GIF decode: first frame -> palette-mapped RGB with
     the same feature contract as decode_png (dimensions, channels=3,
     Rec.601 mean/sum luma, 4x4 block-mean grid), plus `n_frames` counting
     every image descriptor (animations). Handles 87a/89a, global and local
     color tables, interlaced frames, and skips extensions."""
-    if payload[:6] not in (b"GIF87a", b"GIF89a"):
-        raise ValueError("not a GIF: bad signature")
-    if len(payload) < 13:
-        raise ValueError("truncated GIF header")
-    packed = payload[10]
-    pos = 13
-    gct = None
-    if packed & 0x80:
-        n = 2 << (packed & 0x07)
-        gct = payload[pos:pos + 3 * n]
-        if len(gct) < 3 * n:
-            raise ValueError("truncated GIF global color table")
-        pos += 3 * n
-
-    first = None  # (w, h, index_array)
+    *_, frames = _gif_walk(payload)
+    rgb = None
     n_frames = 0
-    while pos < len(payload):
-        b = payload[pos]
-        pos += 1
-        if b == 0x3B:  # trailer
-            break
-        if b == 0x21:  # extension: label + sub-blocks
-            pos += 1
-            _, pos = _gif_subblocks(payload, pos)
-            continue
-        if b != 0x2C:
-            raise ValueError(f"unknown GIF block 0x{b:02x}")
-        if pos + 9 > len(payload):
-            raise ValueError("truncated GIF image descriptor")
-        w = payload[pos + 4] | (payload[pos + 5] << 8)
-        h = payload[pos + 6] | (payload[pos + 7] << 8)
-        ipacked = payload[pos + 8]
-        pos += 9
-        lct = None
-        if ipacked & 0x80:
-            n = 2 << (ipacked & 0x07)
-            lct = payload[pos:pos + 3 * n]
-            if len(lct) < 3 * n:
-                raise ValueError("truncated GIF local color table")
-            pos += 3 * n
-        if pos >= len(payload):
-            raise ValueError("truncated GIF image data")
-        mcs = payload[pos]
-        pos += 1
-        data, pos = _gif_subblocks(payload, pos)
+    for fr in frames:
         n_frames += 1
-        if first is None:
-            if w == 0 or h == 0:
-                raise ValueError("zero-dimension GIF frame")
-            idx = _lzw_decode(data, mcs, w * h)
-            if len(idx) < w * h:
-                raise ValueError("GIF frame underruns declared dimensions")
-            arr = np.frombuffer(bytes(idx[: w * h]), dtype=np.uint8).reshape(h, w)
-            if ipacked & 0x40:  # interlaced: rows arrive in 4 passes
-                order = [y for start, step in _GIF_INTERLACE_PASSES
-                         for y in range(start, h, step)]
-                de = np.empty_like(arr)
-                de[np.array(order)] = arr
-                arr = de
-            pal = lct if lct is not None else gct
-            if pal is None:
-                raise ValueError("GIF frame without any color table")
-            first = (w, h, arr, pal)
-
-    if first is None:
+        if rgb is None:
+            _, rgb = _gif_pixels(fr)
+    if rgb is None:
         raise ValueError("GIF contains no image frame")
-    w, h, arr, pal = first
-    p = np.frombuffer(pal, dtype=np.uint8)
-    p = p[: (len(p) // 3) * 3].reshape(-1, 3)
-    if len(p) == 0:
-        raise ValueError("GIF color table empty")
-    rgb = p[np.minimum(arr, len(p) - 1)].astype(np.float64)
-    luma = rgb @ REC601
-    out = luma_features(luma, 3)
+    out = luma_features(rgb.astype(np.float64) @ REC601, 3)
     out["n_frames"] = int(n_frames)
     return out
 
@@ -509,31 +518,18 @@ def _gif_lzw_image_data(arr: "np.ndarray") -> bytes:
     for one (h, w) uint8 index frame (the 'uncompressed GIF' technique —
     larger output, bit-exact indices). Shared by encode_gif and
     encode_gif_anim so the single- and multi-frame sinks cannot drift."""
-    br_out = bytearray()
-    acc = 0
-    nbits = 0
-
-    def emit(code: int) -> None:
-        nonlocal acc, nbits
-        acc |= code << nbits
-        nbits += 9
-        while nbits >= 8:
-            br_out.append(acc & 0xFF)
-            acc >>= 8
-            nbits -= 8
-
+    bw = LSBWriter()
     CLEAR, END = 256, 257
-    emit(CLEAR)
+    bw.write(CLEAR, 9)
     flat = np.ascontiguousarray(arr, dtype=np.uint8).reshape(-1)
     for i, v in enumerate(flat):
-        emit(int(v))
+        bw.write(int(v), 9)
         # decoder table grows by one per literal after the first; reset
         # before the code width would have to widen past 9 bits
         if (i + 1) % 253 == 0:
-            emit(CLEAR)
-    emit(END)
-    if nbits:
-        br_out.append(acc & 0xFF)
+            bw.write(CLEAR, 9)
+    bw.write(END, 9)
+    br_out = bw.finish()
 
     out = bytearray((8,))  # min LZW code size
     for off in range(0, len(br_out), 255):
@@ -590,6 +586,42 @@ def encode_gif_anim(
     return bytes(out)
 
 
+class FrameGrid:
+    """The sampled frame indices ``range(start_frame, end_frame or n,
+    sample_rate)[:max_frames]`` of an animation with n frames, the frame
+    grid of the reference's video iteration
+    (processing/video_processing/batch_processing.py:31 there:
+    ``range(0, frame_count, sample_rate)`` with the start/end/max knobs of
+    main_processing.iterate_through_frames). Pure arithmetic, never a
+    materialized index set: `stop` is exclusive and `last` is the largest
+    on-grid index below it (None = sample to the end of the file)."""
+
+    __slots__ = ("start", "step", "stop", "last")
+
+    def __init__(self, sample_rate: int, start_frame: int | None,
+                 end_frame: int | None, max_frames: int | None):
+        if sample_rate < 1:
+            raise ValueError("sample_rate must be >= 1")
+        self.start = start = start_frame or 0
+        self.step = sample_rate
+        self.stop = self.last = None
+        if end_frame is not None or max_frames is not None:
+            stop = end_frame if end_frame is not None else (1 << 31)
+            if max_frames is not None:
+                stop = min(stop, start + max_frames * sample_rate)
+            self.stop = stop
+            self.last = (start + ((stop - 1 - start) // sample_rate)
+                         * sample_rate) if stop > start else -1
+
+    def sampled(self, fi: int) -> bool:
+        return (fi >= self.start and (fi - self.start) % self.step == 0
+                and (self.stop is None or fi < self.stop))
+
+    def past(self, fi: int) -> bool:
+        """True once `fi` lies beyond the last sampled frame."""
+        return self.last is not None and fi > self.last
+
+
 def gif_frames(
     payload: bytes,
     sample_rate: int = 1,
@@ -602,159 +634,49 @@ def gif_frames(
     palettes, interlace, GCE transparency (transparent pixels leave the
     canvas untouched) and disposal methods 0/1 (leave), 2 (restore frame
     rect to the background color) and 3 (restore rect to the previous
-    canvas). Returns one dict per SAMPLED frame — frame_index, delay_cs,
-    disposal, plus the shared luma_features contract of the composited
-    canvas — where the sampled indices are
-    ``range(start_frame, end_frame or n, sample_rate)[:max_frames]``, the
-    frame grid of the reference's video iteration
-    (/root/reference/processing/video_processing/batch_processing.py:31
-    ``range(0, frame_count, sample_rate)`` with the start/end/max knobs of
-    main_processing.iterate_through_frames). Every frame up to the last
-    sampled one is still decoded — compositing is sequential, exactly like
-    video group-of-pictures decode — but pixel work stops there, while
-    header scanning continues so n_frames is the file's true frame count.
+    canvas). Returns one dict per frame that FrameGrid samples:
+    frame_index, delay_cs, disposal, plus the shared luma_features
+    contract of the composited canvas. Every frame up to the last sampled
+    one is still decoded — compositing is sequential, exactly like video
+    group-of-pictures decode — but pixel work stops there, while header
+    scanning continues so n_frames is the file's true frame count.
 
     The initial canvas is the background color (GCT entry at the header's
     background index; black without a GCT) — a documented deviation from
     browsers, which treat the background as transparent; features need a
     concrete color."""
-    if payload[:6] not in (b"GIF87a", b"GIF89a"):
-        raise ValueError("not a GIF: bad signature")
-    if len(payload) < 13:
-        raise ValueError("truncated GIF header")
-    if sample_rate < 1:
-        raise ValueError("sample_rate must be >= 1")
-    sw = payload[6] | (payload[7] << 8)
-    sh = payload[8] | (payload[9] << 8)
+    sw, sh, bg_index, gpal, frames = _gif_walk(payload)
+    grid = FrameGrid(sample_rate, start_frame, end_frame, max_frames)
     if sw == 0 or sh == 0:
         raise ValueError("zero-dimension GIF logical screen")
-    packed = payload[10]
-    bg_index = payload[11]
-    pos = 13
-    gct = None
-    if packed & 0x80:
-        n = 2 << (packed & 0x07)
-        gct = payload[pos:pos + 3 * n]
-        if len(gct) < 3 * n:
-            raise ValueError("truncated GIF global color table")
-        pos += 3 * n
-
-    if gct is not None:
-        gpal = np.frombuffer(gct, dtype=np.uint8)
-        gpal = gpal[: (len(gpal) // 3) * 3].reshape(-1, 3)
+    if gpal is not None:
         bg_rgb = gpal[min(bg_index, len(gpal) - 1)]
     else:
-        gpal = None
         bg_rgb = np.zeros(3, dtype=np.uint8)
-
-    start = start_frame or 0
-    # pure arithmetic, never a materialized index set: stop is exclusive,
-    # last_wanted the largest on-grid index below it (None = sample to EOF)
-    if end_frame is not None or max_frames is not None:
-        stop = end_frame if end_frame is not None else (1 << 31)
-        if max_frames is not None:
-            stop = min(stop, start + max_frames * sample_rate)
-        if stop > start:
-            last_wanted = start + ((stop - 1 - start) // sample_rate) * sample_rate
-        else:
-            last_wanted = -1
-    else:
-        stop = None
-        last_wanted = None
 
     canvas = np.empty((sh, sw, 3), dtype=np.uint8)
     canvas[:] = bg_rgb
     out: list = []
     n_frames = 0
-    pending_gce = None  # (disposal, delay_cs, transparent_idx | None)
-    decode_pixels = True
-    while pos < len(payload):
-        b = payload[pos]
-        pos += 1
-        if b == 0x3B:
-            break
-        if b == 0x21:
-            if pos >= len(payload):
-                raise ValueError("truncated GIF extension")
-            label = payload[pos]
-            pos += 1
-            if label == 0xF9 and pos < len(payload):
-                data, pos = _gif_subblocks(payload, pos)
-                if len(data) >= 4:
-                    gpk = data[0]
-                    pending_gce = (
-                        (gpk >> 2) & 0x07,
-                        data[1] | (data[2] << 8),
-                        data[3] if gpk & 0x01 else None,
-                    )
-            else:
-                _, pos = _gif_subblocks(payload, pos)
-            continue
-        if b != 0x2C:
-            raise ValueError(f"unknown GIF block 0x{b:02x}")
-        if pos + 9 > len(payload):
-            raise ValueError("truncated GIF image descriptor")
-        left = payload[pos] | (payload[pos + 1] << 8)
-        top = payload[pos + 2] | (payload[pos + 3] << 8)
-        w = payload[pos + 4] | (payload[pos + 5] << 8)
-        h = payload[pos + 6] | (payload[pos + 7] << 8)
-        ipacked = payload[pos + 8]
-        pos += 9
-        lct = None
-        if ipacked & 0x80:
-            n = 2 << (ipacked & 0x07)
-            lct = payload[pos:pos + 3 * n]
-            if len(lct) < 3 * n:
-                raise ValueError("truncated GIF local color table")
-            pos += 3 * n
-        if pos >= len(payload):
-            raise ValueError("truncated GIF image data")
-        mcs = payload[pos]
-        pos += 1
-        data, pos = _gif_subblocks(payload, pos)
-
-        fi = n_frames
-        n_frames += 1
-        disposal, delay_cs, transparent = pending_gce or (0, 0, None)
-        pending_gce = None
-        if not decode_pixels:
-            continue
-        if w == 0 or h == 0:
-            raise ValueError("zero-dimension GIF frame")
+    for fi, fr in enumerate(frames):
+        n_frames = fi + 1
+        if grid.past(fi):
+            continue  # keep scanning headers for n_frames only
+        disposal, delay_cs, transparent = fr.gce or (0, 0, None)
+        top, left, h, w = fr.top, fr.left, fr.height, fr.width
         if left + w > sw or top + h > sh:
             raise ValueError("GIF frame exceeds logical screen")
-        idx = _lzw_decode(data, mcs, w * h)
-        if len(idx) < w * h:
-            raise ValueError("GIF frame underruns declared dimensions")
-        arr = np.frombuffer(bytes(idx[: w * h]), dtype=np.uint8).reshape(h, w)
-        if ipacked & 0x40:
-            order = [y for s0, step in _GIF_INTERLACE_PASSES
-                     for y in range(s0, h, step)]
-            de = np.empty_like(arr)
-            de[np.array(order)] = arr
-            arr = de
-        if lct is not None:
-            pal = np.frombuffer(lct, dtype=np.uint8)
-            pal = pal[: (len(pal) // 3) * 3].reshape(-1, 3)
-        elif gpal is not None:
-            pal = gpal
-        else:
-            raise ValueError("GIF frame without any color table")
-        if len(pal) == 0:
-            raise ValueError("GIF color table empty")
+        arr, frame_rgb = _gif_pixels(fr)
 
         rect = canvas[top:top + h, left:left + w]
         saved = rect.copy() if disposal == 3 else None
-        frame_rgb = pal[np.minimum(arr, len(pal) - 1)]
         if transparent is not None:
             opaque = arr != transparent
             rect[opaque] = frame_rgb[opaque]
         else:
             rect[:] = frame_rgb
 
-        sampled = (fi >= start and (fi - start) % sample_rate == 0
-                   and (stop is None or fi < stop))
-        if sampled:
+        if grid.sampled(fi):
             luma = canvas.astype(np.float64) @ REC601
             feat = luma_features(luma, 3)
             feat["frame_index"] = fi
@@ -766,8 +688,6 @@ def gif_frames(
             rect[:] = bg_rgb
         elif disposal == 3:
             rect[:] = saved
-        if last_wanted is not None and fi >= last_wanted:
-            decode_pixels = False  # keep scanning headers for n_frames only
 
     if n_frames == 0:
         # same contract as decode_gif: a structurally valid but frameless

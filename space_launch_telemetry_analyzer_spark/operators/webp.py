@@ -38,125 +38,26 @@ import struct
 
 import numpy as np
 
-# ---------------------------------------------------------------------------
-# bit I/O (VP8L is LSB-first within bytes; prefix codes read MSB-of-code
-# first, DEFLATE-style)
-# ---------------------------------------------------------------------------
+from .bits import LSBReader, LSBWriter as _LSBWriter, PrefixCode
 
 
-class _LSBReader:
-    __slots__ = ("data", "pos", "acc", "nbits")
-
-    def __init__(self, data: bytes):
-        self.data = data
-        self.pos = 0
-        self.acc = 0
-        self.nbits = 0
-
-    def read(self, n: int) -> int:
-        while self.nbits < n:
-            if self.pos >= len(self.data):
-                raise ValueError("VP8L bitstream exhausted")
-            self.acc |= self.data[self.pos] << self.nbits
-            self.pos += 1
-            self.nbits += 8
-        v = self.acc & ((1 << n) - 1)
-        self.acc >>= n
-        self.nbits -= n
-        return v
-
-
-class _LSBWriter:
-    __slots__ = ("out", "acc", "nbits")
-
-    def __init__(self):
-        self.out = bytearray()
-        self.acc = 0
-        self.nbits = 0
-
-    def write(self, value: int, n: int) -> None:
-        self.acc |= (value & ((1 << n) - 1)) << self.nbits
-        self.nbits += n
-        while self.nbits >= 8:
-            self.out.append(self.acc & 0xFF)
-            self.acc >>= 8
-            self.nbits -= 8
-
-    def write_code(self, code: int, n: int) -> None:
-        """Prefix codes go most-significant-code-bit first (DEFLATE
-        convention) while everything else is LSB-first — emit reversed."""
-        for i in range(n - 1, -1, -1):
-            self.write((code >> i) & 1, 1)
-
-    def finish(self) -> bytes:
-        if self.nbits:
-            self.out.append(self.acc & 0xFF)
-            self.acc = 0
-            self.nbits = 0
-        return bytes(self.out)
-
-
-# ---------------------------------------------------------------------------
-# canonical prefix codes (DEFLATE-convention canonical assignment; codes are
-# read/written one bit at a time, most-significant code bit first)
-# ---------------------------------------------------------------------------
-
-
-class _PrefixCode:
-    __slots__ = ("table", "single")
-
-    def __init__(self, lengths: list[int]):
-        nz = [(ln, sym) for sym, ln in enumerate(lengths) if ln > 0]
-        if not nz:
-            raise ValueError("VP8L prefix code with no symbols")
-        if len(nz) == 1:
-            self.single = nz[0][1]  # zero bits per symbol
-            self.table = {}
-            return
-        self.single = None
-        self.table = {}
-        code = 0
-        prev_len = 0
-        for ln, sym in sorted(nz):
-            code <<= (ln - prev_len)
-            if code >= (1 << ln):
-                raise ValueError("VP8L over-subscribed prefix code")
-            self.table[(ln, code)] = sym
-            code += 1
-            prev_len = ln
-        # completeness is not enforced (incomplete codes simply make some
-        # bit patterns invalid; decode raises on them)
-
-    def decode(self, br: _LSBReader) -> int:
-        if self.single is not None:
-            return self.single
-        code = 0
-        for ln in range(1, 16):
-            code = (code << 1) | br.read(1)
-            sym = self.table.get((ln, code))
-            if sym is not None:
-                return sym
-        raise ValueError("invalid VP8L prefix code")
-
-
-def _encode_table(lengths: list[int]) -> dict[int, tuple[int, int]]:
+def _vp8l_code(lengths: list[int]) -> PrefixCode:
+    """VP8L code lengths -> canonical prefix code over (length, symbol)
+    order. A code with one used symbol costs zero bits per symbol."""
     nz = [(ln, sym) for sym, ln in enumerate(lengths) if ln > 0]
-    out: dict[int, tuple[int, int]] = {}
-    code = 0
-    prev_len = 0
-    for ln, sym in sorted(nz):
-        code <<= (ln - prev_len)
-        out[sym] = (code, ln)
-        code += 1
-        prev_len = ln
-    return out
+    nz.sort()
+    if not nz:
+        raise ValueError("VP8L prefix code with no symbols")
+    if len(nz) == 1:
+        nz = [(0, nz[0][1])]
+    return PrefixCode(nz)
 
 
 # order in which code-length-code lengths are stored (spec section 6.2.2)
 _CLC_ORDER = [17, 18, 0, 1, 2, 3, 4, 5, 16, 6, 7, 8, 9, 10, 11, 12, 13, 14, 15]
 
 
-def _read_prefix_code(br: _LSBReader, alphabet_size: int) -> _PrefixCode:
+def _read_prefix_code(br: LSBReader, alphabet_size: int) -> PrefixCode:
     if br.read(1):  # simple code: 1 or 2 symbols
         num_symbols = 1 + br.read(1)
         if br.read(1):  # first symbol is 8 bits
@@ -174,13 +75,13 @@ def _read_prefix_code(br: _LSBReader, alphabet_size: int) -> _PrefixCode:
             lengths[sym1] = 1
         else:
             lengths[sym0] = 1  # single-symbol: 0 bits read per decode
-        return _PrefixCode(lengths)
+        return _vp8l_code(lengths)
 
     num_codes = 4 + br.read(4)
     clc_lengths = [0] * 19
     for i in range(num_codes):
         clc_lengths[_CLC_ORDER[i]] = br.read(3)
-    clc = _PrefixCode(clc_lengths)
+    clc = _vp8l_code(clc_lengths)
 
     max_symbol = alphabet_size
     if br.read(1):  # use length / max_symbol
@@ -212,7 +113,7 @@ def _read_prefix_code(br: _LSBReader, alphabet_size: int) -> _PrefixCode:
             i += 11 + br.read(7)
         if i > alphabet_size:
             raise ValueError("VP8L code-length repeat overflow")
-    return _PrefixCode(lengths)
+    return _vp8l_code(lengths)
 
 
 # ---------------------------------------------------------------------------
@@ -220,7 +121,7 @@ def _read_prefix_code(br: _LSBReader, alphabet_size: int) -> _PrefixCode:
 # ---------------------------------------------------------------------------
 
 
-def _lz77_value(br: _LSBReader, sym: int) -> int:
+def _lz77_value(br: LSBReader, sym: int) -> int:
     if sym < 4:
         return sym + 1
     extra = (sym - 2) >> 1
@@ -279,7 +180,7 @@ def _plane_dist(code: int, xsize: int) -> int:
 _GREEN_BASE = 256 + 24  # literals + LZ77 length symbols
 
 
-def _read_code_group(br: _LSBReader, cache_bits: int) -> list[_PrefixCode]:
+def _read_code_group(br: LSBReader, cache_bits: int) -> list[PrefixCode]:
     green = _read_prefix_code(
         br, _GREEN_BASE + (1 << cache_bits if cache_bits else 0))
     red = _read_prefix_code(br, 256)
@@ -289,7 +190,7 @@ def _read_code_group(br: _LSBReader, cache_bits: int) -> list[_PrefixCode]:
     return [green, red, blue, alpha, dist]
 
 
-def _decode_entropy_image(br: _LSBReader, w: int, h: int,
+def _decode_entropy_image(br: LSBReader, w: int, h: int,
                           allow_meta: bool) -> np.ndarray:
     """Returns a flat uint32 ARGB array of length w*h."""
     # spec ABNF: spatially-coded-image = color-cache-info meta-prefix data
@@ -531,7 +432,7 @@ def _apply_palette_inverse(img: np.ndarray, w: int, h: int,
 def _decode_vp8l_stream(data: bytes) -> tuple[np.ndarray, int, int, bool]:
     if not data or data[0] != 0x2F:
         raise ValueError("VP8L signature byte missing")
-    br = _LSBReader(data[1:])
+    br = LSBReader(data[1:])
     w = br.read(14) + 1
     h = br.read(14) + 1
     # decode work is per-pixel Python and LZ77/0-bit codes decouple it
@@ -546,7 +447,7 @@ def _decode_vp8l_stream(data: bytes) -> tuple[np.ndarray, int, int, bool]:
     return _decode_vp8l_body(br, w, h), w, h, has_alpha
 
 
-def _decode_vp8l_body(br: _LSBReader, w: int, h: int) -> np.ndarray:
+def _decode_vp8l_body(br: LSBReader, w: int, h: int) -> np.ndarray:
     """Headerless VP8L image stream: transforms + entropy-coded ARGB +
     inverse transforms, with dimensions supplied by the caller.  This is
     both the tail of a full VP8L stream (after signature/dims/version) and
@@ -641,7 +542,7 @@ def _decode_alph(body: bytes, w: int, h: int) -> np.ndarray:
         plane = np.frombuffer(body[1:1 + w * h],
                               dtype=np.uint8).reshape(h, w).copy()
     else:
-        img = _decode_vp8l_body(_LSBReader(body[1:]), w, h)
+        img = _decode_vp8l_body(LSBReader(body[1:]), w, h)
         plane = ((img >> 8) & 0xFF).astype(np.uint8).reshape(h, w)
     if filt == 0:
         return plane
@@ -810,29 +711,32 @@ def webp_dimensions(payload: bytes) -> tuple[int, int, str]:
 # (Kraft: 232/256 + 48/512 = 1)
 _GREEN_LENGTHS = [8] * 232 + [9] * 48
 _FLAT256 = [8] * 256
+# the code-length code that transmits them: {8: '0', 9: '1'}
+_CLC_89 = {8: 1, 9: 1}
+# symbol -> (code, length) of the three, built once
+_GREEN_CODES = _vp8l_code(_GREEN_LENGTHS).codes
+_FLAT256_CODES = _vp8l_code(_FLAT256).codes
+_CLC_89_CODES = _vp8l_code([_CLC_89.get(i, 0) for i in range(19)]).codes
 
 
 def _write_lengths(bw: _LSBWriter, lengths: list[int]) -> None:
-    """Full code-length-coded prefix code whose lengths are all 8 or 9:
-    the code-length code itself is {8: '0', 9: '1'}."""
+    """Full code-length-coded prefix code whose lengths are all 8 or 9,
+    sent with the code-length code _CLC_89."""
     bw.write(0, 1)  # not simple
     # store 3-bit lengths for CLC symbols in _CLC_ORDER until both 8 and 9
     # are covered (order: 17,18,0..5,16,6,7,8,9,...) -> 13 entries. Always
     # declare BOTH 8 and 9 even for all-8 length lists: a one-symbol CLC
     # would be a 0-bit code and the per-length bits below would desync.
-    clc = {8: 1, 9: 1}
     num = 0
     for i, s in enumerate(_CLC_ORDER):
-        if s in clc:
+        if s in _CLC_89:
             num = i + 1
     bw.write(num - 4, 4)
     for s in _CLC_ORDER[:num]:
-        bw.write(clc.get(s, 0), 3)
+        bw.write(_CLC_89.get(s, 0), 3)
     bw.write(0, 1)  # no max_symbol shortcut
-    enc = _encode_table(
-        [clc.get(i, 0) for i in range(19)])
     for ln in lengths:
-        code, n = enc[ln]
+        code, n = _CLC_89_CODES[ln]
         bw.write_code(code, n)
 
 
@@ -881,8 +785,8 @@ def vp8l_chunk(pixels: "np.ndarray", alpha: int = 255) -> bytes:
     _write_simple1(bw, alpha)            # alpha: constant, 0 bits/px
     _write_simple1(bw, 13)               # dist: only code 121 (plain d=1)
 
-    genc = _encode_table(_GREEN_LENGTHS)
-    fenc = _encode_table(_FLAT256)
+    genc = _GREEN_CODES
+    fenc = _FLAT256_CODES
     flat = arr.reshape(-1, 3)
     n = len(flat)
     i = 0
@@ -992,20 +896,9 @@ def webp_frames(
     header scanning continues so n_frames is the file's true count."""
     if len(payload) < 12 or payload[:4] != b"RIFF" or payload[8:12] != b"WEBP":
         raise ValueError("not a WebP: missing RIFF/WEBP header")
-    if sample_rate < 1:
-        raise ValueError("sample_rate must be >= 1")
-    from .multimodal import REC601, luma_features
+    from .multimodal import REC601, FrameGrid, luma_features
 
-    start = start_frame or 0
-    if end_frame is not None or max_frames is not None:
-        stop = end_frame if end_frame is not None else (1 << 31)
-        if max_frames is not None:
-            stop = min(stop, start + max_frames * sample_rate)
-        last_wanted = (start + ((stop - 1 - start) // sample_rate)
-                       * sample_rate) if stop > start else -1
-    else:
-        stop = None
-        last_wanted = None
+    grid = FrameGrid(sample_rate, start_frame, end_frame, max_frames)
 
     canvas_w = canvas_h = None
     bg_luma = 255.0
@@ -1040,7 +933,7 @@ def webp_frames(
     # background color and loop count (defaults: opaque white).
     if not frames_meta:
         d = decode_webp(payload)
-        if (start <= 0 and (stop is None or stop > 0)):
+        if grid.sampled(0):
             d.update(frame_index=0, duration_ms=0, blend=False,
                      dispose=False, n_frames=1)
             return [d]
@@ -1052,7 +945,7 @@ def webp_frames(
     canvas_a = np.full((canvas_h, canvas_w), bg_alpha, dtype=np.float64)
     out: list = []
     for fi, (fx, fy, dur, blend, dispose, sub) in enumerate(frames_meta):
-        if last_wanted is not None and fi > last_wanted:
+        if grid.past(fi):
             break  # n_frames already known from the header scan
         d = _decode_image_chunks(_iter_chunks(sub, 0), return_luma=True)
         if d is None:
@@ -1084,8 +977,7 @@ def webp_frames(
             rect_l[:] = luma
             rect_a[:] = alpha
 
-        if (fi >= start and (fi - start) % sample_rate == 0
-                and (stop is None or fi < stop)):
+        if grid.sampled(fi):
             feat = luma_features(canvas_l, 4)
             feat["frame_index"] = fi
             feat["duration_ms"] = int(dur)

@@ -37,7 +37,7 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..operators.extract import extract_pages
+from ..operators.extract import extract_pages, url_bucket
 from ..rules import RuleConfig, default_config
 from ..sources.io import ResultStore
 
@@ -50,11 +50,9 @@ def with_host(df: DataFrame, url_col: str = "url") -> DataFrame:
 
 
 def with_bucket(df: DataFrame, n_buckets: int = DEFAULT_N_BUCKETS, url_col: str = "url") -> DataFrame:
-    """url-hash bucket: uniform regardless of host skew (north_rule layout).
-    Matches the bucket the extraction kernel stamps on results."""
-    return df.withColumn(
-        "bucket", F.pmod(F.xxhash64(F.col(url_col)), F.lit(n_buckets)).cast("int")
-    )
+    """url-hash bucket column (north_rule layout): the same url_bucket
+    expression the extraction kernel stamps on results."""
+    return df.withColumn("bucket", url_bucket(F.col(url_col), n_buckets))
 
 
 def salted_repartition(

@@ -74,9 +74,9 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.schema(schema).parquet(path)
 
 
-def spread(df: DataFrame, factor: int = 1) -> DataFrame:
-    """Round-robin repartition to one task wave (defaultParallelism *
-    factor) before a compute-heavy projection, unless `df` already has
+def spread(df: DataFrame) -> DataFrame:
+    """Round-robin repartition to one task wave (defaultParallelism
+    partitions) before a compute-heavy projection, unless `df` already has
     that many partitions.
 
     The small-SF parquet files are one row group, so one input split:
@@ -86,12 +86,12 @@ def spread(df: DataFrame, factor: int = 1) -> DataFrame:
     the width, so there it is a no-op. Values are unaffected: round-robin
     placement feeds only per-row projections and exact aggregations. It
     regresses cheap join pipelines at small scale, so call sites are
-    chosen per measured query; factor=1 measured equal or better than 2
-    wherever it was A/B'd (extract_field_spans sf1.0: 0.8 s at 32 vs
-    1.1 s at 64 partitions). Counting partitions plans `df`; a streaming
-    frame cannot be planned that way and raises."""
-    sc = df.sparkSession.sparkContext
-    target = sc.defaultParallelism * factor
+    chosen per measured query. The width is one wave because one wave
+    measured equal or better than two wherever it was A/B'd
+    (extract_field_spans sf1.0: 0.8 s at 32 vs 1.1 s at 64 partitions).
+    Counting partitions plans `df`; a streaming frame cannot be planned
+    that way and raises."""
+    target = df.sparkSession.sparkContext.defaultParallelism
     if df.rdd.getNumPartitions() >= target:
         return df
     return df.repartition(target)

@@ -245,6 +245,43 @@ def test_minhash_checkpoint_pairs_releases_banded_cache(spark, corpus):
     assert len(added) <= 1, f"banded cache leaked: {len(added)} new entries"
 
 
+class _CachedFrame:
+    """Stands in for a banded frame in the release registry."""
+
+    def __init__(self, exc: BaseException | None = None):
+        self.exc = exc
+        self.released = False
+
+    def unpersist(self):
+        self.released = True
+        if self.exc is not None:
+            raise self.exc
+
+
+def test_release_banded_caches_fails_loud_and_drains(monkeypatch):
+    """A stopped session's unpersist raises Py4JJavaError (seen: a
+    NullPointerException from BlockManagerMaster.removeRdd) and is
+    forgiven; any other error propagates, and the registry is drained
+    either way."""
+    from types import SimpleNamespace
+
+    from py4j.protocol import Py4JJavaError
+
+    stale = _CachedFrame(Py4JJavaError(
+        "An error occurred while calling o1.unpersist",
+        SimpleNamespace(_target_id="o1")))
+    live = _CachedFrame()
+    monkeypatch.setattr(D, "_BANDED_CACHES", [stale, live])
+    assert D.release_banded_caches() == 2
+    assert stale.released and live.released and D._BANDED_CACHES == []
+
+    broken = _CachedFrame(RuntimeError("block manager on fire"))
+    monkeypatch.setattr(D, "_BANDED_CACHES", [_CachedFrame(), broken])
+    with pytest.raises(RuntimeError, match="on fire"):
+        D.release_banded_caches()
+    assert broken.released and D._BANDED_CACHES == []
+
+
 def test_minhash_and_simhash_exclude_degenerate_docs(spark):
     """NULL / whitespace-only docs all share one constant signature — a
     corpus with millions of them would put them in a single band bucket

@@ -568,3 +568,22 @@ def test_gif_frames_large_end_bound_is_cheap():
     # a huge 'to the end' sentinel must not materialize an index set
     got = M.gif_frames(p, sample_rate=2, end_frame=10**12)
     assert [f["frame_index"] for f in got] == [0, 2]
+
+
+def test_decode_gif_and_gif_frames_walk_the_same_frames():
+    """One walker serves both: the frame count agrees even when
+    gif_frames stops pixel work after its last sampled frame."""
+    p = _anim_payload()
+    assert M.decode_gif(p)["n_frames"] == 3
+    for kw in ({}, {"max_frames": 1}, {"sample_rate": 2}):
+        got = M.gif_frames(p, **kw)
+        assert {f["n_frames"] for f in got} == {3}
+
+
+def test_truncated_gif_extension_raises_in_both_decoders():
+    p = _anim_payload()
+    head = p[:781]  # header + LSD + 256-entry GCT
+    for bad in (head + b"\x21", head + b"\x21\xf9"):
+        for decode in (M.decode_gif, M.gif_frames):
+            with pytest.raises(ValueError, match="truncated GIF"):
+                decode(bad)
