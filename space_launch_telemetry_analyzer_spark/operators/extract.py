@@ -53,13 +53,13 @@ import re
 import time as _time
 from typing import Iterator
 
-import pandas as pd
-
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.parse import extract_single_value, extract_time, convert_measurement
-from ..rules import DEFAULT_TIME_REGEX, RuleConfig, parse_selector
+from ..rules import DEFAULT_TIME_REGEX, RuleConfig, default_config, parse_selector
+from ..schema import EXTRACTION_SCHEMA
+from .rows import html_text
 
 # ---------------------------------------------------------------------------
 # frozen constants
@@ -113,7 +113,8 @@ def _tag_kind(tag: str) -> int:
 
 
 class Block:
-    """One entry of the flattened DOM block array (schema.BLOCK_SCHEMA).
+    """One entry of the flattened DOM block array: a block-level tag, its
+    class, depth, parent and own text, plus the classification counts.
     __slots__ class, not a dataclass: this is allocated ~60x per page in the
     hot path and slot access measurably beats dict-backed attributes."""
 
@@ -150,8 +151,8 @@ class Block:
         # CAPPED word count (saturates at 7): classification consumes only
         # the >=5 and >=1 thresholds, so splitting past 6 words is pure
         # allocation waste on long paragraphs (hot path: ~60 blocks/page).
-        # NB this field deliberately deviates from BLOCK_SCHEMA's true
-        # n_words — anything emitting blocks per that schema must recount.
+        # NB this field is NOT the block's true word count — anything that
+        # emits per-block word counts must recount.
         self.n_words = len(self.text.split(None, 6))
         self.link_density = (
             min(1.0, self.n_link_chars / self.n_chars) if self.n_chars else 0.0
@@ -439,43 +440,25 @@ def extract_page(html_bytes, cfg: RuleConfig, row_idx: int | None,
     """One page -> one result dict (never raises; error -> data)."""
     try:
         if html_bytes is None:
-            return {"extracted_text": None, "n_blocks": 0, "n_content_blocks": 0,
-                    "error": "null html", "spans": [], "speed": None, "altitude": None,
-                    "time": None, "fuel_lox": None, "fuel_ch4": None, "engines": None}
-        html_text = (
-            html_bytes.decode("utf-8", errors="replace")
-            if isinstance(html_bytes, (bytes, bytearray, memoryview))
-            else str(html_bytes)
-        )
-        blocks = parse_blocks(html_text)
-        fields = extract_fields(blocks, cfg, row_idx, zero_time_met)
-        fields["extracted_text"] = extracted_text_of(blocks)
-        fields["n_blocks"] = len(blocks) - 1  # exclude virtual root
-        fields["n_content_blocks"] = sum(1 for b in blocks if b.is_content)
-        fields["error"] = None
-        return fields
+            error = "null html"
+        else:
+            blocks = parse_blocks(html_text(html_bytes))
+            fields = extract_fields(blocks, cfg, row_idx, zero_time_met)
+            fields["extracted_text"] = extracted_text_of(blocks)
+            fields["n_blocks"] = len(blocks) - 1  # exclude virtual root
+            fields["n_content_blocks"] = sum(1 for b in blocks if b.is_content)
+            fields["error"] = None
+            return fields
     except Exception as e:  # row-level error channel (frame_processing.py:41-50)
-        return {"extracted_text": None, "n_blocks": 0, "n_content_blocks": 0,
-                "error": f"{type(e).__name__}: {e}", "spans": [], "speed": None,
-                "altitude": None, "time": None, "fuel_lox": None, "fuel_ch4": None,
-                "engines": None}
+        error = f"{type(e).__name__}: {e}"
+    return {"extracted_text": None, "n_blocks": 0, "n_content_blocks": 0,
+            "error": error, "spans": [], "speed": None, "altitude": None,
+            "time": None, "fuel_lox": None, "fuel_ch4": None, "engines": None}
 
 
 # ---------------------------------------------------------------------------
 # the Spark operator
 # ---------------------------------------------------------------------------
-
-EXTRACT_OUTPUT_DDL = (
-    "url string, warc_ts timestamp, bucket int, partition_id int, "
-    "extracted_text string, n_blocks int, n_content_blocks int, "
-    "speed double, altitude double, "
-    "time struct<sign:string, hours:int, minutes:int, seconds:int>, "
-    "fuel_lox double, fuel_ch4 double, "
-    "engines map<string, array<boolean>>, "
-    "spans array<struct<rule_id:string, series:string, block_idx:int, raw:string, value:double>>, "
-    "error string, input_bytes long, proc_seconds double"
-)
-
 
 def url_bucket(url: Column, n_buckets: int) -> Column:
     """The url-hash bucket, pmod(xxhash64(url), n_buckets) as int: uniform
@@ -491,18 +474,25 @@ def extract_pages(
     n_buckets: int = 256,
     zero_time_shortcircuit: bool = False,
 ) -> DataFrame:
-    """pages(url, warc_ts, html[, row_idx]) -> extraction results.
+    """pages(url, warc_ts, html[, row_idx]) -> extraction results, one row
+    per page in schema.EXTRACTION_SCHEMA.
 
     The physical plan this builds (SURVEY.md §4 sketch): column-pruned scan
     -> bucket computation (xxhash64(url) — JVM-side) -> ONE
-    `mapInArrow` -> results. Callers wanting skew-safe layout repartition
-    via plans.pipeline.bucketed_repartition before this operator.
+    `mapInArrow` -> results. The kernel's input layout does not matter (it
+    is per row); plans.pipeline.run_extraction lays the results out by
+    bucket afterwards with plans.pipeline.salted_repartition.
+
+    Not map_rows: url, warc_ts and bucket pass through from the input,
+    `partition_id` is stamped on, `proc_seconds` is timed per Arrow batch,
+    and with `zero_time_shortcircuit` the zero-time flag lasts for the
+    whole batch.
     """
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
     spark = pages.sparkSession
-    cfg = cfg or __import__(
-        "space_launch_telemetry_analyzer_spark.rules", fromlist=["default_config"]
-    ).default_config()
-    bc = spark.sparkContext.broadcast(cfg)
+    bc = spark.sparkContext.broadcast(cfg or default_config())
 
     has_idx = row_idx_col is not None and row_idx_col in pages.columns
     cols = [
@@ -515,19 +505,8 @@ def extract_pages(
         cols.append(F.col(row_idx_col).cast("long").alias("__row_idx"))
     narrow = pages.select(*cols)
 
-    # Arrow-native kernel (mapInArrow): typed pyarrow arrays are built
-    # directly, skipping the pandas object-column round trip — the nested
-    # output columns (time struct, spans list<struct>, engines map) are
-    # ~2-3x cheaper to serialize this way at high core counts.
-    import pyarrow as pa
-
-    time_t = pa.struct([("sign", pa.string()), ("hours", pa.int32()),
-                        ("minutes", pa.int32()), ("seconds", pa.int32())])
-    span_t = pa.list_(pa.struct([
-        ("rule_id", pa.string()), ("series", pa.string()), ("block_idx", pa.int32()),
-        ("raw", pa.string()), ("value", pa.float64()),
-    ]))
-    engines_t = pa.map_(pa.string(), pa.list_(pa.bool_()))
+    schema = to_arrow_schema(EXTRACTION_SCHEMA)
+    passed = ("url", "warc_ts", "bucket")
 
     def kernel(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         from pyspark import TaskContext
@@ -539,118 +518,35 @@ def extract_pages(
             n = rb.num_rows
             if n == 0:
                 continue
-            htmls = rb.column(rb.schema.get_field_index("html")).to_pylist()
-            if has_idx:
-                idxs = rb.column(rb.schema.get_field_index("__row_idx")).to_pylist()
-            else:
-                idxs = [None] * n
+            htmls = rb.column("html").to_pylist()
+            idxs = rb.column("__row_idx").to_pylist() if has_idx else [None] * n
             t0 = _time.perf_counter()
-            if zero_time_shortcircuit:
-                # ST2/P12: `zero_time_met` scoped per Arrow batch, mirroring
-                # the reference's per-process-batch flag (batch_processing.py
-                # :71-72,124 — each worker batch starts False). Batch-order
-                # dependent by design; the deterministic series-scoped form
-                # is operators.windows.after_anchor_flag.
-                met = False
-                results = []
-                for h, ix in zip(htmls, idxs):
-                    r = extract_page(h, cfg_local, int(ix) if ix is not None else None, met)
-                    results.append(r)
-                    t = r["time"]
-                    if t and t.get("hours") == 0 and t.get("minutes") == 0 and t.get("seconds") == 0:
-                        met = True
-            else:
-                results = [
-                    extract_page(h, cfg_local, int(ix) if ix is not None else None)
-                    for h, ix in zip(htmls, idxs)
-                ]
+            # ST2/P12: with zero_time_shortcircuit, `met` is scoped per Arrow
+            # batch, mirroring the reference's per-process-batch flag
+            # (batch_processing.py:71-72,124 — each worker batch starts
+            # False). Batch-order dependent by design; the deterministic
+            # series-scoped form is operators.windows.after_anchor_flag.
+            met = False
+            results = []
+            for h, ix in zip(htmls, idxs):
+                r = extract_page(h, cfg_local, int(ix) if ix is not None else None, met)
+                results.append(r)
+                t = r["time"]
+                if (zero_time_shortcircuit and t and t.get("hours") == 0
+                        and t.get("minutes") == 0 and t.get("seconds") == 0):
+                    met = True
             per_row = (_time.perf_counter() - t0) / n
 
-            # nested outputs are built from FLATTENED primitive arrays +
-            # offsets (ListArray/StructArray/MapArray.from_arrays) — 3-5x
-            # cheaper than per-element dict conversion at high core counts
-            t_sign, t_h, t_m, t_s, t_valid = [], [], [], [], []
-            for r in results:
-                tm = r["time"]
-                if tm is None:
-                    t_valid.append(False)
-                    t_sign.append(None); t_h.append(None); t_m.append(None); t_s.append(None)
-                else:
-                    t_valid.append(True)
-                    t_sign.append(tm["sign"]); t_h.append(tm["hours"])
-                    t_m.append(tm["minutes"]); t_s.append(tm["seconds"])
-            time_arr = pa.StructArray.from_arrays(
-                [pa.array(t_sign, pa.string()), pa.array(t_h, pa.int32()),
-                 pa.array(t_m, pa.int32()), pa.array(t_s, pa.int32())],
-                fields=list(time_t),
-                mask=pa.array([not v for v in t_valid], pa.bool_()),
-            )
+            per_batch = {
+                "partition_id": [pid] * n,
+                "input_bytes": [len(h) if h is not None else 0 for h in htmls],
+                "proc_seconds": [per_row] * n,
+            }
+            yield pa.RecordBatch.from_arrays(
+                [rb.column(f.name) if f.name in passed
+                 else pa.array(per_batch[f.name] if f.name in per_batch
+                               else [r[f.name] for r in results], f.type)
+                 for f in schema],
+                names=schema.names)
 
-            sp_off = [0]
-            sp_rule, sp_series, sp_blk, sp_raw, sp_val = [], [], [], [], []
-            for r in results:
-                for s in r["spans"]:
-                    sp_rule.append(s["rule_id"]); sp_series.append(s["series"])
-                    sp_blk.append(s["block_idx"]); sp_raw.append(s["raw"])
-                    sp_val.append(s["value"])
-                sp_off.append(len(sp_rule))
-            span_struct = pa.StructArray.from_arrays(
-                [pa.array(sp_rule, pa.string()), pa.array(sp_series, pa.string()),
-                 pa.array(sp_blk, pa.int32()), pa.array(sp_raw, pa.string()),
-                 pa.array(sp_val, pa.float64())],
-                fields=list(span_t.value_type),
-            )
-            spans_arr = pa.ListArray.from_arrays(pa.array(sp_off, pa.int32()), span_struct)
-
-            eng_off = [0]
-            eng_keys: list = []
-            eng_item_off = [0]
-            eng_bools: list = []
-            eng_mask = []
-            for r in results:
-                eng = r["engines"]
-                eng_mask.append(eng is None)
-                if eng:
-                    for k, bools in eng.items():  # config order — frozen
-                        eng_keys.append(k)
-                        eng_bools.extend(bools)
-                        eng_item_off.append(len(eng_bools))
-                eng_off.append(len(eng_keys))
-            items = pa.ListArray.from_arrays(
-                pa.array(eng_item_off, pa.int32()), pa.array(eng_bools, pa.bool_())
-            )
-            engines_arr = pa.MapArray.from_arrays(
-                pa.array(
-                    [None if m else o for o, m in zip(eng_off[:-1], eng_mask)] + [eng_off[-1]],
-                    pa.int32(),
-                ),
-                pa.array(eng_keys, pa.string()),
-                items,
-            )
-
-            arrays = [
-                rb.column(rb.schema.get_field_index("url")),
-                rb.column(rb.schema.get_field_index("warc_ts")),
-                rb.column(rb.schema.get_field_index("bucket")),
-                pa.array([pid] * n, pa.int32()),
-                pa.array([r["extracted_text"] for r in results], pa.string()),
-                pa.array([r["n_blocks"] for r in results], pa.int32()),
-                pa.array([r["n_content_blocks"] for r in results], pa.int32()),
-                pa.array([r["speed"] for r in results], pa.float64()),
-                pa.array([r["altitude"] for r in results], pa.float64()),
-                time_arr,
-                pa.array([r["fuel_lox"] for r in results], pa.float64()),
-                pa.array([r["fuel_ch4"] for r in results], pa.float64()),
-                engines_arr,
-                spans_arr,
-                pa.array([r["error"] for r in results], pa.string()),
-                pa.array([len(h) if h is not None else 0 for h in htmls], pa.int64()),
-                pa.array([per_row] * n, pa.float64()),
-            ]
-            names = ["url", "warc_ts", "bucket", "partition_id", "extracted_text",
-                     "n_blocks", "n_content_blocks", "speed", "altitude", "time",
-                     "fuel_lox", "fuel_ch4", "engines", "spans", "error",
-                     "input_bytes", "proc_seconds"]
-            yield pa.RecordBatch.from_arrays(arrays, names=names)
-
-    return narrow.mapInArrow(kernel, schema=EXTRACT_OUTPUT_DDL)
+    return narrow.mapInArrow(kernel, EXTRACTION_SCHEMA)

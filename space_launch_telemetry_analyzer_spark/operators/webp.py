@@ -681,11 +681,7 @@ def webp_dimensions(payload: bytes) -> tuple[int, int, str]:
     VP8X payloads without decoding pixels (media_metadata's fast path)."""
     if len(payload) < 12 or payload[:4] != b"RIFF" or payload[8:12] != b"WEBP":
         raise ValueError("not a WebP: missing RIFF/WEBP header")
-    pos = 12
-    while pos + 8 <= len(payload):
-        tag = payload[pos:pos + 4]
-        size = struct.unpack("<I", payload[pos + 4:pos + 8])[0]
-        body = payload[pos + 8:pos + 8 + size]
+    for tag, body in _iter_chunks(payload, 12):
         if tag == b"VP8L" and len(body) >= 5 and body[0] == 0x2F:
             bits = struct.unpack("<I", body[1:5])[0]
             return (bits & 0x3FFF) + 1, ((bits >> 14) & 0x3FFF) + 1, "vp8l"
@@ -699,7 +695,6 @@ def webp_dimensions(payload: bytes) -> tuple[int, int, str]:
             w = 1 + int.from_bytes(body[4:7], "little")
             h = 1 + int.from_bytes(body[7:10], "little")
             return w, h, "vp8x"
-        pos += 8 + size + (size & 1)
     raise ValueError("WebP has no image chunk")
 
 

@@ -26,66 +26,45 @@ PAGES_SCHEMA = T.StructType(
 )
 
 # ---------------------------------------------------------------------------
-# DOM block array: the flattened intermediate the extraction kernel builds
-# from html — the analog of the reference's ROI crops (slice_roi,
-# ocr/extract_data.py:18-27), except we flatten the whole page once and
-# *select* blocks instead of re-cropping per rule.
-# ---------------------------------------------------------------------------
-BLOCK_SCHEMA = T.StructType(
-    [
-        T.StructField("block_idx", T.IntegerType(), False),
-        T.StructField("tag", T.StringType(), True),
-        T.StructField("css_class", T.StringType(), True),
-        T.StructField("depth", T.IntegerType(), False),
-        T.StructField("text", T.StringType(), True),
-        T.StructField("n_chars", T.IntegerType(), False),
-        T.StructField("n_words", T.IntegerType(), False),
-        T.StructField("n_link_chars", T.IntegerType(), False),
-        T.StructField("link_density", T.DoubleType(), False),
-        T.StructField("is_content", T.BooleanType(), False),
-    ]
-)
-
-# ---------------------------------------------------------------------------
 # Extraction output: one row per page, nulls-not-failures (the reference's
 # per-row error channel, frame_processing.py:41-50 — a failed page is still
 # a row). Field layout mirrors SURVEY.md §1.2 with "series" ≅ vehicle.
+# This is the one declaration of operators.extract.extract_pages' output, in
+# the kernel's column order: the mapInArrow schema, the kernel's Arrow types
+# and the results table's columns all derive from it. Every field is
+# nullable, as the kernel declares it to Spark.
 # ---------------------------------------------------------------------------
-TIME_SCHEMA = T.StructType(
-    [
-        T.StructField("sign", T.StringType(), True),
-        T.StructField("hours", T.IntegerType(), True),
-        T.StructField("minutes", T.IntegerType(), True),
-        T.StructField("seconds", T.IntegerType(), True),
-    ]
-)
-
-FIELD_SPAN_SCHEMA = T.StructType(
-    [
-        T.StructField("rule_id", T.StringType(), False),
-        T.StructField("series", T.StringType(), True),
-        T.StructField("block_idx", T.IntegerType(), True),
-        T.StructField("raw", T.StringType(), True),
-        T.StructField("value", T.DoubleType(), True),
-    ]
-)
-
 EXTRACTION_SCHEMA = T.StructType(
     [
-        T.StructField("url", T.StringType(), False),
-        T.StructField("warc_ts", T.TimestampType(), True),
-        T.StructField("bucket", T.IntegerType(), True),
-        T.StructField("extracted_text", T.StringType(), True),
-        T.StructField("n_blocks", T.IntegerType(), True),
-        T.StructField("n_content_blocks", T.IntegerType(), True),
-        T.StructField("speed", T.DoubleType(), True),
-        T.StructField("altitude", T.DoubleType(), True),
-        T.StructField("time", TIME_SCHEMA, True),
-        T.StructField("fuel_lox", T.DoubleType(), True),
-        T.StructField("fuel_ch4", T.DoubleType(), True),
-        T.StructField("engines", T.MapType(T.StringType(), T.ArrayType(T.BooleanType())), True),
-        T.StructField("spans", T.ArrayType(FIELD_SPAN_SCHEMA), True),
-        T.StructField("error", T.StringType(), True),
+        T.StructField("url", T.StringType()),
+        T.StructField("warc_ts", T.TimestampType()),
+        T.StructField("bucket", T.IntegerType()),
+        T.StructField("partition_id", T.IntegerType()),
+        T.StructField("extracted_text", T.StringType()),
+        T.StructField("n_blocks", T.IntegerType()),
+        T.StructField("n_content_blocks", T.IntegerType()),
+        T.StructField("speed", T.DoubleType()),
+        T.StructField("altitude", T.DoubleType()),
+        T.StructField("time", T.StructType([
+            T.StructField("sign", T.StringType()),
+            T.StructField("hours", T.IntegerType()),
+            T.StructField("minutes", T.IntegerType()),
+            T.StructField("seconds", T.IntegerType()),
+        ])),
+        T.StructField("fuel_lox", T.DoubleType()),
+        T.StructField("fuel_ch4", T.DoubleType()),
+        T.StructField("engines", T.MapType(T.StringType(), T.ArrayType(T.BooleanType()))),
+        T.StructField("spans", T.ArrayType(T.StructType([
+            T.StructField("rule_id", T.StringType()),
+            T.StructField("series", T.StringType()),
+            T.StructField("block_idx", T.IntegerType()),
+            T.StructField("raw", T.StringType()),
+            T.StructField("value", T.DoubleType()),
+        ]))),
+        T.StructField("error", T.StringType()),
+        # lineage: the input's size and the kernel's time per row
+        T.StructField("input_bytes", T.LongType()),
+        T.StructField("proc_seconds", T.DoubleType()),
     ]
 )
 

@@ -99,12 +99,10 @@ class ResultStore:
                 + list(extra)
             )
 
-        lineage = ("partition_id int", "input_bytes bigint",
-                   "proc_seconds double", "run_id string")
         props = "TBLPROPERTIES ('format-version'='2')"
         stmts = [
             f"CREATE TABLE IF NOT EXISTS {self._tbl('results')} "
-            f"({cols(EXTRACTION_SCHEMA, lineage)}) USING iceberg "
+            f"({cols(EXTRACTION_SCHEMA, ('run_id string',))}) USING iceberg "
             f"PARTITIONED BY (run_id, bucket({n_buckets}, url)) {props}",
             f"CREATE TABLE IF NOT EXISTS {self._tbl('metrics')} "
             f"({cols(METRICS_SCHEMA)}) USING iceberg "

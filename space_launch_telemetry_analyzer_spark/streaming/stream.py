@@ -1,10 +1,11 @@
 """Streaming extraction: the reference's micro-batched sequential scan
 (SURVEY.md §2.4) re-expressed as Structured Streaming.
 
-Three operators:
-- `stream_extract`    — readStream -> the SAME mapInArrow kernel -> writeStream
-  (stateless; the kernel is batch/stream agnostic, which is the point of
-  keeping it a pure function of the Arrow batch).
+Operators:
+- `stream_to_parquet` — readStream -> any stateless batch operator ->
+  checkpointed parquet sink; `stream_extract` is it over the SAME
+  mapInArrow extraction kernel (the kernel is batch/stream agnostic, which
+  is the point of keeping it a pure function of the Arrow batch).
 - `stream_anchor_flags` — the cross-batch `zero_time_met` state (ST2,
   extract_data.py:112-115 / batch_processing.py:71-72) as a true stateful
   streaming operator via applyInPandasWithState, keyed per series: once a
@@ -27,7 +28,7 @@ few bytes (one boolean + anchor id), safe for millions of series.
 
 from __future__ import annotations
 
-from typing import Any, Iterable, Iterator, Tuple
+from typing import Any, Callable, Iterable, Iterator, Tuple
 
 import pandas as pd
 
@@ -72,12 +73,23 @@ def read_file_stream(spark: SparkSession, input_path: str,
     return reader.parquet(input_path)
 
 
-def _start_parquet_sink(results: DataFrame, output_path: str,
-                        checkpoint_path: str, available_now: bool):
-    """Shared writeStream plumbing: append-mode parquet sink with a
-    checkpoint. `available_now=True` drains existing files and stops (the
-    batch-parity mode used by tests and backfills); False runs
+def stream_to_parquet(spark: SparkSession, op: Callable[[DataFrame], DataFrame],
+                      input_path: str, output_path: str, checkpoint_path: str,
+                      schema: T.StructType | None = None,
+                      available_now: bool = True,
+                      max_files_per_trigger: int | None = None):
+    """read_file_stream -> `op` -> append-mode parquet sink with a
+    checkpoint; returns the StreamingQuery.
+
+    Any stateless frame -> frame operator runs here unchanged (sitemap and
+    feed entries, page metadata, anchors, markdown, quality signals, the
+    extraction kernel): with no cross-row state, micro-batch boundaries
+    cannot change its rows. `schema` and `max_files_per_trigger` go to
+    read_file_stream. `available_now=True` drains existing files and stops
+    (the batch-parity mode used by tests and backfills); False runs
     continuously."""
+    results = op(read_file_stream(spark, input_path, schema,
+                                  max_files_per_trigger))
     writer = (
         results.writeStream.format("parquet")
         .option("path", output_path)
@@ -100,112 +112,10 @@ def stream_extract(
 ):
     """Run the extraction kernel as a stream; returns the StreamingQuery.
     Triggers admit one task wave of input bytes each (read_file_stream)."""
-    pages = read_file_stream(spark, input_path, PAGES_SCHEMA, max_files_per_trigger)
-    results = extract_pages(pages, cfg, row_idx_col=None)
-    return _start_parquet_sink(results, output_path, checkpoint_path,
-                               available_now)
-
-
-# --- discovery-layer streaming twins (r6, VERDICT r5 Next #7) ----------------
-#
-# sitemap/feed/anchor/page-metadata extraction are stateless single
-# mapInArrow passes (no shuffle, no cross-row state), so their streaming
-# twins share the batch kernels VERBATIM — the twin is the readStream
-# front door + checkpointed sink, and micro-batch boundaries cannot change
-# results (pinned by batch/stream equality tests at maxFilesPerTrigger=1,
-# mirroring stream_frontier_new's test).
-
-# fetched sitemap/feed documents: the shape a crawl loop lands
-# robots-discovered artifacts in
-XML_DOCS_SCHEMA = T.StructType([
-    T.StructField("url", T.StringType()),
-    T.StructField("xml", T.BinaryType()),
-])
-
-
-def stream_sitemap_entries(spark: SparkSession, input_path: str,
-                           output_path: str, checkpoint_path: str,
-                           available_now: bool = True,
-                           max_files_per_trigger: int | None = None):
-    """Streaming twin of operators.sitemap.sitemap_entries."""
-    from ..operators.sitemap import sitemap_entries
-
-    docs = read_file_stream(spark, input_path, XML_DOCS_SCHEMA,
-                            max_files_per_trigger)
-    return _start_parquet_sink(sitemap_entries(docs), output_path,
-                               checkpoint_path, available_now)
-
-
-def stream_feed_entries(spark: SparkSession, input_path: str,
-                        output_path: str, checkpoint_path: str,
-                        available_now: bool = True,
-                        max_files_per_trigger: int | None = None):
-    """Streaming twin of operators.sitemap.feed_entries."""
-    from ..operators.sitemap import feed_entries
-
-    docs = read_file_stream(spark, input_path, XML_DOCS_SCHEMA,
-                            max_files_per_trigger)
-    return _start_parquet_sink(feed_entries(docs), output_path,
-                               checkpoint_path, available_now)
-
-
-def stream_page_metadata(spark: SparkSession, input_path: str,
-                         output_path: str, checkpoint_path: str,
-                         available_now: bool = True,
-                         max_files_per_trigger: int | None = None):
-    """Streaming twin of operators.metadata.page_metadata over the pages
-    schema."""
-    from ..operators.metadata import page_metadata
-
-    pages = read_file_stream(spark, input_path, PAGES_SCHEMA,
-                             max_files_per_trigger)
-    return _start_parquet_sink(page_metadata(pages), output_path,
-                               checkpoint_path, available_now)
-
-
-def stream_anchor_texts(spark: SparkSession, input_path: str,
-                        output_path: str, checkpoint_path: str,
-                        available_now: bool = True,
-                        max_files_per_trigger: int | None = None):
-    """Streaming twin of operators.metadata.anchor_texts over the pages
-    schema."""
-    from ..operators.metadata import anchor_texts
-
-    pages = read_file_stream(spark, input_path, PAGES_SCHEMA,
-                             max_files_per_trigger)
-    return _start_parquet_sink(anchor_texts(pages), output_path,
-                               checkpoint_path, available_now)
-
-
-def stream_markdown_pages(spark: SparkSession, input_path: str,
-                          output_path: str, checkpoint_path: str,
-                          available_now: bool = True,
-                          max_files_per_trigger: int | None = None):
-    """Streaming twin of operators.markdown.to_markdown_pages: the
-    converter is a pure per-row function run through map_rows (one
-    stateless mapInArrow pass), so it runs unchanged under readStream."""
-    from ..operators.markdown import to_markdown_pages
-
-    pages = read_file_stream(spark, input_path,
-                             max_files_per_trigger=max_files_per_trigger)
-    return _start_parquet_sink(to_markdown_pages(pages), output_path,
-                               checkpoint_path, available_now)
-
-
-def stream_quality_signals(spark: SparkSession, input_path: str,
-                           output_path: str, checkpoint_path: str,
-                           id_col: str = "doc_id", text_col: str = "text",
-                           available_now: bool = True,
-                           max_files_per_trigger: int | None = None):
-    """Streaming twin of text_analysis.quality_signals: a stateless
-    scan-stage Project, so the one-pass tagger also runs incrementally —
-    signals land beside the corpus as documents arrive."""
-    from ..operators.text_analysis import quality_signals
-
-    docs = read_file_stream(spark, input_path,
-                            max_files_per_trigger=max_files_per_trigger)
-    return _start_parquet_sink(quality_signals(docs, id_col, text_col),
-                               output_path, checkpoint_path, available_now)
+    return stream_to_parquet(
+        spark, lambda pages: extract_pages(pages, cfg, row_idx_col=None),
+        input_path, output_path, checkpoint_path, PAGES_SCHEMA,
+        available_now, max_files_per_trigger)
 
 
 # --- ST2 as real streaming state ---------------------------------------------

@@ -336,27 +336,46 @@ def test_pathological_pages_stay_linear():
 
 def test_kernel_matches_local_function_on_random_soup(spark):
     """The distributed mapInArrow kernel must equal the plain-Python
-    extract_page on arbitrary byte soup — any drift in the Arrow
-    serialization of nested results (spans/engines/fuel) shows up here."""
+    extract_page field for field on arbitrary byte soup, the golden pages
+    (with their row_idx, so activation windows apply) and a null page —
+    any drift in the Arrow serialization of nested results (time, spans,
+    engines, fuel) shows up here."""
     import random
 
-    from space_launch_telemetry_analyzer_spark.operators.extract import extract_pages
+    from space_launch_telemetry_analyzer_spark.operators.extract import url_bucket
 
     rng = random.Random(20260816)
     alphabet = '<>/ab c="\'p1!-&;\n\t\x00é€'
     rows = []
     for i in range(300):
         soup = "".join(rng.choice(alphabet) for _ in range(rng.randint(0, 400)))
-        rows.append((f"u{i}", soup.encode("utf-8", "surrogatepass")))
-    df = spark.createDataFrame(rows, "url string, html binary")
+        rows.append((f"u{i}", soup.encode("utf-8", "surrogatepass"), None))
+    for i in (7, 42, 500):
+        with open(f"{GOLDEN_DIR}/page_{i}.html", "rb") as f:
+            rows.append((f"golden{i}", f.read(), i))
+    rows.append(("null", None, None))
+    df = spark.createDataFrame(rows, "url string, html binary, row_idx long")
     got = {r.url: r.asDict(recursive=True) for r in extract_pages(df).collect()}
-    for url, html in rows:
-        want = extract_page(html, CFG, None)
+    buckets = dict(df.select("url", url_bucket(F.col("url"), 256)).collect())
+    assert len(got) == len(rows)
+    for url, html, idx in rows:
+        want = extract_page(html, CFG, idx)
         g = got[url]
-        assert g["extracted_text"] == want["extracted_text"], url
-        assert g["error"] == want["error"], url
-        assert (g["speed"], g["altitude"]) == (want["speed"], want["altitude"]), url
-        assert len(g["spans"]) == len(want["spans"]), url
+        for k, v in want.items():
+            assert g[k] == v, (url, k)
+        assert g["input_bytes"] == (len(html) if html is not None else 0), url
+        assert g["bucket"] == buckets[url], url
+    assert got["null"]["error"] == "null html"
+    assert got["golden42"]["engines"] and got["golden42"]["time"]
+
+
+def test_extract_pages_schema_is_the_one_declaration(spark):
+    """extract_pages' output schema is schema.EXTRACTION_SCHEMA exactly,
+    names, order, types and nullability included."""
+    from space_launch_telemetry_analyzer_spark.schema import EXTRACTION_SCHEMA
+
+    df = spark.createDataFrame([("u", b"<p>x</p>")], "url string, html binary")
+    assert extract_pages(df).schema.json() == EXTRACTION_SCHEMA.json()
 
 
 def test_unclosed_anchor_does_not_poison_rest_of_page(spark):

@@ -58,3 +58,13 @@ def test_mapinpandas_only_where_allowed():
     assert used <= allowed, f"mapInPandas outside {sorted(allowed)}: {sorted(used - allowed)}"
     mm = (PKG / "operators/multimodal.py").read_text(encoding="utf-8")
     assert mm.count("mapInPandas(") == 1, "multimodal: only sample_frames may use mapInPandas"
+
+
+def test_no_hand_built_nested_arrow_arrays():
+    """Nested Arrow columns are built by pa.array(values, type) from a
+    declared schema; hand assembly from offsets and masks is not cheaper
+    (BENCH.md #64) and duplicates the type."""
+    pat = re.compile(r"\b(?:StructArray|ListArray|MapArray)\.from_arrays\(")
+    bad = [p.relative_to(PKG).as_posix() for p in _sources()
+           if pat.search(p.read_text(encoding="utf-8"))]
+    assert bad == [], f"hand-built nested Arrow arrays: {bad}"

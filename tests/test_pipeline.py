@@ -503,3 +503,17 @@ def test_iceberg_create_tables_ddl_shapes(spark):
 
     # parquet branch: layout is the directory scheme -> no DDL
     assert ResultStore("/tmp/nowhere").create_tables(FakeSpark()) == []
+
+
+def test_results_table_columns_are_the_extraction_output_plus_run_id():
+    """The results table's columns come from schema.EXTRACTION_SCHEMA (the
+    one declaration of the kernel's output) plus run_id, and nothing else."""
+    from space_launch_telemetry_analyzer_spark.schema import EXTRACTION_SCHEMA
+
+    class FakeSpark:
+        def sql(self, s):
+            pass
+
+    results = ResultStore("warehouse.cc", use_iceberg=True).create_tables(FakeSpark())[0]
+    cols = [f"{f.name} {f.dataType.simpleString()}" for f in EXTRACTION_SCHEMA.fields]
+    assert f"results ({', '.join(cols + ['run_id string'])}) USING iceberg" in results

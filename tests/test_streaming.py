@@ -372,16 +372,15 @@ def _sorted_rows(df):
 
 
 def test_stream_sitemap_and_feed_match_batch(spark, tmp_path):
-    """Discovery-layer streaming twins (r6): the batch kernels run
-    unchanged under readStream; maxFilesPerTrigger=1 forces one
+    """Discovery-layer streaming (r6): the batch kernels run unchanged
+    under readStream through stream_to_parquet; maxFilesPerTrigger=1 forces one
     micro-batch per file so the equality crosses batch boundaries."""
     from space_launch_telemetry_analyzer_spark.operators.sitemap import (
         feed_entries,
         sitemap_entries,
     )
     from space_launch_telemetry_analyzer_spark.streaming.stream import (
-        stream_feed_entries,
-        stream_sitemap_entries,
+        stream_to_parquet,
     )
 
     sm = (b"<urlset><url><loc>https://e/1</loc><priority>0.5</priority>"
@@ -401,12 +400,11 @@ def test_stream_sitemap_and_feed_match_batch(spark, tmp_path):
     # one row per file -> one micro-batch per row
     docs.repartition(6).write.parquet(in_path)
 
-    for twin, batch_op, name in (
-            (stream_sitemap_entries, sitemap_entries, "sm"),
-            (stream_feed_entries, feed_entries, "fd")):
+    for batch_op, name in ((sitemap_entries, "sm"), (feed_entries, "fd")):
         out = str(tmp_path / f"out_{name}")
         cp = str(tmp_path / f"cp_{name}")
-        _drain(twin(spark, in_path, out, cp, max_files_per_trigger=1))
+        _drain(stream_to_parquet(spark, batch_op, in_path, out, cp,
+                                 max_files_per_trigger=1))
         got = spark.read.parquet(out)
         want = batch_op(spark.read.parquet(in_path))
         assert _sorted_rows(got) == _sorted_rows(want)
@@ -419,20 +417,18 @@ def test_stream_page_metadata_and_anchors_match_batch(spark, tmp_path):
         page_metadata,
     )
     from space_launch_telemetry_analyzer_spark.streaming.stream import (
-        stream_anchor_texts,
-        stream_page_metadata,
+        stream_to_parquet,
     )
 
     in_path = str(tmp_path / "pages")
     synth_pages_df(spark, 60, partitions=3).select(
         "url", "warc_ts", "html", "text", "lang").write.parquet(in_path)
 
-    for twin, batch_op, name in (
-            (stream_page_metadata, page_metadata, "meta"),
-            (stream_anchor_texts, anchor_texts, "anchors")):
+    for batch_op, name in ((page_metadata, "meta"), (anchor_texts, "anchors")):
         out = str(tmp_path / f"out_{name}")
         cp = str(tmp_path / f"cp_{name}")
-        _drain(twin(spark, in_path, out, cp, max_files_per_trigger=1))
+        _drain(stream_to_parquet(spark, batch_op, in_path, out, cp,
+                                 PAGES_SCHEMA, max_files_per_trigger=1))
         got = spark.read.parquet(out)
         want = batch_op(spark.read.parquet(in_path))
         assert _sorted_rows(got) == _sorted_rows(want)
@@ -440,8 +436,8 @@ def test_stream_page_metadata_and_anchors_match_batch(spark, tmp_path):
 
 
 def test_stream_markdown_and_signals_match_batch(spark, tmp_path):
-    """Late-r6 stateless twins: the markdown converter kernel and the
-    one-pass quality-signal Project run unchanged under readStream;
+    """The markdown converter kernel and the one-pass quality-signal
+    Project run unchanged under readStream through stream_to_parquet;
     maxFilesPerTrigger=1 crosses micro-batch boundaries."""
     from space_launch_telemetry_analyzer_spark.operators.markdown import (
         to_markdown_pages,
@@ -450,8 +446,7 @@ def test_stream_markdown_and_signals_match_batch(spark, tmp_path):
         quality_signals,
     )
     from space_launch_telemetry_analyzer_spark.streaming.stream import (
-        stream_markdown_pages,
-        stream_quality_signals,
+        stream_to_parquet,
     )
 
     pages_path = str(tmp_path / "mdpages")
@@ -463,9 +458,9 @@ def test_stream_markdown_and_signals_match_batch(spark, tmp_path):
         "url string, html binary",
     ).repartition(4).write.parquet(pages_path)
     out = str(tmp_path / "md_out")
-    _drain(stream_markdown_pages(spark, pages_path, out,
-                                 str(tmp_path / "md_cp"),
-                                 max_files_per_trigger=1))
+    _drain(stream_to_parquet(spark, to_markdown_pages, pages_path, out,
+                             str(tmp_path / "md_cp"),
+                             max_files_per_trigger=1))
     got = spark.read.parquet(out)
     want = to_markdown_pages(spark.read.parquet(pages_path))
     assert _sorted_rows(got) == _sorted_rows(want)
@@ -478,9 +473,10 @@ def test_stream_markdown_and_signals_match_batch(spark, tmp_path):
         "doc_id long, text string",
     ).repartition(4).write.parquet(docs_path)
     out2 = str(tmp_path / "sig_out")
-    _drain(stream_quality_signals(spark, docs_path, out2,
-                                  str(tmp_path / "sig_cp"),
-                                  max_files_per_trigger=1))
+    _drain(stream_to_parquet(spark,
+                             lambda d: quality_signals(d, "doc_id", "text"),
+                             docs_path, out2, str(tmp_path / "sig_cp"),
+                             max_files_per_trigger=1))
     got2 = spark.read.parquet(out2)
     want2 = quality_signals(spark.read.parquet(docs_path), "doc_id", "text")
     assert _sorted_rows(got2) == _sorted_rows(want2)

@@ -50,6 +50,16 @@ def test_dimensions_probe():
         W.webp_dimensions(b"nope")
 
 
+def test_truncated_chunk_rejected_by_probe_and_decoder():
+    """A chunk whose body is cut short (RIFF length consistent with the
+    cut) fails the same way in the dimensions probe as in the decoder."""
+    cut = W.encode_webp(np.zeros((21, 34), dtype=np.uint8))[:-7]
+    cut = cut[:4] + struct.pack("<I", len(cut) - 8) + cut[8:]
+    for fn in (W.webp_dimensions, W.decode_webp):
+        with pytest.raises(ValueError, match="truncated WebP chunk"):
+            fn(cut)
+
+
 def test_lossy_vp8_decodes_through_container():
     """The lossy half is real since r5 (operators/vp8.py): decode_webp
     routes 'VP8 ' chunks through the RFC 6386 keyframe decoder and emits
